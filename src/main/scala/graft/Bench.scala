@@ -419,14 +419,44 @@ object Bench {
       val stream = java.nio.file.Files.lines(
         java.nio.file.Paths.get("/proc/stat"))
       val first = try stream.findFirst().orElse("") finally stream.close()
-      val cols = first.split("\\s+")
-      if (cols.length < 9 || cols(0) != "cpu") None
-      else {
-        val vals = cols.drop(1).flatMap(v =>
-          scala.util.Try(v.toLong).toOption)
-        Some((vals(7), vals.sum)) // steal is field 8 (0-based 7)
-      }
+      stealOf(first)
     } catch { case _: Throwable => None }
+
+  /** (steal, total) ticks of /proc/stat's aggregate `cpu` line. The
+    * total is user..steal (the first 8 fields): the kernel already counts
+    * guest and guest_nice inside user and nice, so adding them again
+    * would understate steal on a host that runs nested guests.
+    */
+  private[graft] def stealOf(cpuLine: String): Option[(Long, Long)] = {
+    val cols = cpuLine.trim.split("\\s+")
+    if (cols.length < 9 || cols(0) != "cpu") None
+    else {
+      val vals = cols.drop(1).flatMap(v => scala.util.Try(v.toLong).toOption)
+      if (vals.length < 8) None
+      else Some((vals(7), vals.take(8).sum)) // steal is field 8 (0-based 7)
+    }
+  }
+
+  /** Per-family steal windows: [[open]] starts a window, and
+    * `close(fam)` records the steal percentage since the last open or
+    * close under `fam` and starts the next window there. A family closed
+    * before any open reads -1 (signal absent).
+    */
+  private[graft] final class StealWindows(sample: () => Option[(Long, Long)]) {
+    val pct = scala.collection.mutable.LinkedHashMap[Char, Double]()
+    private var prev: Option[(Long, Long)] = None
+    def open(): Unit = prev = sample()
+    def close(fam: Char): Unit = {
+      val now = sample()
+      pct(fam) = stealPct(prev, now)
+      prev = now
+    }
+  }
+
+  /** Two-decimal number for the contamination reasons — Locale.ROOT, so
+    * the record reads the same under any default locale.
+    */
+  private def r2(v: Double): String = "%.2f".formatLocal(Locale.ROOT, v)
 
   private[graft] def stealPct(a: Option[(Long, Long)],
                               b: Option[(Long, Long)]): Double =
@@ -470,15 +500,15 @@ object Bench {
     // stretch to reject.
     val midFlags = loadavgByFamily.flatMap { case (fam, s) =>
       load1Of(s).filter(_ / nCpu >= 0.5).map(l =>
-        f"loadavg_family_$fam $l%.2f / $nCpu cpus = ${l / nCpu}%.2f >= 0.5")
+        s"loadavg_family_$fam ${r2(l)} / $nCpu cpus = ${r2(l / nCpu)} >= 0.5")
     }
     Seq(
       if (canaryRatio >= 2.5)
-        Some(f"canary_ratio $canaryRatio%.2f >= 2.5") else None,
+        Some(s"canary_ratio ${r2(canaryRatio)} >= 2.5") else None,
       if (canaryFamilyMax >= 2.5)
-        Some(f"canary_family_max $canaryFamilyMax%.2f >= 2.5") else None,
+        Some(s"canary_family_max ${r2(canaryFamilyMax)} >= 2.5") else None,
       load1.filter(_ / nCpu >= 0.5).map(l =>
-        f"loadavg_start $l%.2f / $nCpu cpus = ${l / nCpu}%.2f >= 0.5"),
+        s"loadavg_start ${r2(l)} / $nCpu cpus = ${r2(l / nCpu)} >= 0.5"),
     ).flatten ++ midFlags
   }
 
@@ -622,15 +652,13 @@ object Bench {
     // the contamination verdict
     val famLoad = scala.collection.mutable.LinkedHashMap[Char, String]()
     // per-family hypervisor-steal percentage (see [[stealTicks]]): the
-    // window opens at the previous family's close
-    val famSteal = scala.collection.mutable.LinkedHashMap[Char, Double]()
-    var stealPrev = stealTicks()
+    // window opens at the previous family's close (the first one after
+    // the canary baseline below)
+    val famSteal = new StealWindows(() => stealTicks())
     def familyLoad(fam: Char): Unit =
       if (fam != ' ') {
         famLoad(fam) = loadavg()
-        val now = stealTicks()
-        famSteal(fam) = stealPct(stealPrev, now)
-        stealPrev = now
+        famSteal.close(fam)
       }
     // per-family PIN STORAGE snapshot (round 21, r20 verdict item 6):
     // peakExecutionMemory prices task buffers, not cached blocks — the
@@ -654,6 +682,9 @@ object Bench {
           timeQuery("p12_upper", SparkEntry.queries("p12_upper"), 2)
         if (ok) sec else -1.0
       } else -1.0
+    // the first family's steal window opens at its start, not before the
+    // baseline canary run
+    famSteal.open()
     def familyCanary(fam: Char): Unit =
       if (fam != ' ' && only.isEmpty && canaryBase > 0) {
         val (sec, ok, _) =
@@ -781,7 +812,7 @@ object Bench {
     val famPinsJson = famPins.map { case (f, (m, d, mx, n)) =>
       "\"" + f + s"""":{"mem":$m,"disk":$d,"max_rdd":$mx,"n_rdds":$n}"""
     }.mkString("{", ",", "}")
-    val famStealJson = famSteal.map { case (f, p) =>
+    val famStealJson = famSteal.pct.map { case (f, p) =>
       "\"" + f + "\":" + f3(p)
     }.mkString("{", ",", "}")
     val famCanaryMax =

@@ -1,6 +1,6 @@
 package graft.core
 
-import graft.functions.{HashedShinglesExpr, JavaStringHashCode, MinHashBandsExpr, RepetitionStatsExpr, SimHashExpr}
+import graft.functions.{CharTrigramScoresExpr, HashedShinglesExpr, JavaStringHashCode, MinHashBandsExpr, MinHashSigExpr, RepetitionStatsExpr, SimHashExpr}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
@@ -22,6 +22,12 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
   *   - `minhash_bands(str, n, numPerm, bandSize)` — MinHash LSH band
   *     keys (P = 2^31−1 permutation family), the streaming near-dup
   *     blocking primitive;
+  *   - `minhash_sig(shingles)` — rowwise MinHash signature of a shingle
+  *     `array<long>` (the dedup family's 16 permutations, the same loop
+  *     as `minhash_bands`);
+  *   - `char_trigram_scores(str)` — (en, de, fr) struct counting the
+  *     text's character trigrams found in each language profile (the x5
+  *     language-ID primitive);
   *   - `cosine_f32(a, b)` — fused cosine similarity over float arrays
   *     (one JIT'd loop; the kNN scoring primitive);
   *   - `poly_fp_windows(str, w)` — every w-token sliding-window
@@ -71,6 +77,16 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         case _ => throw new IllegalArgumentException(
           "usage: minhash_bands(text, <int n>, <int numPerm>, <int bandSize>)")
       }))
+    ext.injectFunction((
+      FunctionIdentifier("minhash_sig"),
+      new ExpressionInfo(classOf[MinHashSigExpr].getName, "minhash_sig"),
+      (children: Seq[Expression]) => MinHashSigExpr(children.head,
+        graft.queries.Dedup.NumPerm, graft.queries.Dedup.P)))
+    ext.injectFunction((
+      FunctionIdentifier("char_trigram_scores"),
+      new ExpressionInfo(classOf[CharTrigramScoresExpr].getName,
+        "char_trigram_scores"),
+      (children: Seq[Expression]) => CharTrigramScoresExpr(children.head)))
     ext.injectFunction((
       FunctionIdentifier("cosine_f32"),
       new ExpressionInfo(classOf[graft.functions.CosineSimExpr].getName,

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.core.Tables
-import graft.functions.{HashFunctions, HashedShinglesExpr, TextFunctions}
+import graft.functions.{HashFunctions, HashedShinglesExpr, MinHashSigExpr, TextFunctions}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
@@ -35,21 +35,14 @@ object Dedup extends QueryModule {
         HashedShinglesExpr.hashedShingles($"text", 3).as("arr"))
   }
 
-  /** Exploded (doc_id, shingle: long) rows. */
-  private def shingled(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    shingleArr(s, dir).select($"doc_id", explode($"arr").as("shingle"))
-  }
-
   /** ROWWISE MinHash band keys — the same NumPerm/BandSize signature as
-    * [[minhashSigsOf]]/[[lshBandPairs]] (identical permutation
-    * constants, so a row's keys equal the batch path's bit-for-bit) but
-    * computed per row with no groupBy: `array_min` over the fused
-    * shingle array replaces the per-doc min-aggregate. This is what a
-    * STREAMING near-dup filter needs — band keys must exist before the
-    * first stateful operator. Keys are prefixed with the band index
-    * (`"idx|k1,k2,.."`), matching lshBandPairs' (band_idx, band_key)
-    * equality. Empty-shingle docs (< width tokens) get an empty array.
+    * [[minhashSig]]/[[lshBandPairs]] (the same permutation loop, so a
+    * row's keys equal the batch path's bit-for-bit) computed straight
+    * from the text. This is what a STREAMING near-dup filter needs —
+    * band keys must exist before the first stateful operator. Keys are
+    * prefixed with the band index (`"idx|k1,k2,.."`): two rows share a
+    * key iff lshBandPairs would block them on that band. Empty-shingle
+    * docs (< width tokens) get an empty array.
     */
   private[graft] def rowwiseBandKeys(text: Column): Column =
     graft.functions.MinHashBandsExpr.minhashBands(
@@ -127,12 +120,23 @@ object Dedup extends QueryModule {
     */
   private def pairAgg(sh: DataFrame) = {
     val item = struct(sh.columns.filter(_ != "shingle").map(col).toSeq: _*)
-    sh.groupBy(col("shingle")).agg(collect_list(item).as("docs"))
-      .select(explode(col("docs")).as("a"), col("docs"))
+    blockPairs(sh.groupBy(col("shingle")).agg(collect_list(item).as("docs")))
+  }
+
+  /** The emission half of [[pairAgg]], shared with [[lshBandPairs]]:
+    * every same-block pair (a.doc_id < b.doc_id) of a
+    * (docs: array<struct<doc_id, …>>) block frame, by a codegen'd
+    * double-`explode`, grouped by (doc_i, doc_j). Each `carry` field of
+    * the structs must be a function of doc_id: it joins the group key as
+    * `<c>_i`/`<c>_j`, so it rides the pair rows without a join back.
+    */
+  private def blockPairs(blocks: DataFrame, carry: Seq[String] = Nil) =
+    blocks.select(explode(col("docs")).as("a"), col("docs"))
       .select(col("a"), explode(col("docs")).as("b"))
       .where(col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_i"), col("b.doc_id").as("doc_j"))
-  }
+      .groupBy(col("a.doc_id").as("doc_i") +: col("b.doc_id").as("doc_j") +:
+        carry.flatMap(c =>
+          Seq(col(s"a.$c").as(s"${c}_i"), col(s"b.$c").as(s"${c}_j"))): _*)
 
   /** IDENTICAL-CONTENT PRE-COLLAPSE (round-15 verdict item 2 — d4's
     * distinct-hash pattern applied to the whole MinHash family): one row
@@ -465,33 +469,7 @@ object Dedup extends QueryModule {
     docs.join(keep.select(col("doc_id")), Seq("doc_id"), "left_semi")
   }
 
-  /** Loose pins: per-query persisted helper frames with no named cache
-    * of their own (d20's band-pair frame). Registered here so
-    * [[evictCaches]] releases their blocks — the CacheManager holds a
-    * strong reference to a persisted plan, so an unregistered persist
-    * leaks its blocks until session stop in a long-lived multi-tenant
-    * session (round-14 ADVICE; the old eager localCheckpoint's blocks
-    * were at least ContextCleaner-reclaimed on RDD GC).
-    */
-  private val loosePins =
-    new java.util.concurrent.ConcurrentLinkedQueue[(SparkSession, DataFrame)]()
-
-  private def loosePin(df: DataFrame): DataFrame = {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    loosePins.add((df.sparkSession, p))
-    p
-  }
-
   def evictCaches(session: SparkSession, dir: Option[String] = None): Unit = {
-    val lp = loosePins.iterator()
-    while (lp.hasNext) {
-      val (s, df) = lp.next()
-      if (s eq session) {
-        try df.unpersist(blocking = false)
-        catch { case _: Throwable => () }
-        lp.remove()
-      }
-    }
     def drop[K](m: java.util.concurrent.ConcurrentHashMap[K, DataFrame],
                 sessionOf: K => SparkSession, dirOf: K => String): Unit = {
       val it = m.entrySet().iterator()
@@ -601,13 +579,12 @@ object Dedup extends QueryModule {
     lshCandsCache.computeIfAbsent((s, dir), { key =>
       val (sess, d) = key
       import sess.implicits._
-      val reps = sharedContentGroups(sess, d)
-        .select($"ids".getItem(0).as("doc_id"), $"arr", $"ids")
-      val sigs = minhashSigsOf(
-        reps.select($"doc_id", explode($"arr").as("shingle")))
-      lshBandPairs(sigs) // distinct-content input: returns rep pairs
-        .join(reps.select($"doc_id".as("doc_i"), $"ids".as("ids_i")), "doc_i")
-        .join(reps.select($"doc_id".as("doc_j"), $"ids".as("ids_j")), "doc_j")
+      // signatures rowwise off the pinned arr (no explode, no doc_id
+      // shuffle); the ids ride the band lists into the pair rows, so the
+      // build's only exchanges are the band and pair-dedupe ones
+      lshBandPairs(sharedContentGroups(sess, d)
+          .select($"ids".getItem(0).as("doc_id"), $"ids",
+            minhashSig($"arr").as("sig")))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     })
 
@@ -615,9 +592,9 @@ object Dedup extends QueryModule {
     * membership expansion of the pinned rep candidate frame plus the
     * within-content-group pairs (identical content ⇒ identical
     * signature ⇒ band agreement on every band). Value-identical to
-    * `lshBandPairs(minhashSigs(corpus))` (differential spec + d3's
-    * oracle); the expensive half (signatures + band join) runs once per
-    * session via the pin, and each use pays only the expansion.
+    * `lshBandPairs` over every document's signature (differential spec +
+    * d3's oracle); the expensive half (signatures + band exchange) runs
+    * once per session via the pin, and each use pays only the expansion.
     */
   private[graft] def lshCandDocPairs(s: SparkSession, dir: String): DataFrame = {
     val rep = lshRepCandPairs(s, dir)
@@ -705,10 +682,12 @@ object Dedup extends QueryModule {
 
     // D3a: MinHash signatures — NumPerm universal-hash permutations over
     // the shingle set, min per permutation; banded into 4 LSH band keys.
-    // One shuffle (groupBy doc_id); signature fold is map-side combined.
+    // Rowwise (MinHashSigExpr over the fused shingle array): no shuffle.
+    // Docs with no shingle (< 3 tokens) have no signature and no row.
     "d3_minhash_sig" -> { (s, dir) =>
       import s.implicits._
-      minhashSigs(s, dir)
+      shingleArr(s, dir).filter(size($"arr") > 0)
+        .select($"doc_id", minhashSig($"arr").as("sig"))
         .select($"doc_id" +:
           array_join(transform($"sig", x => x.cast("string")), ",").as("sig") +:
           (0 until NumPerm / BandSize).map(b =>
@@ -717,8 +696,8 @@ object Dedup extends QueryModule {
     },
 
     // D3b: LSH candidate pairs — docs agreeing on at least one full band.
-    // The join is keyed on (band index, band value): shuffle ∝ distinct
-    // content, never O(n²) — and the band join itself is the session
+    // The exchange is keyed on (band index, band value): shuffle ∝
+    // distinct content, never O(n²) — and the band pairs are the session
     // pin, so repeated family consumers pay only membership expansion
     // (round-16 verdict item 2: this query was re-deriving the build
     // after the rep rewrite; r15's 0.3 s warm time is restored by
@@ -735,11 +714,10 @@ object Dedup extends QueryModule {
     // boilerplate family dominates" signal. Each iteration is one
     // edges⋈deg⋈pr join + one dst-keyed aggregate — shuffle ∝ edges
     // with map-side combine, the standard distributed-PR shape (no
-    // driver-side graph). Edges persist once (round 14: persist, not
-    // localCheckpoint — lineage survives block loss, and the cache
-    // manager dedupes the identical plan across evaluations): both
-    // iterations and deg reuse the materialized pair set instead of
-    // re-running the minhash pipeline per reference. Dangling docs (no near-dup
+    // driver-side graph). The edges are the doc-level expansion of the
+    // session's LSH candidate pin, re-derived per reference (deg and both
+    // iterations): the expansion is cheap, and the minhash/band work runs
+    // once, in the pin build. Dangling docs (no near-dup
     // partner) hold the (1-d)/N floor — mass from dangling nodes is
     // NOT redistributed (documented simplified variant; both engines
     // apply the same rule). Parity: per-contribution round-9 +
@@ -748,8 +726,8 @@ object Dedup extends QueryModule {
       import s.implicits._
       val docs = Tables.documents(s, dir).select($"doc_id")
       // the candidate pairs come from the session pin (the expensive
-      // band join runs once for the whole family); the cheap doc-level
-      // expansion recomputes per reference — no loosePin needed
+      // band exchange runs once for the whole family); the cheap
+      // doc-level expansion recomputes per reference
       val pairs = lshCandDocPairs(s, dir)
       val edges = pairs.select($"doc_i".as("src"), $"doc_j".as("dst"))
         .union(pairs.select($"doc_j".as("src"), $"doc_i".as("dst")))
@@ -1160,19 +1138,16 @@ object Dedup extends QueryModule {
     "d11_lsh_verify" -> { (s, dir) =>
       import s.implicits._
       val reps = sharedContentGroups(s, dir)
-        .select($"ids".getItem(0).as("doc_id"), $"arr", $"ids")
-      val sigs = minhashSigsOf(
-        reps.select($"doc_id", explode($"arr").as("shingle")))
+        .select($"ids".getItem(0).as("doc_id"), $"arr")
       // candidates come from the session pin (ids_i/ids_j already ride
-      // the pinned rows); only the sig/arr scoring joins run per use
+      // the pinned rows); only the two arr joins run per use, and the
+      // signatures are recomputed rowwise for the candidate rows alone
       val cands = lshRepCandPairs(s, dir)
       val scored = cands
-        .join(sigs.select($"doc_id".as("doc_i"), $"sig".as("sig_i")), "doc_i")
-        .join(sigs.select($"doc_id".as("doc_j"), $"sig".as("sig_j")), "doc_j")
         .join(reps.select($"doc_id".as("doc_i"), $"arr".as("arr_i")), "doc_i")
         .join(reps.select($"doc_id".as("doc_j"), $"arr".as("arr_j")), "doc_j")
         .select($"ids_i", $"ids_j",
-          (aggregate(zip_with($"sig_i", $"sig_j",
+          (aggregate(zip_with(minhashSig($"arr_i"), minhashSig($"arr_j"),
               (x, y) => when(x === y, 1).otherwise(0)),
             lit(0), (a, x) => a + x).cast("double") / NumPerm)
             .as("jaccard_est"),
@@ -1361,7 +1336,7 @@ object Dedup extends QueryModule {
     // that decides NumPerm/BandSize before a production dedup run:
     // recall too low → dups survive; band volume too high → candidate
     // explosion. Both inputs are pair-sized frames the session already
-    // derives (the pinned shared pair frame + the band self-join), so
+    // derives (the pinned shared pair frame + the LSH candidate pin), so
     // the measurement adds one pair-keyed join + a 1-row agg.
     "d14_lsh_recall" -> { (s, dir) =>
       import s.implicits._
@@ -2042,97 +2017,65 @@ object Dedup extends QueryModule {
     intra.unionAll(inter)
   }
 
-  /** doc_id, sig: array<long> of NumPerm minhash values, from exploded
-    * (doc_id, shingle: long) rows. The shingle column already IS the u32
-    * hash, so the permutation aggregates are pure long arithmetic — no
-    * string ever reaches the agg. Package-visible for the differential
-    * spec.
+  /** The dedup family's MinHash signature (NumPerm permutations, P) of
+    * a shingle-array column — rowwise, codegen'd ([[MinHashSigExpr]]).
     */
-  private[graft] def minhashSigsOf(shingleRows: DataFrame): DataFrame = {
-    val perms = (0 until NumPerm).map { j =>
-      min(pmod(col("shingle") * lit(2L * j + 1) + lit(12345L * j + 1), lit(P)))
-        .as(s"m$j")
-    }
-    shingleRows
-      .groupBy(col("doc_id"))
-      .agg(perms.head, perms.tail: _*)
-      .select(col("doc_id"),
-        array((0 until NumPerm).map(j => col(s"m$j")): _*).as("sig"))
-  }
+  private[graft] def minhashSig(arr: Column): Column =
+    MinHashSigExpr.minhashSig(arr, NumPerm, P)
 
-  private def minhashSigs(s: SparkSession, dir: String): DataFrame =
-    minhashSigsOf(shingled(s, dir))
-
-  /** Band-blocked candidate pairs from a (doc_id, sig) frame: docs
-    * agreeing on at least one full band. Package-visible for the
-    * differential spec.
+  /** Band-blocked candidate pairs from a (doc_id, sig[, carry…]) frame:
+    * docs agreeing on at least one full band — the engine's ONE
+    * band-pair implementation (the LSH candidate pin and the
+    * differential spec's doc-level reference both run it).
     *
-    * IDENTICAL-SIGNATURE PRE-COLLAPSE (round-15 verdict item 2 — the d4
-    * pattern): identical signatures agree on every band, so docs sharing
-    * a signature collapse onto one group row, the band self-join runs
-    * over DISTINCT signatures, and membership expands back afterwards.
-    * Value-identical to the doc-level band join (differential spec + d3
-    * oracle); join cost scales with distinct signatures, not copies².
-    * A distinct-content input (one doc per signature) passes through
-    * unchanged — singleton groups, empty intra side.
+    * Shape ([[pairAgg]]'s): each band key (band_idx, its BandSize
+    * minima — a struct of longs read straight off the signature, so the
+    * Generate runs no lambda) is ONE exchange that collects its docs;
+    * a double-`explode` emits every same-band pair, and the (doc_i,
+    * doc_j) group dedupes pairs agreeing on several bands. Identical
+    * signatures share every band, so they pair with no special case.
+    * Any columns besides doc_id and sig must be functions of doc_id;
+    * they come out as `<c>_i`/`<c>_j` (the pin carries `ids` this way).
     *
-    * @param maxBandDf HOT-BAND GUARD (round-15 verdict item 6 — the
-    *   d2 `maxShingleDf` analog for the banded path): a boilerplate
-    *   band key shared by many DISTINCT contents (every page carrying
-    *   the same banner shingles into one band) makes that band block
-    *   deg² candidate pairs. With `Some(cap)`, bands whose
-    *   distinct-signature frequency exceeds the cap are dropped from
-    *   candidate generation — the standard hot-bucket skip in
-    *   production LSH dedup. The frequency is counted in
-    *   DISTINCT-SIGNATURE space: verbatim-copy mass can never trip the
-    *   cap (the signature collapse already folded it); only
-    *   cross-content boilerplate does, which is exactly the block the
-    *   cap exists to bound. Within-signature (intra) pairs are never
-    *   dropped. `None` keeps the exact candidate set
+    * @param maxBandDf HOT-BAND GUARD (the d2 `maxShingleDf` analog for
+    *   the banded path): a boilerplate band key shared by many DISTINCT
+    *   contents (every page carrying the same banner shingles into one
+    *   band) makes that band block deg² candidate pairs. With
+    *   `Some(cap)`, bands shared by more than `cap` distinct signatures
+    *   are dropped from candidate generation — the standard hot-bucket
+    *   skip in production LSH dedup. The frequency is counted in
+    *   DISTINCT-SIGNATURE space, so verbatim-copy mass can never trip
+    *   the cap; only cross-content boilerplate does, which is exactly
+    *   the block the cap exists to bound. Pairs with identical
+    *   signatures are never dropped: they come from one more exchange
+    *   keyed on the signature. `None` keeps the exact candidate set
     *   (DedupDifferentialSpec proves cap=∞ ≡ None and that a planted
     *   hot band stops pairing under the cap).
     */
   private[graft] def lshBandPairs(sigs: DataFrame,
                                   maxBandDf: Option[Long] = None): DataFrame = {
-    val groups = sigs.groupBy(col("sig"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-    val bandsAll = groups
-      .select(col("ids"), posexplode(
-        transform(sequence(lit(0), lit(NumPerm / BandSize - 1)), b =>
-          array_join(transform(
-            slice(col("sig"), b * lit(BandSize) + lit(1), lit(BandSize)),
-            x => x.cast("string")), ","))))
-      .withColumnRenamed("pos", "band_idx")
-      .withColumnRenamed("col", "band_key")
-    val bands = maxBandDf match {
-      case None => bandsAll
+    val carry = sigs.columns.toSeq.filterNot(Set("doc_id", "sig"))
+    val item = struct(("doc_id" +: carry).map(col): _*)
+    val bands = sigs.select(col("sig"), item.as("doc"),
+      explode(array((0 until NumPerm / BandSize).map { b =>
+        struct(lit(b).as("band_idx") +: (0 until BandSize).map(k =>
+          col("sig").getItem(b * BandSize + k).as(s"m$k")): _*)
+      }: _*)).as("band"))
+    def pairs(blocks: DataFrame): DataFrame =
+      blockPairs(blocks, carry).count().drop("count")
+    maxBandDf match {
+      case None =>
+        pairs(bands.groupBy(col("band"))
+          .agg(collect_list(col("doc")).as("docs")))
       case Some(cap) =>
-        val keep = bandsAll.groupBy(col("band_idx"), col("band_key"))
-          .agg(count(lit(1)).as("df")).filter(col("df") <= cap)
-          .select(col("band_idx"), col("band_key"))
-        bandsAll.join(keep, Seq("band_idx", "band_key"))
+        val cold = bands.groupBy(col("band"))
+          .agg(collect_list(col("doc")).as("docs"),
+            collect_set(col("sig")).as("sigs"))
+          .filter(size(col("sigs")) <= cap)
+        val same = sigs.groupBy(col("sig"))
+          .agg(collect_list(item).as("docs"))
+        pairs(cold).union(pairs(same)).distinct()
     }
-    // each doc carries ONE signature, so groups' ids sets are disjoint
-    // and ids[0] is a unique group discriminator — the pair ordering key
-    val groupPairs = bands.as("a")
-      .join(bands.as("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-        col("a.band_key") === col("b.band_key") &&
-        col("a.ids").getItem(0) < col("b.ids").getItem(0))
-      .select(col("a.ids").as("ids_i"), col("b.ids").as("ids_j"))
-      .distinct()
-    val inter = groupPairs
-      .select(col("ids_j"), explode(col("ids_i")).as("x"))
-      .select(col("x"), explode(col("ids_j")).as("y"))
-      .select(least(col("x"), col("y")).as("doc_i"),
-        greatest(col("x"), col("y")).as("doc_j"))
-    val intra = groups
-      .where(size(col("ids")) >= 2)
-      .select(col("ids"), posexplode(col("ids")))
-      .select(col("col").as("doc_i"),
-        explode(slice(col("ids"), col("pos") + lit(2), size(col("ids"))))
-          .as("doc_j"))
-    inter.unionAll(intra)
   }
 
   /** 32-bit SimHash of whitespace tokens (with multiplicity): bit b of

@@ -209,9 +209,11 @@ object Similarity extends QueryModule {
   /** Release the pinned assignment frames held for `session` (optionally
     * scoped to one data dir) — the `Dedup.evictCaches` contract.
     */
-  /** Loose pins (the Dedup.loosePin contract): persisted helper frames
-    * with no named cache, registered so [[evictCaches]] releases their
-    * blocks instead of leaking them to session stop (round-14 ADVICE).
+  /** Loose pins: persisted helper frames with no named cache
+    * ([[semanticDedupFrame]]'s k-means assignment, d5's block frame),
+    * registered so [[evictCaches]] releases their blocks instead of
+    * leaking them to session stop: the CacheManager holds a strong
+    * reference to every persisted plan.
     */
   private val loosePins =
     new java.util.concurrent.ConcurrentLinkedQueue[(SparkSession, DataFrame)]()

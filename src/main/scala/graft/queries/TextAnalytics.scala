@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.core.Tables
-import graft.functions.{HashFunctions, RepetitionStatsExpr, TextFunctions}
+import graft.functions.{CharTrigramScoresExpr, HashFunctions, RepetitionStatsExpr, TextFunctions}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -26,10 +26,8 @@ object TextAnalytics extends QueryModule {
   private val DsirTarget = "src0"
 
   /** Char-trigram profiles for the n-gram language-ID variant. */
-  private val charProfiles: Seq[(String, Seq[String])] = Seq(
-    "en" -> Seq("the", "ing", "and", " th", "er "),
-    "de" -> Seq("der", "ein", "sch", "und", "ich"),
-    "fr" -> Seq("les", "ent", "que", "ion", "eau"))
+  private val charProfiles: Seq[(String, Seq[String])] =
+    CharTrigramScoresExpr.Profiles
 
   private val langProfiles: Seq[(String, Seq[String])] = Seq(
     "en" -> Seq("the", "a", "and", "of", "to", "in", "is", "it"),
@@ -1149,19 +1147,17 @@ object TextAnalytics extends QueryModule {
     // (the classic n-gram-profile heuristic, rowwise, zero shuffle).
     "x5_langid_ngram" -> { (s, dir) =>
       import s.implicits._
-      // sequence(1,0) DESCENDS — guard texts shorter than 3 chars
-      val trigrams = when(length($"text") >= 3,
-        transform(sequence(lit(1), length($"text") - 2),
-          i => $"text".substr(i, lit(3))))
-        .otherwise(array().cast("array<string>"))
-      val scores = charProfiles.map { case (lang, grams) =>
-        lang -> size(filter(trigrams,
-          g => array_contains(array(grams.map(lit): _*), g)))
-      }
-      val Seq(en, de, fr) = scores.map(_._2)
+      // ONE fused trigram pass per row. The scores struct sits in its own
+      // lower Project: CollapseProject does not inline a non-cheap
+      // expression that its consumer reads more than once, so the pass
+      // is not repeated per score and per CASE branch (PlanSpec asserts)
+      val scored = Tables.documents(s, dir)
+        .select($"doc_id",
+          CharTrigramScoresExpr.charTrigramScores($"text").as("sc"))
+      val Seq(en, de, fr) = charProfiles.map { case (lang, _) => $"sc.$lang" }
       val pred = when(en >= de && en >= fr, "en")
         .when(de >= fr, "de").otherwise("fr")
-      Tables.documents(s, dir)
+      scored
         .select($"doc_id", en.cast("bigint").as("en_score"),
           de.cast("bigint").as("de_score"), fr.cast("bigint").as("fr_score"),
           pred.as("pred_lang"))

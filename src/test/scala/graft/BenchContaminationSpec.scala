@@ -91,4 +91,45 @@ class BenchContaminationSpec extends AnyFunSuite {
     assert(Bench.contaminationOf(1.0, 1.0, "1.0 1.0 1.0", 32,
       Seq('a' -> "2.0 1.0 1.0", 'd' -> "unavailable")).isEmpty)
   }
+
+  test("steal denominator is user..steal: guest time is not counted twice") {
+    // user nice system idle iowait irq softirq steal guest guest_nice:
+    // guest (300) and guest_nice (50) already sit inside user and nice
+    val line = "cpu  400 100 100 300 0 0 0 100 300 50"
+    assert(Bench.stealOf(line) == Some((100L, 1000L)))
+    assert(Bench.stealPct(Bench.stealOf("cpu  0 0 0 0 0 0 0 0 0 0"),
+      Bench.stealOf(line)) == 10.0)
+    // kernels without the guest columns parse the same way
+    assert(Bench.stealOf("cpu 400 100 100 300 0 0 0 100") ==
+      Some((100L, 1000L)))
+    assert(Bench.stealOf("cpu0 1 2 3 4 5 6 7 8 9 10").isEmpty)
+    assert(Bench.stealOf("cpu 1 2 3").isEmpty)
+  }
+
+  test("the first family's steal window opens after the canary baseline") {
+    // scripted /proc/stat samples: (steal, total) ticks
+    val samples = Iterator(Some((0L, 1000L)), Some((90L, 2000L)),
+      Some((100L, 2100L)), Some((130L, 2400L)))
+    val w = new Bench.StealWindows(() => samples.next())
+    w.close('!') // a close before any open has no window
+    assert(w.pct('!') == -1.0)
+    w.open() // after the baseline run: (90, 2000)
+    w.close('a') // (100, 2100): 10 steal over 100 ticks
+    w.close('b') // (130, 2400): the next window starts at a's close
+    assert(w.pct.toSeq == Seq('!' -> -1.0, 'a' -> 10.0, 'b' -> 10.0))
+  }
+
+  test("reasons are locale-independent") {
+    val saved = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.GERMANY)
+    try {
+      assert(f"${0.5}%.2f" == "0,50", "fixture: the default locale must " +
+        "use a decimal comma for this test to mean anything")
+      assert(Bench.contaminationOf(2.5, 3.9, "2.40 2.00 1.80", 4,
+          Seq('d' -> "3.00 1.00 1.00")) == Seq(
+        "canary_ratio 2.50 >= 2.5", "canary_family_max 3.90 >= 2.5",
+        "loadavg_start 2.40 / 4 cpus = 0.60 >= 0.5",
+        "loadavg_family_d 3.00 / 4 cpus = 0.75 >= 0.5"))
+    } finally java.util.Locale.setDefault(saved)
+  }
 }

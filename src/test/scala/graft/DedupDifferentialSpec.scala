@@ -200,9 +200,9 @@ class DedupDifferentialSpec extends SparkSpec {
         si.slice(b * BandSize, (b + 1) * BandSize) ==
           sj.slice(b * BandSize, (b + 1) * BandSize))
     } yield (i, j)).toSet
-    // the engine pipeline itself: hashed shingles -> production minhash
-    // agg -> production band join
-    val sigDf = graft.queries.Dedup.minhashSigsOf(
+    // hashed shingles -> the composed minhash agg -> the production
+    // band exchange
+    val sigDf = ComposedForms.minhashSigsOf(
       docs.toDF("doc_id", "text")
         .select($"doc_id", explode(graft.functions.HashedShinglesExpr
           .hashedShingles($"text", 3)).as("shingle")))
@@ -214,19 +214,129 @@ class DedupDifferentialSpec extends SparkSpec {
     assert(expected.nonEmpty, "degenerate corpus: no band collisions")
   }
 
+  test("minhash_sig == the composed explode + min-aggregate signature " +
+      "(fixtures, 8 partitions, both eval paths)") {
+    import spark.implicits._
+    import graft.queries.Dedup.minhashSig
+    val docs = (nearDupCorpus(15) ++
+      sample(docGen, 10).zipWithIndex.map { case (t, i) => (3000L + i, t) })
+      .toDF("doc_id", "text")
+      .union(spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+        .select($"doc_id" + 100000L, $"text"))
+    val arr = docs.select($"doc_id",
+        HashedShinglesExpr.hashedShingles($"text", 3).as("arr"))
+      .repartition(8)
+    // u32 edge values and null elements, which `min` skips
+    val edge = Seq[(Long, Seq[java.lang.Long])](
+        (-1L, Seq(0L, 4294967295L)), (-2L, Seq(null, 7L, null)),
+        (-3L, Seq(4294967295L)), (-4L, Seq(5L, 0L, 5L)))
+      .toDF("doc_id", "arr")
+    val all = arr.union(edge).repartition(8)
+    val composed = ComposedForms.minhashSigsOf(
+      all.select($"doc_id", explode($"arr").as("shingle")))
+    bothEvalPaths {
+      val fused = all.filter(size($"arr") > 0)
+        .select($"doc_id", minhashSig($"arr").as("sig"))
+      assert(fused.exceptAll(composed).isEmpty &&
+        composed.exceptAll(fused).isEmpty,
+        "rowwise signature differs from the composed aggregate")
+      assert(fused.count() == composed.count() && fused.count() > 100)
+    }
+    // an empty or null shingle array has no signature (not a null one)
+    val none = Seq[(Long, Seq[Long])]((1L, Seq.empty)).toDF("doc_id", "arr")
+      .union(Seq((2L, null: Seq[Long])).toDF("doc_id", "arr"))
+      .select(minhashSig($"arr")).as[Seq[Long]].collect()
+    assert(none.toSeq == Seq(Seq.empty, Seq.empty))
+    // SQL surface agrees with the Scala API
+    assert(Seq(Seq(0L, 9L)).toDF("a").selectExpr("minhash_sig(a)")
+      .as[Seq[Long]].head() == Seq(Seq(0L, 9L)).toDF("a")
+      .select(minhashSig($"a")).as[Seq[Long]].head())
+  }
+
+  test("band exchange: reps sharing a signature and a planted hot band " +
+      "pair exactly as brute force, memberships carried") {
+    import spark.implicits._
+    import graft.queries.Dedup.{BandSize, NumPerm, minhashSig}
+    // two DISTINCT shingle sets with one signature: 5·(2j+1) never wraps
+    // below P, so shingle 5 never beats shingle 0's minimum
+    val shared = Seq((1L, Seq(1L, 7L), Seq(0L)), (2L, Seq(2L), Seq(0L, 5L)),
+        (3L, Seq(3L), Seq(11L, 12L, 13L)))
+      .toDF("doc_id", "ids", "arr")
+      .select($"doc_id", $"ids", minhashSig($"arr").as("sig"))
+      .as[(Long, Seq[Long], Seq[Long])].collect().toSeq
+    assert(shared(0)._3 == shared(1)._3 && shared(0)._3 != shared(2)._3,
+      "fixture: reps 1 and 2 must share a signature")
+    // planted hot band: 30 reps agree on band 0 only; 100/101 on band 2
+    def sigOf(band0: Seq[Long], rest: Long): Seq[Long] =
+      band0 ++ (BandSize until NumPerm).map(j => rest * 1000 + j)
+    val hot = (10L until 40L).map(i =>
+      (i, Seq(i, i + 500), sigOf(Seq.fill(BandSize)(1L), i)))
+    val cold = Seq(100L, 101L).map(i => (i, Seq(i),
+      (0 until 2 * BandSize).map(j => i * 1000 + j) ++ Seq.fill(BandSize)(9L) ++
+        (3 * BandSize until NumPerm).map(j => i * 1000 + j)))
+    val reps = shared ++ hot ++ cold
+    val expected = (for {
+      (i, idsI, si) <- reps; (j, idsJ, sj) <- reps if i < j
+      if (0 until NumPerm / BandSize).exists(b =>
+        si.slice(b * BandSize, (b + 1) * BandSize) ==
+          sj.slice(b * BandSize, (b + 1) * BandSize))
+    } yield (i, j, idsI, idsJ)).toSet
+    assert(expected.size == 1 + 30 * 29 / 2 + 1, s"fixture: ${expected.size}")
+    val got = graft.queries.Dedup.lshBandPairs(
+        reps.toDF("doc_id", "ids", "sig").repartition(8))
+      .select($"doc_i", $"doc_j", $"ids_i", $"ids_j")
+      .as[(Long, Long, Seq[Long], Seq[Long])].collect()
+    assert(got.toSet == expected,
+      s"missing=${expected -- got}\nspurious=${got.toSet -- expected}")
+    assert(got.length == expected.size, "a pair agreeing on several bands " +
+      "must be emitted once")
+  }
+
+  test("LSH candidate pin == brute-force rep pairs over sf0.001 content " +
+      "groups") {
+    import spark.implicits._
+    import graft.queries.Dedup.{BandSize, NumPerm, P}
+    val dir = "/root/testdata/sf0.001"
+    graft.queries.Dedup.evictCaches(spark, Some(dir))
+    val texts = spark.read.parquet(s"$dir/documents.parquet")
+      .select($"doc_id", $"text").as[(Long, String)].collect()
+    // independent reference: content groups by shingle SET, rep = min
+    // doc_id, signature and banding in plain Scala
+    val groups = texts.map { case (i, t) => i -> shingleSet(t) }
+      .filter(_._2.nonEmpty).groupBy(_._2).values
+      .map(g => g.map(_._1).sorted.toSeq -> g.head._2).toSeq
+    def sig(sh: Set[Long]): Seq[Long] = (0 until NumPerm).map(j =>
+      sh.map(h => (h * (2L * j + 1) + 12345L * j + 1) % P).min)
+    val sigs = groups.map { case (ids, sh) => (ids, sig(sh)) }
+    val expected = (for {
+      (a, sa) <- sigs; (b, sb) <- sigs if a.head < b.head
+      if (0 until NumPerm / BandSize).exists(k =>
+        sa.slice(k * BandSize, (k + 1) * BandSize) ==
+          sb.slice(k * BandSize, (k + 1) * BandSize))
+    } yield (a.head, b.head, a, b)).toSet
+    val got = graft.queries.Dedup.lshRepCandPairs(spark, dir)
+      .select($"doc_i", $"doc_j", $"ids_i", $"ids_j")
+      .as[(Long, Long, Seq[Long], Seq[Long])].collect()
+    assert(got.toSet == expected,
+      s"missing=${(expected -- got).take(10)}\n" +
+        s"spurious=${(got.toSet -- expected).take(10)}")
+    assert(got.length == expected.size && expected.nonEmpty)
+    graft.queries.Dedup.evictCaches(spark, Some(dir))
+  }
+
   test("pinned rep-candidate expansion (d3) == doc-level band join (value identity)") {
     import spark.implicits._
     // r16 verdict item 2: d3_lsh_pairs now expands the pinned rep-level
     // candidate frame instead of re-deriving the full-corpus band join.
     // Prove value identity on the real fixture: the expansion (inter
     // rep-pair cross products + within-content-group pairs) emits
-    // EXACTLY the doc-level lshBandPairs(minhashSigs(corpus)) set.
+    // EXACTLY the doc-level band pairs over every document's signature.
     val dir = "/root/testdata/sf0.001"
     graft.queries.Dedup.evictCaches(spark, Some(dir))
     val got = graft.queries.Dedup.lshCandDocPairs(spark, dir)
       .select($"doc_i", $"doc_j")
       .as[(Long, Long)].collect().toSet
-    val docSigs = graft.queries.Dedup.minhashSigsOf(
+    val docSigs = ComposedForms.minhashSigsOf(
       spark.read.parquet(s"$dir/documents.parquet")
         .select($"doc_id", explode(HashedShinglesExpr
           .hashedShingles($"text", 3)).as("shingle")))

@@ -464,4 +464,93 @@ class FunctionsSpec extends SparkSpec {
     assert(r.getDouble(0) == 0.5) // "the" of ["the","cat!!!"]
     assert(r.getDouble(1) == 0.3) // 3 of 10 chars
   }
+
+  test("char_trigram_scores: edge cases keep the composed x5 form's values") {
+    import spark.implicits._
+    import graft.functions.CharTrigramScoresExpr
+    val profiles = CharTrigramScoresExpr.Profiles
+    // (text, expected (en, de, fr)) — the values the composed form gives
+    val cases = Seq[(String, (Int, Int, Int))](
+      (null, (0, 0, 0)), ("", (0, 0, 0)), ("t", (0, 0, 0)),
+      ("th", (0, 0, 0)), ("the", (1, 0, 0)), ("thethe", (2, 0, 0)),
+      ("naïve the", (2, 0, 0)), ("😀the", (1, 0, 0)), ("éth", (0, 0, 0)),
+      ("der und ich", (1, 3, 0)), ("les parents que", (0, 0, 3)),
+      ("the\u0000the", (2, 0, 0)), ("\u0000th", (0, 0, 0)))
+    bothEvalPaths {
+      val rows = cases.map(_._1).toDF("t").repartition(4)
+        .select($"t", CharTrigramScoresExpr.charTrigramScores($"t").as("k"),
+          struct(ComposedForms.trigramScores($"t", profiles): _*).as("c"))
+        .collect().map(r => Option(r.getString(0)) ->
+          ((r.getStruct(1).getInt(0), r.getStruct(1).getInt(1),
+            r.getStruct(1).getInt(2)),
+           (r.getStruct(2).getInt(0), r.getStruct(2).getInt(1),
+            r.getStruct(2).getInt(2)))).toMap
+      cases.foreach { case (t, want) =>
+        val (k, c) = rows(Option(t))
+        assert(c == want, s"composed form moved for '$t': $c")
+        assert(k == want, s"kernel mismatch for '$t': $k vs $want")
+      }
+    }
+    // SQL surface: registered, never null, (0, 0, 0) for null text
+    val viaSql = Seq[String](null, "thethe").toDF("t")
+      .selectExpr("char_trigram_scores(t) AS k").collect().map(_.getStruct(0))
+    assert(viaSql.map(r => (r.getInt(0), r.getInt(1), r.getInt(2))).toSeq ==
+      Seq((0, 0, 0), (2, 0, 0)))
+  }
+
+  test("char_trigram_scores == the composed trigram form on random, " +
+      "NUL-bearing and malformed-UTF-8 text (8 partitions, both eval paths)") {
+    import spark.implicits._
+    import graft.functions.CharTrigramScoresExpr
+    import org.scalacheck.rng.Seed
+    val profiles = CharTrigramScoresExpr.Profiles
+    // alphabet dense in profile letters, plus spaces, NUL, multi-byte
+    // and astral characters, so matches straddle every width
+    val alphabet = "thengadriscuoql ".map(_.toString) ++
+      Seq("\u0000", "é", "ï", "ü", "😀", "ñ")
+    val texts = Gen.listOfN(400, Gen.chooseNum(0, 40).flatMap(n =>
+        Gen.listOfN(n, Gen.oneOf(alphabet)).map(_.mkString)))
+      .pureApply(Gen.Parameters.default, Seed(7L))
+    // malformed UTF-8: lead bytes without continuations, stray
+    // continuation bytes and 0xFF, cast from binary as Spark reads it
+    val bytes = Gen.listOfN(200, Gen.chooseNum(0, 24).flatMap(n =>
+        Gen.listOfN(n, Gen.oneOf[Byte]('t'.toByte, 'h'.toByte, 'e'.toByte,
+          ' '.toByte, 'r'.toByte, 0xC3.toByte, 0xE0.toByte, 0xF0.toByte,
+          0x80.toByte, 0xA9.toByte, 0xFF.toByte)).map(_.toArray)))
+      .pureApply(Gen.Parameters.default, Seed(8L))
+    val frame = texts.toDF("t")
+      .union(bytes.toDF("b").select($"b".cast("string").as("t")))
+      .union(Seq[String](null).toDF("t"))
+      .repartition(8)
+    bothEvalPaths {
+      val diff = frame.select($"t",
+          CharTrigramScoresExpr.charTrigramScores($"t").as("k"),
+          struct(ComposedForms.trigramScores($"t", profiles): _*).as("c"))
+        .filter(!(($"k.en" === $"c.col1") && ($"k.de" === $"c.col2") &&
+          ($"k.fr" === $"c.col3")))
+        .collect()
+      assert(diff.isEmpty, diff.take(5).mkString("\n"))
+    }
+    // non-vacuous: the corpus does hit every profile
+    val hits = frame.select(CharTrigramScoresExpr.charTrigramScores($"t")
+      .as("k")).agg(sum($"k.en"), sum($"k.de"), sum($"k.fr")).head()
+    assert((0 until 3).forall(i => hits.getLong(i) > 0), hits)
+  }
+
+  test("x5_langid_ngram == the composed trigram query, row for row") {
+    import spark.implicits._
+    import graft.functions.CharTrigramScoresExpr
+    val dir = "/root/testdata/sf0.001"
+    val Seq(en, de, fr) = ComposedForms.trigramScores($"text",
+      CharTrigramScoresExpr.Profiles)
+    val composed = graft.core.Tables.documents(spark, dir)
+      .select($"doc_id", en.cast("bigint").as("en_score"),
+        de.cast("bigint").as("de_score"), fr.cast("bigint").as("fr_score"),
+        when(en >= de && en >= fr, "en").when(de >= fr, "de")
+          .otherwise("fr").as("pred_lang"))
+    val fused = SparkEntry.queries("x5_langid_ngram")(spark, dir)
+    assert(fused.schema == composed.schema)
+    assert(fused.exceptAll(composed).isEmpty && composed.exceptAll(fused).isEmpty)
+    assert(fused.count() == composed.count() && fused.count() > 0)
+  }
 }

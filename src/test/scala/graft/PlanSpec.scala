@@ -748,4 +748,90 @@ class PlanSpec extends SparkSpec {
       "the cell-count join-back must broadcast, not shuffle the increment")
     assert(p.contains("BroadcastHashJoin"), "join-back must be broadcast")
   }
+
+  test("HOF lint: no plan node repeats a semantically equal higher-order " +
+      "subtree (shrink-only allowlist)") {
+    // A higher-order function (transform/filter/aggregate/…) runs its
+    // lambda interpreted, once per element per row; a node holding two
+    // semantically equal copies pays that twice — x5 rebuilt its trigram
+    // array nine times per row. Fix an offender with a fused codegen'd
+    // Expression or by computing the value once below a lower Project or
+    // Generate, then delete it here: an allowlisted query that no longer
+    // repeats fails the sweep, so the list only shrinks.
+    import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
+    val allowed = Set("d8_corpus_curation", "d10_best_keeper",
+      "d18_incremental_dedup", "d27_lsh_keeper", "d35_dedup_audit",
+      "x1_token_stats", "x2_langid", "x3_quality", "x7_pmi_bigrams",
+      "x15_quality_deciles", "x25_shard_manifest", "x26_gopher_rules",
+      "x27_quality_classifier", "x30_dataset_card")
+    assert(!allowed.contains("x5_langid_ngram"))
+    // canonicalized also renumbers lambda variables, so two copies built
+    // by separate lambdas compare equal
+    val repeating = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
+      try {
+        val repeats = graft.core.PlanWalk.nodes(
+            SparkEntry.queries(name)(spark, dir)).exists { n =>
+          val hofs = n.expressions.flatMap(_.collect {
+            case h: HigherOrderFunction => h.canonicalized })
+          hofs.distinct.size < hofs.size
+        }
+        if (repeats) Some(name) else None
+      } catch {
+        case e: Exception =>
+          Some(s"$name fails analysis: ${e.getMessage.linesIterator.next()}")
+      }
+    }
+    val fresh = repeating.filterNot(allowed)
+    assert(fresh.isEmpty, "nodes repeat a higher-order subtree:\n" +
+      fresh.mkString("\n"))
+    val cured = allowed -- repeating
+    assert(cured.isEmpty,
+      s"no longer repeating — remove from the allowlist: $cured")
+  }
+
+  test("x5_langid_ngram: ONE fused trigram pass per row, no lambdas") {
+    import graft.functions.CharTrigramScoresExpr
+    import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
+    val nodes = graft.core.PlanWalk.nodes(
+      SparkEntry.queries("x5_langid_ngram")(spark, dir))
+    val exprs = nodes.flatMap(_.expressions)
+    assert(exprs.flatMap(_.collect { case k: CharTrigramScoresExpr => k })
+      .size == 1, "the scores struct must be computed once, not per use:\n" +
+      nodes.map(_.simpleString(400)).mkString("\n"))
+    assert(!exprs.exists(_.exists(_.isInstanceOf[HigherOrderFunction])))
+    assert(!nodes.exists(_.nodeName.contains("Exchange")), "x5 is rowwise")
+  }
+
+  test("LSH candidate pin: rowwise signatures, no lambda-carrying Generate, " +
+      "band and pair exchanges only") {
+    import graft.functions.MinHashSigExpr
+    import org.apache.spark.sql.catalyst.expressions.{HigherOrderFunction, LambdaFunction}
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+    graft.queries.Dedup.evictCaches(spark, Some(dir))
+    val pin = graft.queries.Dedup.lshRepCandPairs(spark, dir)
+    // the pin's own build plan (its consumers only scan it); its input,
+    // the content-group pin, is a leaf of the walk
+    val build = graft.core.PlanWalk.nodes(pin).collectFirst {
+      case s: InMemoryTableScanExec => s.relation.cachedPlan }.get
+    val nodes = graft.core.PlanWalk.nodes(build)
+    val shown = nodes.map(_.simpleString(400)).mkString("\n")
+    val gens = nodes.collect { case g: GenerateExec => g }
+    assert(gens.nonEmpty && gens.forall(g =>
+      !g.generator.exists(e => e.isInstanceOf[LambdaFunction] ||
+        e.isInstanceOf[HigherOrderFunction])),
+      s"band keys and pair emission must carry no lambda:\n$shown")
+    assert(nodes.flatMap(_.expressions).flatMap(_.collect {
+      case m: MinHashSigExpr => m }).size == 1,
+      s"one rowwise signature per rep:\n$shown")
+    val exchanges = nodes.collect { case e: ShuffleExchangeExec => e }
+    assert(exchanges.size == 2,
+      s"one band exchange plus the pair dedupe, nothing keyed on doc_id:\n$shown")
+    assert(!nodes.exists(n => n.isInstanceOf[SortMergeJoinExec] ||
+      n.isInstanceOf[BroadcastHashJoinExec]),
+      s"memberships ride the band lists — no join back:\n$shown")
+    graft.queries.Dedup.evictCaches(spark, Some(dir))
+  }
 }

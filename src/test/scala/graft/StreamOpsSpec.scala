@@ -440,7 +440,7 @@ class StreamOpsSpec extends SparkSpec {
     val shingleRows = docs.select($"doc_id",
       explode(graft.functions.HashedShinglesExpr.hashedShingles($"text", 3))
         .as("shingle"))
-    val sigs = graft.queries.Dedup.minhashSigsOf(shingleRows)
+    val sigs = ComposedForms.minhashSigsOf(shingleRows)
     val pairs = graft.queries.Dedup.lshBandPairs(sigs)
       .as[(Long, Long)].collect().toSet
     assert(pairs == Set((0L, 1L)),
