@@ -576,11 +576,7 @@ object Bench {
     // p12_upper, an uppercase map, read 5.89 s). Pins stay alive WITHIN
     // a family so the amortization story (one pair-gen/CC/postings
     // build, N consumers) remains what the suite measures.
-    def evictAll(): Unit = {
-      graft.queries.Dedup.evictCaches(spark)
-      graft.queries.Similarity.evictCaches(spark)
-      graft.queries.TextAnalytics.evictCaches(spark)
-    }
+    def evictAll(): Unit = graft.core.Pins.evict(spark)
     var family = ' '
     val startMs = scala.collection.mutable.LinkedHashMap[String, Long]()
     // per-query task metrics (r19 verdict item 3): peakExecutionMemory

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.core.Tables
+import graft.core.{Pins, Tables}
 import graft.functions.{HashFunctions, HashedShinglesExpr, MinHashSigExpr, TextFunctions}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -158,9 +158,6 @@ object Dedup extends QueryModule {
       .agg(sort_array(collect_list($"doc_id")).as("ids"))
   }
 
-  private val contentGroupsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   /** The ONE pinned non-empty content-group frame per (session, dir):
     * (arr, ids) — round 20, guide §2.4/§5. SIX consumers each rebuilt
     * this identical corpus pass + groupBy(arr) exchange per session
@@ -170,16 +167,14 @@ object Dedup extends QueryModule {
     * is the sharedPostings documented trade: O(corpus) rows (the arr
     * column ≈ the tokenized corpus) in MEMORY_AND_DISK, lineage
     * preserved so lost blocks recompute (PinRecoverySpec doctrine),
-    * released by [[evictCaches]]. Empty-shingle docs are excluded here
+    * released by `Pins.evict`. Empty-shingle docs are excluded here
     * once — every consumer filtered them anyway (they share no shingle,
     * so they never pair, band, or group).
     */
   private def sharedContentGroups(s: SparkSession, dir: String): DataFrame =
-    contentGroupsCache.computeIfAbsent((s, dir), { key =>
-      contentGroups(key._1, key._2)
-        .filter(size(col("arr")) > 0)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    Pins.frame("content_groups", s, Some(dir)) {
+      contentGroups(s, dir).filter(size(col("arr")) > 0)
+    }
 
   /** Multi-member content groups with a non-empty shingle set:
     * (ids, n_sh). Empty-shingle docs never share a shingle, so their
@@ -312,15 +307,6 @@ object Dedup extends QueryModule {
     */
   private[graft] val ContainBaseThreshold = 0.9
 
-  private val statsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  private val pairsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  private val groupsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   /** The ONE pinned REP-level pair frame behind the whole exact-dedup
     * family: `repPairStats` filtered to (jaccard ≥ [[BasePairThreshold]]
     * OR containment ≥ [[ContainBaseThreshold]]),
@@ -332,12 +318,11 @@ object Dedup extends QueryModule {
     * pair count the pre-collapse pin used to hold.
     */
   private def sharedRepStats(s: SparkSession, dir: String): DataFrame =
-    statsCache.computeIfAbsent((s, dir), { key =>
-      repPairStats(key._1, key._2)
+    Pins.frame("rep_pair_stats", s, Some(dir)) {
+      repPairStats(s, dir)
         .filter(col("jaccard") >= BasePairThreshold ||
           col("containment") >= ContainBaseThreshold)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   /** Pinned multi-member content groups (ids, n_sh) — the membership
     * side of every expansion and of the contracted CC paths. One row per
@@ -345,10 +330,9 @@ object Dedup extends QueryModule {
     * as the component pins this module already holds).
     */
   private def sharedMultiGroups(s: SparkSession, dir: String): DataFrame =
-    groupsCache.computeIfAbsent((s, dir), { key =>
-      multiGroupsOf(sharedContentGroups(key._1, key._2))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    Pins.frame("multi_groups", s, Some(dir)) {
+      multiGroupsOf(sharedContentGroups(s, dir))
+    }
 
   /** Doc-level filtered pair stats — the expansion view over the two
     * pinned frames; value-identical to pinning the expanded frame (the
@@ -365,11 +349,11 @@ object Dedup extends QueryModule {
       s"shared pair frame is computed at base $BasePairThreshold; " +
         s"threshold $threshold would need a fresh pair-gen — call " +
         "jaccardPairs directly or lower BasePairThreshold")
-    val base = pairsCache.computeIfAbsent((s, dir), { key =>
-      sharedPairStats(key._1, key._2)
+    val base = Pins.get("jaccard_pairs", s, Some(dir)) {
+      sharedPairStats(s, dir)
         .filter(col("jaccard") >= BasePairThreshold)
         .select(col("doc_i"), col("doc_j"), col("jaccard"))
-    })
+    }
     if (threshold == BasePairThreshold) base
     else base.filter(col("jaccard") >= threshold)
   }
@@ -401,15 +385,11 @@ object Dedup extends QueryModule {
     * includes the session, so a new session recomputes (a dead session's
     * pinned blocks are simply unreachable); entries are bounded by the
     * number of (session, dir) pairs a process touches — and a long-lived
-    * multi-tenant session can release them explicitly via [[evictCaches]].
+    * multi-tenant session can release them explicitly via `Pins.evict`.
     */
-  private val componentsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   private[graft] def dupComponents(s: SparkSession, dir: String): DataFrame =
-    componentsCache.computeIfAbsent((s, dir), { key =>
-      val (sess, d) = key
-      import sess.implicits._
+    Pins.frame("dup_components", s, Some(dir)) {
+      import s.implicits._
       // GROUP-CONTRACTED CC (round-15 verdict item 2): the fixpoint runs
       // over distinct-content representatives only — edges are REP pairs
       // at jaccard >= 0.5 — and members inherit their rep's label via
@@ -419,12 +399,12 @@ object Dedup extends QueryModule {
       // exists iff its rep pair does. Min-id labels agree because every
       // rep IS its group's min doc_id. Clique edge volume never reaches
       // the fixpoint.
-      val docs = Tables.documents(sess, d).select($"doc_id".as("id"))
-      val repEdges = sharedRepStats(sess, d)
+      val docs = Tables.documents(s, dir).select($"doc_id".as("id"))
+      val repEdges = sharedRepStats(s, dir)
         .filter($"jaccard" >= 0.5)
         .select($"doc_i".as("src"), $"doc_j".as("dst"))
-      contractedComponents(sess, d, docs, repEdges)
-    })
+      contractedComponents(s, dir, docs, repEdges)
+    }
 
   /** Group-contracted CC + membership inheritance, shared by
     * [[dupComponents]] and [[lshDupComponents]] (round-16 review: the
@@ -432,7 +412,8 @@ object Dedup extends QueryModule {
     * argument's one implementation): runStar over the rep edge frame
     * (callers guarantee unique src < dst rep pairs), then every member
     * inherits its rep's label via one membership join; singleton-content
-    * docs are their own rep. Returns the pinned (id, component) frame.
+    * docs are their own rep. Returns the (id, component) frame the
+    * callers pin.
     */
   private def contractedComponents(sess: SparkSession, d: String,
       docs: DataFrame, repEdges: DataFrame): DataFrame = {
@@ -445,15 +426,8 @@ object Dedup extends QueryModule {
       .select($"id", coalesce($"rep", $"id").as("rep"))
       .join(repLabels.select($"id".as("rep"), $"component"), Seq("rep"))
       .select($"id", $"component")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
-  /** Release every pinned frame this module holds for `session` (the
-    * persisted blocks behind the pair + component caches).
-    * Long-lived multi-tenant sessions call this when a data dir's
-    * curation pass is finished; entries for other sessions are untouched.
-    * Passing `dir=Some(d)` scopes the eviction to one data directory.
-    */
   /** d24's normalize→digest keep rule over an arbitrary docs frame:
     * keeps the minimum-doc_id member of every normalized-digest group
     * (case-fold + letter-runs + md5 — reformatted copies collapse).
@@ -469,42 +443,12 @@ object Dedup extends QueryModule {
     docs.join(keep.select(col("doc_id")), Seq("doc_id"), "left_semi")
   }
 
-  def evictCaches(session: SparkSession, dir: Option[String] = None): Unit = {
-    def drop[K](m: java.util.concurrent.ConcurrentHashMap[K, DataFrame],
-                sessionOf: K => SparkSession, dirOf: K => String): Unit = {
-      val it = m.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if ((sessionOf(e.getKey) eq session) &&
-            dir.forall(_ == dirOf(e.getKey))) {
-          // Dataset.unpersist releases the persisted blocks directly
-          // (the old `.rdd.unpersist` built a DERIVED RDD and leaked
-          // the pinned blocks — round-13 ADVICE); best-effort (a
-          // stopped session throws — blocks already unreachable then)
-          try e.getValue.unpersist(blocking = false)
-          catch { case _: Throwable => () }
-          it.remove()
-        }
-      }
-    }
-    drop[(SparkSession, String)](statsCache, _._1, _._2)
-    drop[(SparkSession, String)](pairsCache, _._1, _._2)
-    drop[(SparkSession, String)](groupsCache, _._1, _._2)
-    drop[(SparkSession, String)](contentGroupsCache, _._1, _._2)
-    drop[(SparkSession, String)](simhashGroupCache, _._1, _._2)
-    drop[(SparkSession, String)](componentsCache, _._1, _._2)
-    drop[(SparkSession, String)](lshComponentsCache, _._1, _._2)
-    drop[(SparkSession, String)](lshPairsCache, _._1, _._2)
-    drop[(SparkSession, String)](lshCandsCache, _._1, _._2)
-  }
-
-  /** The LSH-candidate-restricted component assignment (d26/d27 share
-    * it — the dupComponents pattern for the banded pair graph): LSH
-    * band candidates, exact-Jaccard verified on the candidate rows
-    * only, then star-rewiring CC. One CC run per (session, dir).
+  /** Forwards to [[graft.core.Pins.evict]], which releases every
+    * module's pins for `session` (d's and the digest-keyed ones when
+    * `dir = Some(d)`).
     */
-  private val lshComponentsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  def evictCaches(session: SparkSession, dir: Option[String] = None): Unit =
+    Pins.evict(session, dir)
 
   /** d34 core — incremental component maintenance over an arbitrary
     * (id) node frame, (src, dst) edge frame, and base-membership
@@ -546,21 +490,6 @@ object Dedup extends QueryModule {
       .select($"id", $"final_comp".as("component"))
   }
 
-  /** The band-collision candidate pairs, exact-Jaccard verified —
-    * the d26-family edge set (src < dst, distinct).
-    */
-  /** ONE verified band-collision pair frame per (session, dir): the
-    * full-graph CC (d26 family) and the incremental maintenance path
-    // (d34) consume the SAME edges, so the pair-gen — the expensive
-    * half of the flow — pins once and amortizes, the shingle-pair /
-    * k-means pinning doctrine.
-    */
-  private val lshPairsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  private val lshCandsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   /** ONE rep-level UNVERIFIED band-collision candidate frame per
     * (session, dir) — the frame every LSH-candidate consumer derives
     * from (round-16 verdict item 2: after the rep-frame rewrite,
@@ -576,17 +505,15 @@ object Dedup extends QueryModule {
     * DISTINCT content, never copies².
     */
   private[graft] def lshRepCandPairs(s: SparkSession, dir: String): DataFrame =
-    lshCandsCache.computeIfAbsent((s, dir), { key =>
-      val (sess, d) = key
-      import sess.implicits._
+    Pins.frame("lsh_rep_cands", s, Some(dir)) {
+      import s.implicits._
       // signatures rowwise off the pinned arr (no explode, no doc_id
       // shuffle); the ids ride the band lists into the pair rows, so the
       // build's only exchanges are the band and pair-dedupe ones
-      lshBandPairs(sharedContentGroups(sess, d)
+      lshBandPairs(sharedContentGroups(s, dir)
           .select($"ids".getItem(0).as("doc_id"), $"ids",
             minhashSig($"arr").as("sig")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   /** Doc-level UNVERIFIED band-collision pairs — d3's reference output:
     * membership expansion of the pinned rep candidate frame plus the
@@ -613,17 +540,18 @@ object Dedup extends QueryModule {
     * keys, so the collapse is lossless for candidacy, and
     * content-identical pairs verify at jaccard 1 trivially — they're
     * emitted by the membership side, never computed). Carries both
-    * groups' ids for doc-level expansion.
+    * groups' ids for doc-level expansion. The full-graph CC (d26
+    * family) and the incremental maintenance path (d34) consume the
+    * SAME edges, so the pair-gen pins once and amortizes.
     */
   private[graft] def lshVerifiedRepPairs(s: SparkSession, dir: String): DataFrame =
-    lshPairsCache.computeIfAbsent((s, dir), { key =>
-      val (sess, d) = key
-      import sess.implicits._
-      val reps = sharedContentGroups(sess, d)
+    Pins.frame("lsh_verified_rep_pairs", s, Some(dir)) {
+      import s.implicits._
+      val reps = sharedContentGroups(s, dir)
         .select($"ids".getItem(0).as("doc_id"), $"arr")
       // candidates from the UNVERIFIED pin (ids already ride the rows);
       // this build adds only the arr joins + the exact-Jaccard filter
-      lshRepCandPairs(sess, d)
+      lshRepCandPairs(s, dir)
         .join(reps.select($"doc_id".as("doc_i"), $"arr".as("arr_i")), "doc_i")
         .join(reps.select($"doc_id".as("doc_j"), $"arr".as("arr_j")), "doc_j")
         .withColumn("inter",
@@ -631,8 +559,7 @@ object Dedup extends QueryModule {
         .filter($"inter" /
           (size($"arr_i") + size($"arr_j") - $"inter") >= 0.5)
         .select($"doc_i".as("src"), $"doc_j".as("dst"), $"ids_i", $"ids_j")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   /** Doc-level verified band pairs — the d34 edge contract (its
     * base/increment split is a per-doc predicate, so contraction does
@@ -650,16 +577,20 @@ object Dedup extends QueryModule {
     inter.unionAll(intra)
   }
 
+  /** The LSH-candidate-restricted component assignment (d26/d27 share
+    * it — the dupComponents pattern for the banded pair graph): LSH
+    * band candidates, exact-Jaccard verified on the candidate rows
+    * only, then star-rewiring CC. One CC run per (session, dir).
+    */
   private[graft] def lshDupComponents(s: SparkSession, dir: String): DataFrame =
-    lshComponentsCache.computeIfAbsent((s, dir), { key =>
-      val (sess, d) = key
-      import sess.implicits._
+    Pins.frame("lsh_dup_components", s, Some(dir)) {
+      import s.implicits._
       // group-contracted CC over the verified rep graph + membership
       // inheritance — see dupComponents for the equivalence argument
-      val docs = Tables.documents(sess, d).select($"doc_id".as("id"))
-      contractedComponents(sess, d, docs,
-        lshVerifiedRepPairs(sess, d).select($"src", $"dst"))
-    })
+      val docs = Tables.documents(s, dir).select($"doc_id".as("id"))
+      contractedComponents(s, dir, docs,
+        lshVerifiedRepPairs(s, dir).select($"src", $"dst"))
+    }
 
   override def queries: Map[String, Q] = Map(
     // D1: exact dedup via content hash; canonical row = min doc_id per
@@ -1962,9 +1893,6 @@ object Dedup extends QueryModule {
     * take this frame instead: cluster membership, keeper election, and
     * pair counts all read off (ids_i, ids_j, hamming) directly.
     */
-  private val simhashGroupCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   /** Pinned group-pair frame shared by d4_simhash_pairs' guard +
     * expansion and d4_group_stats (round 18, r17 ADVICE): ONE
     * persist(MEMORY_AND_DISK) per (session, dir) — NOT a fresh
@@ -1974,14 +1902,11 @@ object Dedup extends QueryModule {
     * executor's non-replicated checkpoint blocks fail the query, while
     * a persisted frame keeps lineage and recomputes (PinRecoverySpec).
     * Row count is collision-bounded (distinct-hash pairs), so the pin
-    * is small; released via [[evictCaches]].
+    * is small; released via `Pins.evict`.
     */
   private[graft] def sharedSimhashGroupPairs(s: SparkSession,
                                              dir: String): DataFrame =
-    simhashGroupCache.computeIfAbsent((s, dir), { key =>
-      simhashGroupPairs(key._1, key._2)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    Pins.frame("simhash_group_pairs", s, Some(dir))(simhashGroupPairs(s, dir))
 
   private[graft] def simhashGroupPairs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._

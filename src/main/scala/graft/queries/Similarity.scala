@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.core.Tables
+import graft.core.{Pins, Tables}
 import graft.functions.{HashFunctions, VectorFunctions}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -190,72 +190,45 @@ object Similarity extends QueryModule {
     * time). Same session-pinning contract as `Dedup.sharedJaccardPairs`:
     * persist(MEMORY_AND_DISK) pins an O(corpus) frame of (vec_id,
     * embedding, cid) rows — the frame every consumer needs anyway — and
-    * [[evictCaches]] releases the blocks for long-lived sessions.
-    * persist, NOT localCheckpoint (round 14): lineage survives executor
-    * loss (PinRecoverySpec) and `Dataset.unpersist` actually releases
-    * the blocks.
+    * `Pins.evict` releases the blocks for long-lived sessions.
     */
-  private val assignCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), DataFrame]()
-
   private[graft] def sharedKmeansAssign(s: SparkSession, dir: String,
       k: Int): DataFrame =
-    assignCache.computeIfAbsent((s, dir, k), { key =>
-      kmeansAssign(
-        emb(key._1, key._2).select(col("vec_id"), col("embedding")), key._3)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
-
-  /** Release the pinned assignment frames held for `session` (optionally
-    * scoped to one data dir) — the `Dedup.evictCaches` contract.
-    */
-  /** Loose pins: persisted helper frames with no named cache
-    * ([[semanticDedupFrame]]'s k-means assignment, d5's block frame),
-    * registered so [[evictCaches]] releases their blocks instead of
-    * leaking them to session stop: the CacheManager holds a strong
-    * reference to every persisted plan.
-    */
-  private val loosePins =
-    new java.util.concurrent.ConcurrentLinkedQueue[(SparkSession, DataFrame)]()
-
-  private def loosePin(df: DataFrame): DataFrame = {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    loosePins.add((df.sparkSession, p))
-    p
-  }
-
-  def evictCaches(session: SparkSession, dir: Option[String] = None): Unit = {
-    val lp = loosePins.iterator()
-    while (lp.hasNext) {
-      val (s, df) = lp.next()
-      if (s eq session) {
-        try df.unpersist(blocking = false)
-        catch { case _: Throwable => () }
-        lp.remove()
-      }
+    Pins.frame("kmeans_assign", s, Some(dir), k.toString) {
+      kmeansAssign(emb(s, dir).select(col("vec_id"), col("embedding")), k)
     }
-    val it = assignCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if ((e.getKey._1 eq session) && dir.forall(_ == e.getKey._2)) {
-        // Dataset.unpersist, not .rdd.unpersist (round-13 ADVICE: the
-        // derived RDD handle leaked the persisted blocks)
-        try e.getValue.unpersist(blocking = false)
-        catch { case _: Throwable => () }
-        it.remove()
-      }
+
+  /** Forwards to [[graft.core.Pins.evict]] (see `Dedup.evictCaches`). */
+  def evictCaches(session: SparkSession, dir: Option[String] = None): Unit =
+    Pins.evict(session, dir)
+
+  /** The k-means assignment of an arbitrary corpus, pinned per (session,
+    * corpus plan, k) — [[semanticDedupFrame]]'s input: the cid self-join
+    * would otherwise run both Lloyd rounds (two corpus passes each)
+    * twice.
+    */
+  private[graft] def pinnedAssign(corpus: DataFrame, k: Int): DataFrame =
+    Pins.frame("kmeans_assign", corpus.sparkSession, None,
+        Pins.planDigest(corpus) + ":" + k) {
+      kmeansAssign(corpus, k)
     }
-  }
 
   /** d19 frame for an arbitrary corpus (spec entry point — planted
     * corpora); the d19 QUERY goes through [[sharedKmeansAssign]] instead.
-    * The assignment persists once (round 14: persist, not
-    * localCheckpoint — the pin doctrine) — the cid self-join would
-    * otherwise run both Lloyd rounds (two corpus passes each) twice.
     */
   private[graft] def semanticDedupFrame(corpus: DataFrame, k: Int,
       tau: Double): DataFrame =
-    semanticDedupFromAssign(loosePin(kmeansAssign(corpus, k)), tau)
+    semanticDedupFromAssign(pinnedAssign(corpus, k), tau)
+
+  /** d5's block frame: the corpus as `b` rows of (blk, vecs), one
+    * collect_list row per block, pinned per (session, corpus plan, b).
+    */
+  private[graft] def embedBlocks(corpus: DataFrame, b: Long): DataFrame =
+    Pins.frame("d5_blocks", corpus.sparkSession, None,
+        Pins.planDigest(corpus) + ":" + b) {
+      corpus.groupBy(pmod(col("vec_id"), lit(b)).as("blk"))
+        .agg(collect_list(struct(col("vec_id"), col("embedding"))).as("vecs"))
+    }
 
   /** SemDeDup keep-first policy over a pinned (vec_id, embedding, cid)
     * assignment frame: (vec_id, cid, n_dups, dropped).
@@ -519,11 +492,8 @@ object Similarity extends QueryModule {
       // corpus pass). Round 18 (r17 verdict item 3): persist, NOT
       // localCheckpoint — the pin doctrine. localCheckpoint blocks are
       // non-replicated and lineage-free, so one lost executor failed
-      // the query; the persisted frame recomputes lost blocks, and
-      // loosePin registers it for evictCaches release.
-      val blocks = loosePin(corpus
-        .groupBy(pmod($"vec_id", lit(B)).as("blk"))
-        .agg(collect_list(struct($"vec_id", $"embedding")).as("vecs")))
+      // the query; the persisted frame recomputes lost blocks.
+      val blocks = embedBlocks(corpus, B)
       blocks.count()
       // Grid-size sanity: B is derived from blockBytes, so a
       // misconfigured graft.d5.blockBytes (bytes-vs-MB slip) must fail

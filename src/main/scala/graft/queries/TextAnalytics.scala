@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.core.Tables
+import graft.core.{Pins, Tables}
 import graft.functions.{CharTrigramScoresExpr, HashFunctions, RepetitionStatsExpr, TextFunctions}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -232,20 +232,18 @@ object TextAnalytics extends QueryModule {
   // dataset plan, key family), i.e. it runs once per corpus per JVM,
   // the "cached per-dataset statistic" a 100 TB pipeline would persist
   // alongside the data.
-  private val skewProbeCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Double]()
 
-  /** Top-1 key share of `keyed` (one column `k`), cached under
+  /** Top-1 key share of `keyed` (one column `k`), pinned under
     * (session, tag). Package-visible for the wiring spec.
     */
   private[graft] def hotKeyShare(sess: SparkSession, tag: String,
       keyed: => DataFrame): Double =
-    skewProbeCache.computeIfAbsent((sess, tag), { _ =>
+    Pins.get("skew_probe", sess, None, tag) {
       val r = keyed.groupBy(col("k")).agg(count(lit(1)).as("n"))
         .agg(max(col("n")).as("maxn"), sum(col("n")).as("tot")).head()
-      if (r.isNullAt(1) || r.getLong(1) == 0L) Double.box(0.0)
-      else Double.box(r.getLong(0).toDouble / r.getLong(1))
-    })
+      if (r.isNullAt(1) || r.getLong(1) == 0L) 0.0
+      else r.getLong(0).toDouble / r.getLong(1)
+    }
 
   /** The tri-state dispatch: force via "true"/"false", else probe
     * `keyOf(sampled docs)`'s hot-key share against the threshold.
@@ -271,28 +269,9 @@ object TextAnalytics extends QueryModule {
         // probe fraction after the first probe must re-measure, not
         // read the stale share. The threshold compares OUTSIDE the
         // cache, so re-tuning it alone re-dispatches for free.
-        hotKeyShare(sess, family + "@" + frac + ":" + planDigest(docs),
+        hotKeyShare(sess, family + "@" + frac + ":" + Pins.planDigest(docs),
           keyOf(sampled)) >= thresh
     }
-  }
-
-  /** Stable cache tag for "this exact input frame": a UUID over the
-    * analyzed plan's canonical form (the identity Catalyst's own
-    * exchange reuse keys on). Shared by the skew-probe and BPE caches.
-    *
-    * The canonical STRING alone is not an identity: `LocalRelation`'s
-    * simpleString hides its rows and `LogicalRelation`'s hides the file
-    * paths, so two different corpora with the same schema print the
-    * same plan. Mix in `semanticHash()` (the canonicalized tree's
-    * structural hash — it covers local rows via UnsafeRow bytes and
-    * file relations via the index's rootPaths) so distinct inputs get
-    * distinct tags while same-path re-reads still coincide.
-    */
-  private def planDigest(df: DataFrame): String = {
-    val canon = df.queryExecution.analyzed.canonicalized
-    java.util.UUID.nameUUIDFromBytes(
-      (canon.toString + "#" + df.queryExecution.analyzed.semanticHash())
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString
   }
 
   /** The token-family probe dispatch shared by x14/x16/x29/x20 (their
@@ -310,21 +289,17 @@ object TextAnalytics extends QueryModule {
       case "false" => false
       case _ =>
         val thresh = sess.conf.get(SkewThresholdKey, "0.10").toDouble
-        val share = skewProbeCache.computeIfAbsent(
-          (sess, "token:" + planDigest(docs)), { _ =>
-            val (cw, nC, _) = sharedTermStats(docs)
-            if (nC == 0L) Double.box(0.0)
-            else Double.box(
-              cw.agg(max(col("n_w"))).head().getLong(0).toDouble / nC)
-          })
+        val share = Pins.get("skew_probe", sess, None,
+            "token:" + Pins.planDigest(docs)) {
+          val (cw, nC, _) = sharedTermStats(docs)
+          if (nC == 0L) 0.0
+          else cw.agg(max(col("n_w"))).head().getLong(0).toDouble / nC
+        }
         share >= thresh
     }
   }
 
   // ------------------- j11/j12 pinned retrieval family ----------------
-
-  private val bm25Cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
 
   /** The ONE pinned BM25 rank frame per (session, dir) — j11's result
     * and j12's sparse input (the `Dedup.sharedJaccardPairs` /
@@ -332,20 +307,12 @@ object TextAnalytics extends QueryModule {
     * retrieval). The pinned frame is ≤ n_queries×10 rows — pinning it
     * is free at any corpus scale; what it saves is re-running the whole
     * retrieval plan (two corpus scans + the posting shuffle) once per
-    * consumer. [[evictCaches]] releases the blocks.
+    * consumer. `Pins.evict` releases the blocks.
     */
   private[graft] def bm25Ranks(s: SparkSession, dir: String): DataFrame =
-    bm25Cache.computeIfAbsent((s, dir), { key =>
-      bm25Plan(key._1, key._2)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    Pins.frame("bm25_ranks", s, Some(dir))(bm25Plan(s, dir))
 
   // ------------- shared tokenized-corpus pins (round 13) --------------
-
-  private val postingsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private val bigramsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
 
   /** The ONE whitespace-token posting frame per (session, corpus plan):
     * (doc_id, source, len_d, w, n_dw) — the (doc, term) aggregate that
@@ -358,12 +325,12 @@ object TextAnalytics extends QueryModule {
     * the behavior; the Mains.scala k-means fix, same argument), and
     * `Dataset.unpersist` actually releases the blocks on eviction.
     * O(distinct (doc, term)) storage is the documented trade:
-    * [[evictCaches]] releases it. `source` rides along when the input
+    * `Pins.evict` releases it. `source` rides along when the input
     * has it (x20 keys its target/reference LMs on it); planted spec
     * corpora without the column get a null.
     */
   private[graft] def sharedPostings(docs: DataFrame): DataFrame =
-    postingsCache.computeIfAbsent((docs.sparkSession, planDigest(docs)), { _ =>
+    Pins.frame("postings", docs.sparkSession, None, Pins.planDigest(docs)) {
       import docs.sparkSession.implicits._
       val src = if (docs.columns.contains("source")) $"source"
                 else lit(null).cast("string").as("source")
@@ -386,8 +353,7 @@ object TextAnalytics extends QueryModule {
         .repartition($"doc_id")
         .groupBy($"doc_id", $"source", $"len_d", $"w")
         .agg(count(lit(1)).as("n_dw"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   /** The ONE whitespace-token bigram frame per (session, corpus plan):
     * (doc_id, w1, w2, n_dw). Same pin doctrine as [[sharedPostings]];
@@ -395,7 +361,7 @@ object TextAnalytics extends QueryModule {
     * each rebuilt the corpus bigram instance stream).
     */
   private[graft] def sharedBigrams(docs: DataFrame): DataFrame =
-    bigramsCache.computeIfAbsent((docs.sparkSession, planDigest(docs)), { _ =>
+    Pins.frame("bigrams", docs.sparkSession, None, Pins.planDigest(docs)) {
       import docs.sparkSession.implicits._
       docs
         .select($"doc_id", TextFunctions.wsTokens($"text").as("ts"))
@@ -410,8 +376,7 @@ object TextAnalytics extends QueryModule {
         .repartition($"doc_id")
         .groupBy($"doc_id", $"w1", $"w2")
         .agg(count(lit(1)).as("n_dw"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   // ---------------- pinned corpus LM statistics (round 14) ------------
   //
@@ -427,51 +392,32 @@ object TextAnalytics extends QueryModule {
   // re-enter the score expressions as literals Catalyst constant-folds,
   // arithmetic-identical to the broadcast 1-row frame they replace.
 
-  /** Term-stats pin holder: the frame registers inside the cache's
-    * computeIfAbsent (LAZY — plan + persist registration only; no Spark
-    * job runs under the ConcurrentHashMap bin lock, round-14 ADVICE:
-    * the old in-map collect held the bin hostage for the whole
-    * pin-build job, blocking unrelated tenants whose keys hashed to the
-    * same bin). The 1-row (n_c, V) totals collect runs OUTSIDE the map
-    * computation, memoized by the lazy val's per-INSTANCE monitor —
-    * concurrent tenants of the same corpus still serialize on the one
-    * job they both want, but never tenants of a different corpus.
+  /** Counted x16 head sizes, pinned per (session, corpus plan, minDf):
+    * the broadcast-gate count is a pure function of the pinned stats
+    * frame and minDf, so repeated invocations (Bench reps, the reps=2
+    * canary) must not re-pay the count job (round-19 review). On a miss
+    * the count runs EAGERLY, during DataFrame construction — the gate
+    * needs the number before the plan can be chosen.
     */
-  private final class TermStatsPin(val cw: DataFrame) {
-    lazy val totals: (Long, Long) = {
-      val r = cw.agg(sum(col("n_w")), count(lit(1))).head() // 1 row
-      (if (r.isNullAt(0)) 0L else r.getLong(0), r.getLong(1))
-    }
-  }
-
-  private val termStatsCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), TermStatsPin]()
-  private val bigramStatsCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-
-  /** Counted x16 head sizes, keyed (session, corpus plan, minDf): the
-    * broadcast-gate count is a pure function of the pinned stats frame
-    * and minDf, so repeated invocations (Bench reps, the reps=2 canary)
-    * must not re-pay the count job (round-19 review). Entries are a
-    * handful of longs — no unpersist needed on eviction, but the map
-    * clears with the stats pins so a re-derived corpus recounts.
-    */
-  private val headCountCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Long), java.lang.Long]()
+  private[graft] def headRows(docs: DataFrame, minDf: Long,
+      head: DataFrame): Long =
+    Pins.get("x16_head_rows", docs.sparkSession, None,
+      Pins.planDigest(docs) + ":" + minDf)(head.count())
 
   /** Pinned (w, n_w) term totals + the collected (n_c, V) corpus
     * totals, folded ONCE per (session, corpus plan) from
-    * [[sharedPostings]] by two-phase partial aggregation.
+    * [[sharedPostings]] by two-phase partial aggregation. One pin builds
+    * both: it pins the counts frame and runs the 1-row totals job.
     */
   private[graft] def sharedTermStats(docs: DataFrame): (DataFrame, Long, Long) = {
-    val pin = termStatsCache.computeIfAbsent(
-      (docs.sparkSession, planDigest(docs)), { _ =>
-        new TermStatsPin(sharedPostings(docs)
-          .groupBy(col("w")).agg(sum(col("n_dw")).as("n_w"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      })
-    val (nC, v) = pin.totals // first caller runs the 1-row job, unlocked
-    (pin.cw, nC, v)
+    val key = Pins.planDigest(docs)
+    Pins.get("term_stats", docs.sparkSession, None, key) {
+      val cw = Pins.frame("term_counts", docs.sparkSession, None, key) {
+        sharedPostings(docs).groupBy(col("w")).agg(sum(col("n_dw")).as("n_w"))
+      }
+      val r = cw.agg(sum(col("n_w")), count(lit(1))).head() // 1 row
+      (cw, if (r.isNullAt(0)) 0L else r.getLong(0), r.getLong(1))
+    }
   }
 
   /** Pinned (w1, w2, c12, c1) bigram/context totals, folded ONCE per
@@ -479,15 +425,11 @@ object TextAnalytics extends QueryModule {
     * fold is vocab × vocab — never corpus-sized.
     */
   private[graft] def sharedBigramStats(docs: DataFrame): DataFrame =
-    bigramStatsCache.computeIfAbsent((docs.sparkSession, planDigest(docs)), { _ =>
+    Pins.frame("bigram_stats", docs.sparkSession, None, Pins.planDigest(docs)) {
       val c12 = sharedBigrams(docs)
         .groupBy(col("w1"), col("w2")).agg(sum(col("n_dw")).as("c12"))
       c12.join(c12.groupBy(col("w1")).agg(sum(col("c12")).as("c1")), "w1")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
-
-  private val bigramCtxCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
+    }
 
   /** Pinned (w1, c1) context totals — unigram-vocab-sized, folded once
     * from [[sharedBigramStats]]. Only the x16 minDf tail-prune path
@@ -497,74 +439,13 @@ object TextAnalytics extends QueryModule {
     * per evaluation.
     */
   private[graft] def sharedBigramCtx(docs: DataFrame): DataFrame =
-    bigramCtxCache.computeIfAbsent((docs.sparkSession, planDigest(docs)), { _ =>
-      sharedBigramStats(docs)
-        .groupBy(col("w1")).agg(max(col("c1")).as("c1"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    Pins.frame("bigram_ctx", docs.sparkSession, None, Pins.planDigest(docs)) {
+      sharedBigramStats(docs).groupBy(col("w1")).agg(max(col("c1")).as("c1"))
+    }
 
-  /** Release the pinned rank frames held for `session` (optionally
-    * scoped to one data dir) — the `Dedup.evictCaches` contract.
-    */
-  def evictCaches(session: SparkSession, dir: Option[String] = None): Unit = {
-    // Dataset.unpersist releases the persisted blocks directly (the
-    // round-13 `.rdd.unpersist` released a DERIVED RDD and leaked the
-    // pinned blocks until session end — round-13 ADVICE)
-    val it = bm25Cache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if ((e.getKey._1 eq session) && dir.forall(_ == e.getKey._2)) {
-        try e.getValue.unpersist(blocking = false)
-        catch { case _: Throwable => () }
-        it.remove()
-      }
-    }
-    // digest-keyed pins (BPE corpus, postings, bigrams) are corpus-
-    // sized — scope the release to the session (the dir is not in
-    // their key; releasing a few extra pinned frames is harmless next
-    // to leaking one)
-    val bt = bpeCache.entrySet().iterator()
-    while (bt.hasNext) {
-      val e = bt.next()
-      if (e.getKey._1 eq session) {
-        try e.getValue._3.unpersist(blocking = false)
-        catch { case _: Throwable => () }
-        bt.remove()
-      }
-    }
-    Seq(postingsCache, bigramsCache, bigramStatsCache,
-        bigramCtxCache).foreach { c =>
-      val pt = c.entrySet().iterator()
-      while (pt.hasNext) {
-        val e = pt.next()
-        if (e.getKey._1 eq session) {
-          try e.getValue.unpersist(blocking = false)
-          catch { case _: Throwable => () }
-          pt.remove()
-        }
-      }
-    }
-    val tt = termStatsCache.entrySet().iterator()
-    while (tt.hasNext) {
-      val e = tt.next()
-      if (e.getKey._1 eq session) {
-        try e.getValue.cw.unpersist(blocking = false)
-        catch { case _: Throwable => () }
-        tt.remove()
-      }
-    }
-    // the skew-probe results too (round-13 ADVICE): the map strongly
-    // retains SparkSession keys for the JVM lifetime otherwise
-    val st = skewProbeCache.entrySet().iterator()
-    while (st.hasNext) {
-      if (st.next().getKey._1 eq session) st.remove()
-    }
-    // the x16 head-count gate values ride the stats pins' lifecycle
-    val hc = headCountCache.entrySet().iterator()
-    while (hc.hasNext) {
-      if (hc.next().getKey._1 eq session) hc.remove()
-    }
-  }
+  /** Forwards to [[graft.core.Pins.evict]] (see `Dedup.evictCaches`). */
+  def evictCaches(session: SparkSession, dir: Option[String] = None): Unit =
+    Pins.evict(session, dir)
 
   /** The j11 retrieval plan (see the scale notes on the `j11_bm25`
     * queries-map entry — this is that plan verbatim, factored out so
@@ -740,24 +621,8 @@ object TextAnalytics extends QueryModule {
         // skew absorbed by the same salting the exact path uses.
         val maxHead = sess.conf.getOption("graft.x16.broadcastMaxRows")
           .map(_.toLong).getOrElse(2000000L)
-        // NOTE: on a cache miss this runs a Spark job (head.count())
-        // EAGERLY, during DataFrame construction — the gate needs the
-        // number before the plan can be chosen. The count runs OUTSIDE
-        // the map's bin lock (round-20, r19 ADVICE: computeIfAbsent
-        // held the ConcurrentHashMap bin lock for the whole job,
-        // blocking any concurrent caller hashing to the same bin); a
-        // racing duplicate count is idempotent and putIfAbsent keeps
-        // the first value, so the gate stays deterministic.
-        val hcKey = (sess, planDigest(docs), minDf)
-        val headRows: Long = headCountCache.get(hcKey) match {
-          case cached: java.lang.Long => cached.longValue()
-          case null =>
-            val n = java.lang.Long.valueOf(head.count())
-            val prev = headCountCache.putIfAbsent(hcKey, n)
-            (if (prev != null) prev else n).longValue()
-        }
         val withHead =
-          if (headRows <= maxHead)
+          if (headRows(docs, minDf, head) <= maxHead)
             db.join(broadcast(head), Seq("w1", "w2"), "left")
           else if (salted)
             graft.operators.KeyedOps.saltedStatsJoin(db, head,
@@ -2106,79 +1971,65 @@ object TextAnalytics extends QueryModule {
     },
   )
 
+  /** The space-padded tokenized corpus (doc_id, n_raw, t), PINNED once
+    * per (session, corpus plan) (round 13, r11 verdict item 6): every BPE
+    * merge iteration runs a full pair-count pass and previously
+    * re-tokenized the corpus from parquet each time (iteration i
+    * replayed i-1 rewrites ON TOP of the scan — 2 corpus passes per
+    * iteration); now iteration 1's count materializes the pinned frame
+    * and every later pass — pair counts AND the x32 encode — reads the
+    * pinned blocks through a cheap literal-replace chain. O(corpus)
+    * storage: the standard iterative-training trade (same doctrine as
+    * the k-means assignment pin).
+    */
+  private[graft] def bpeCorpus(docs: DataFrame): DataFrame =
+    Pins.frame("bpe_corpus", docs.sparkSession, None, Pins.planDigest(docs)) {
+      import docs.sparkSession.implicits._
+      docs.select($"doc_id", TextFunctions.wsTokens($"text").as("ts0"))
+        .select($"doc_id", size($"ts0").as("n_raw"),
+          concat(lit(" "), concat_ws(" ", $"ts0"), lit(" ")).as("t"))
+    }
+
   /** x31/x32 shared core — `iters` BPE merge-learning iterations over an
     * arbitrary (doc_id, text) frame (see the x31 scale notes in the
     * queries map). Returns both the elected merge table AND the final
     * rewritten space-padded corpus (doc_id, n_raw, t), so the encode
     * side (x32) is the training loop's by-product, never a replay.
     * `n_raw` rides the corpus projections from the start — the final
-    * stats need no corpus-sized join-back.
+    * stats need no corpus-sized join-back. Pinned per (session, corpus
+    * plan, iters): x31 (merge table) and x32 (encode) share one loop.
     */
-  /** Round-13 session pin: ONE loop per (session, corpus plan, iters) —
-    * x31 (merge table) and x32 (encode) previously each ran the whole
-    * training loop; now the second consumer is free. The cache also
-    * holds the PINNED tokenized frame so [[evictCaches]] can release
-    * its blocks.
-    */
-  private val bpeCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int),
-    (Seq[(Int, String, String, Long, String)], DataFrame, DataFrame)]()
-
   private def bpeLoop(docs: DataFrame, iters: Int)
-      : (Seq[(Int, String, String, Long, String)], DataFrame) = {
-    val r = bpeCache.computeIfAbsent(
-      (docs.sparkSession, planDigest(docs), iters),
-      { _ => bpeLoopUncached(docs, iters) })
-    (r._1, r._2)
-  }
-
-  private def bpeLoopUncached(docs: DataFrame, iters: Int)
-      : (Seq[(Int, String, String, Long, String)], DataFrame, DataFrame) = {
-    val sess = docs.sparkSession
-    import sess.implicits._
-    val toks0 = docs.select($"doc_id",
-      TextFunctions.wsTokens($"text").as("ts0"))
-    // The space-padded tokenized corpus is persist(MEMORY_AND_DISK)-
-    // PINNED once (round 13, r11 verdict item 6): every merge iteration
-    // runs a full pair-count pass and previously re-tokenized the
-    // corpus from parquet each time (iteration i replayed i-1 rewrites
-    // ON TOP of the scan — 2 corpus passes per iteration); now
-    // iteration 1's count materializes the pinned frame and every later
-    // pass — pair counts AND the x32 encode — reads the pinned blocks
-    // through a cheap literal-replace chain. Pinning is O(corpus)
-    // MEMORY_AND_DISK storage: the standard iterative-training trade
-    // (same doctrine as the k-means assignment pin); long-lived
-    // sessions release it via [[evictCaches]]. persist, NOT
-    // localCheckpoint (round 14): lineage survives, so a lost
-    // executor's blocks recompute instead of failing the loop.
-    val pinned = toks0.select($"doc_id", size($"ts0").as("n_raw"),
-      concat(lit(" "), concat_ws(" ", $"ts0"), lit(" ")).as("t"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var cur = pinned
-    val rows = (1 to iters).map { it =>
-      // ts MUST be its own projection before the lambda references it
-      // (the x16 shape): element_at(<raw split expr>, i) inside the
-      // transform lambda re-tokenizes the whole string per element —
-      // O(len²) per row, measured 10× slower at sf0.1
-      val top = cur
-        .select(TextFunctions.wsTokens($"t").as("ts"))
-        .filter(size($"ts") >= 2)
-        .select(explode(
-          transform(sequence(lit(1), size($"ts") - 1),
-            i => struct(element_at($"ts", i).as("w1"),
-              element_at($"ts", i + 1).as("w2")))).as("b"))
-        .groupBy($"b.w1".as("w1"), $"b.w2".as("w2"))
-        .agg(count(lit(1)).as("n_pairs"))
-        .orderBy($"n_pairs".desc, $"w1".asc, $"w2".asc)
-        .limit(1).head() // 1-row collect: constant driver state
-      val (w1, w2, n) = (top.getString(0), top.getString(1), top.getLong(2))
-      cur = cur.select($"doc_id", $"n_raw",
-        call_function("replace", $"t",
-          lit(s" $w1 $w2 "), lit(s" ${w1}_$w2 ")).as("t"))
-      (it, w1, w2, n, s"${w1}_$w2")
+      : (Seq[(Int, String, String, Long, String)], DataFrame) =
+    Pins.get("bpe_loop", docs.sparkSession, None,
+        Pins.planDigest(docs) + ":" + iters) {
+      val sess = docs.sparkSession
+      import sess.implicits._
+      var cur = bpeCorpus(docs)
+      val rows = (1 to iters).map { it =>
+        // ts MUST be its own projection before the lambda references it
+        // (the x16 shape): element_at(<raw split expr>, i) inside the
+        // transform lambda re-tokenizes the whole string per element —
+        // O(len²) per row, measured 10× slower at sf0.1
+        val top = cur
+          .select(TextFunctions.wsTokens($"t").as("ts"))
+          .filter(size($"ts") >= 2)
+          .select(explode(
+            transform(sequence(lit(1), size($"ts") - 1),
+              i => struct(element_at($"ts", i).as("w1"),
+                element_at($"ts", i + 1).as("w2")))).as("b"))
+          .groupBy($"b.w1".as("w1"), $"b.w2".as("w2"))
+          .agg(count(lit(1)).as("n_pairs"))
+          .orderBy($"n_pairs".desc, $"w1".asc, $"w2".asc)
+          .limit(1).head() // 1-row collect: constant driver state
+        val (w1, w2, n) = (top.getString(0), top.getString(1), top.getLong(2))
+        cur = cur.select($"doc_id", $"n_raw",
+          call_function("replace", $"t",
+            lit(s" $w1 $w2 "), lit(s" ${w1}_$w2 ")).as("t"))
+        (it, w1, w2, n, s"${w1}_$w2")
+      }
+      (rows, cur)
     }
-    (rows, cur, pinned)
-  }
 
   /** x31 core — the elected merge table. Factored so PropertySpec can
     * replay the election and the merge rewrite on a planted corpus.

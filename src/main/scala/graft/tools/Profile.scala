@@ -40,11 +40,7 @@ object Profile {
       }
     names.foreach { q =>
       (1 to repeat).foreach { rep =>
-        if (evict && rep == 1) {
-          graft.queries.Dedup.evictCaches(spark)
-          graft.queries.Similarity.evictCaches(spark)
-          graft.queries.TextAnalytics.evictCaches(spark)
-        }
+        if (evict && rep == 1) graft.core.Pins.evict(spark)
         val stages = new java.util.concurrent.ConcurrentLinkedQueue[String]()
         val listener =
           if (rep == repeat &&

@@ -143,8 +143,7 @@ object ScaleFixture {
     * (punct/len over a doc-unique (punct, len) pair) makes the quality
     * double essentially unique per doc: distinct values grow ∝ docs,
     * which is exactly the state the exact percentile buffers and the
-    * approx sketch bounds. X25ApproxProbe prints the measured distinct
-    * count so the regime claim is a number, not an intention.
+    * approx sketch bounds.
     */
   def genDocumentsHighCard(spark: SparkSession, outDir: String,
       mult: Int): Unit = {
@@ -216,8 +215,7 @@ object ScaleFixture {
     if (mode == "all" || mode == "events") runEvents(spark, root, time)
     if (mode == "all" || mode == "skew") runSkew(spark, root, time)
     if (mode == "all" || mode == "x25") runX25(spark, root, time)
-    // generation-only: X25ApproxProbe measures these dirs (wall, peak
-    // task memory, distinct-quality count, shard disagreement vs bound)
+    // generation-only: the high-cardinality x25 fixture dirs
     if (mode == "x25hc") {
       genDocumentsHighCard(spark, s"$root/hc10", 10)
       genDocumentsHighCard(spark, s"$root/hc100", 100)
@@ -258,9 +256,7 @@ object ScaleFixture {
     // side of a pin consumer (d33/d35 ride the CC pin) measures warm
     // while the 100× side pays pair-gen + CC cold — a 19.6× phantom
     // slope that is measurement asymmetry, not scaling
-    graft.queries.Dedup.evictCaches(spark)
-    graft.queries.Similarity.evictCaches(spark)
-    graft.queries.TextAnalytics.evictCaches(spark)
+    graft.core.Pins.evict(spark)
     val t10 = queries.map(q => q -> time(q, tenX)).toMap
     val t100 = queries.map(q => q -> time(q, hundredX)).toMap
     queries.foreach { q =>
@@ -358,9 +354,7 @@ object ScaleFixture {
     genDocuments(spark, oneX, 1); genEmbeddings(spark, oneX, 1)
     genDocuments(spark, tenX, 10); genEmbeddings(spark, tenX, 10)
     queries.foreach(q => graft.SparkEntry.queries(q)(spark, oneX).count())
-    graft.queries.Dedup.evictCaches(spark)
-    graft.queries.Similarity.evictCaches(spark)
-    graft.queries.TextAnalytics.evictCaches(spark)
+    graft.core.Pins.evict(spark)
     val t1 = queries.map(q => q -> time(q, oneX)).toMap
     val t10 = queries.map(q => q -> time(q, tenX)).toMap
     queries.foreach { q =>
@@ -410,9 +404,8 @@ object ScaleFixture {
       "v20_cell_drift", "d35_dedup_audit", "x34_skew_report")
     // warmup (JIT + codegen) on the small scale, untimed
     queries.foreach(q => graft.SparkEntry.queries(q)(spark, oneX).count())
-    graft.queries.Dedup.evictCaches(spark) // warmup must not pre-pay 1x pair-gen
-    graft.queries.Similarity.evictCaches(spark) // nor the k-means assignment
-    graft.queries.TextAnalytics.evictCaches(spark) // nor the bm25 rank pin
+    // warmup must not pre-pay 1x pair-gen, k-means or bm25 pins
+    graft.core.Pins.evict(spark)
 
     // fixed order: d2 then d7 pay pair-gen; d10/d6 reuse the session
     // cache exactly as a curation run would — documented in SCALE.md

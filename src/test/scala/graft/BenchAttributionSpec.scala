@@ -32,11 +32,7 @@ class BenchAttributionSpec extends SparkSpec {
   private val family = Seq("d2_jaccard_pairs", "d6_dedup_corpus",
     "d10_best_keeper", "d7_dup_components")
 
-  private def evictAll(): Unit = {
-    graft.queries.Dedup.evictCaches(spark)
-    graft.queries.Similarity.evictCaches(spark)
-    graft.queries.TextAnalytics.evictCaches(spark)
-  }
+  private def evictAll(): Unit = graft.core.Pins.evict(spark)
 
   private def runPass(order: Seq[String]): (Double, Map[String, Long]) = {
     evictAll()

@@ -26,9 +26,7 @@ class PinRecoverySpec extends SparkSpec {
       .foreach(_.unpersist(blocking = true))
 
   test("posting/pair/assignment pins recompute after cached-block loss") {
-    graft.queries.TextAnalytics.evictCaches(spark)
-    graft.queries.Dedup.evictCaches(spark)
-    graft.queries.Similarity.evictCaches(spark)
+    graft.core.Pins.evict(spark)
 
     // materialize one pin per family through its public consumer
     val postings = SparkEntry.queries("x14_unigram_logprob")(spark, dir)
@@ -45,9 +43,7 @@ class PinRecoverySpec extends SparkSpec {
     assert(after === expected,
       "pins must recompute through lineage after block loss")
 
-    graft.queries.TextAnalytics.evictCaches(spark)
-    graft.queries.Dedup.evictCaches(spark)
-    graft.queries.Similarity.evictCaches(spark)
+    graft.core.Pins.evict(spark)
   }
 
   test("evictCaches releases the persisted blocks (Dataset.unpersist, not .rdd)") {
@@ -55,18 +51,68 @@ class PinRecoverySpec extends SparkSpec {
     // leaked the pinned blocks until session end. Dataset.storageLevel
     // is the public witness: persisted while pinned, NONE after evict.
     import org.apache.spark.storage.StorageLevel
-    graft.queries.TextAnalytics.evictCaches(spark)
+    import graft.core.Pins
+    import graft.queries.{Dedup, Similarity, TextAnalytics}
+    import spark.implicits._
+    def pinned(df: org.apache.spark.sql.DataFrame) =
+      df.storageLevel != StorageLevel.NONE
+    TextAnalytics.evictCaches(spark)
     val docs = graft.core.Tables.documents(spark, dir)
-    val pin = graft.queries.TextAnalytics.sharedPostings(docs)
-    val stats = graft.queries.TextAnalytics.sharedTermStats(docs)._1
+    val pin = TextAnalytics.sharedPostings(docs)
+    val stats = TextAnalytics.sharedTermStats(docs)._1
     pin.count(); stats.count()
-    assert(pin.storageLevel != StorageLevel.NONE, "pin must be persisted")
-    assert(stats.storageLevel != StorageLevel.NONE, "stats must be persisted")
-    graft.queries.TextAnalytics.evictCaches(spark)
-    assert(pin.storageLevel == StorageLevel.NONE,
-      "eviction must release the posting pin's blocks")
-    assert(stats.storageLevel == StorageLevel.NONE,
-      "eviction must release the term-stats pin's blocks")
+    assert(pinned(pin), "pin must be persisted")
+    assert(pinned(stats), "stats must be persisted")
+    TextAnalytics.evictCaches(spark)
+    assert(!pinned(pin), "eviction must release the posting pin's blocks")
+    assert(!pinned(stats), "eviction must release the term-stats pin's blocks")
+
+    // evict(s, Some(d)): d's pins and the digest-keyed pins go; another
+    // dir's and another session's stay
+    val otherDir = new java.io.File(dir).getParent + "/sf0.01"
+    val other = spark.newSession()
+    val dirPin = Dedup.sharedSimhashGroupPairs(spark, dir)
+    val otherDirPin = Dedup.sharedSimhashGroupPairs(spark, otherDir)
+    val otherSessionPin =
+      Pins.frame("pin_recovery_probe", other, Some(dir))(other.range(7).toDF("id"))
+    val corpus = graft.core.Tables.embeddings(spark, dir)
+      .select($"vec_id", $"embedding")
+    Similarity.semanticDedupFrame(corpus, 3, 0.9).count()
+    TextAnalytics.bpeMerges(docs, 2)
+    val digestPins = Map(
+      "posting" -> TextAnalytics.sharedPostings(docs),
+      "term-stats" -> TextAnalytics.sharedTermStats(docs)._1,
+      "BPE corpus" -> TextAnalytics.bpeCorpus(docs),
+      "k-means assignment" -> Similarity.pinnedAssign(corpus, 3),
+      "d5 block" -> Similarity.embedBlocks(corpus, 2))
+    (digestPins.values ++ Seq(dirPin, otherDirPin)).foreach(_.count())
+    digestPins.foreach { case (name, df) => assert(pinned(df), s"$name pin") }
+    // value pins: pinned, so a changed input is not seen until eviction
+    val tag = "pin-recovery-" + java.util.UUID.randomUUID()
+    val hot = Seq(1, 1, 1, 2).toDF("k")
+    val flat = Seq(1, 2, 3, 4).toDF("k")
+    assert(TextAnalytics.hotKeyShare(spark, tag, hot) == 0.75)
+    assert(TextAnalytics.hotKeyShare(spark, tag, flat) == 0.75)
+    assert(TextAnalytics.headRows(docs, 2L, spark.range(3).toDF()) == 3L)
+    assert(TextAnalytics.headRows(docs, 2L, spark.range(5).toDF()) == 3L)
+
+    Pins.evict(spark, Some(dir))
+    assert(!pinned(dirPin), "the dir's own pin must be released")
+    digestPins.foreach { case (name, df) =>
+      assert(!pinned(df), s"the dir-less $name pin must be released")
+    }
+    assert(pinned(otherDirPin), "another dir's pin must stay")
+    assert(Dedup.sharedSimhashGroupPairs(spark, otherDir) eq otherDirPin)
+    assert(pinned(otherSessionPin), "another session's pin must stay")
+    assert(TextAnalytics.hotKeyShare(spark, tag, flat) == 0.25,
+      "the skew probe must recompute after eviction")
+    assert(TextAnalytics.headRows(docs, 2L, spark.range(5).toDF()) == 5L,
+      "the x16 head count must recompute after eviction")
+
+    Pins.evict(spark)
+    assert(!pinned(otherDirPin), "evict(s) must release every dir's pins")
+    Pins.evict(other)
+    assert(!pinned(otherSessionPin))
   }
 
   test("pin build plans: one corpus scan into the doc_id-partitioned agg; " +
