@@ -13,13 +13,16 @@ object GraftSession {
   /** `rocksDbState = true` switches streaming state to the RocksDB
     * provider — the production choice once per-key state exceeds heap
     * (bounded memory, incremental checkpoints). Semantics identical;
-    * `StreamOpsSpec` exercises both providers.
+    * `StreamOpsSpec` exercises both providers. `master` overrides the
+    * default `local[cores]` (a cluster submit); `cores` still sizes the
+    * shuffle partitions.
     */
   def local(cores: Int = 32, appName: String = "graft",
-            rocksDbState: Boolean = false): SparkSession = {
+            rocksDbState: Boolean = false,
+            master: Option[String] = None): SparkSession = {
     val builder = SparkSession
       .builder()
-      .master(s"local[$cores]")
+      .master(master.getOrElse(s"local[$cores]"))
       .appName(appName)
     if (rocksDbState) builder.config(
       "spark.sql.streaming.stateStore.providerClass",

@@ -4,8 +4,8 @@ package graft.core
   * guard (`graft.d4.maxPairs`, `graft.d5.maxVectors`) declines to
   * launch work whose output/compute volume exceeds its configured cap.
   *
-  * A distinct type, not a message convention: tooling (Bench's record
-  * writer) must report "refused by design" separately from "crashed" —
+  * A distinct type, not a message convention: tooling (`graft.Verify`'s
+  * verify.json) must report "refused by design" separately from "crashed" —
   * BENCH_100X.json listed d4_simhash_pairs' by-design guard trip under
   * `"failed"`, which driver tooling cannot distinguish from a broken
   * query (round-18 verdict item 1). Extends IllegalArgumentException so

@@ -44,19 +44,14 @@ object Opts {
       s"$msg\nusage: $name ${(req ++ opt).mkString(" ")}")
   }
 
-  /** Shared session factory for every main: local by default (tests,
-    * laptops), master overridable for cluster submit; shuffle parallelism
-    * sized by SPARK_GRAFT_CPUS like Verify/Bench.
+  /** Every main's session: `GraftSession.local`, local by default
+    * (tests, laptops), `SPARK_MASTER` overrides the master for a cluster
+    * submit; shuffle parallelism sized by SPARK_GRAFT_CPUS like Verify.
     */
-  def session(appName: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-  }
+  def session(appName: String): SparkSession =
+    graft.core.GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, appName,
+      master = sys.env.get("SPARK_MASTER"))
 }
 
 /** WordCount (`WordCount.scala:36-67`): text file → "word: n" lines. */

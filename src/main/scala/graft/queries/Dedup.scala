@@ -959,7 +959,7 @@ object Dedup extends QueryModule {
       // The group-pair frame is the SESSION PIN (round 18 — was a fresh
       // localCheckpoint per invocation): the estimate agg and the
       // expansion both read it, so the guard never doubles the band-join
-      // cost, repeated invocations (Bench reps, d4_group_stats) reuse
+      // cost, repeated invocations (benchmark passes, d4_group_stats) reuse
       // the same blocks, and persist keeps lineage so a lost executor
       // recomputes instead of failing (pin doctrine, PinRecoverySpec).
       // Its row count is distinct-hash pairs (collision-bounded), NOT
@@ -1897,7 +1897,7 @@ object Dedup extends QueryModule {
     * expansion and d4_group_stats (round 18, r17 ADVICE): ONE
     * persist(MEMORY_AND_DISK) per (session, dir) — NOT a fresh
     * localCheckpoint per invocation, which (a) accumulated
-    * GC-reclaimed-only checkpoint blocks across Bench reps and
+    * GC-reclaimed-only checkpoint blocks across repeated runs and
     * plan-only consumers, and (b) broke the pin doctrine: a lost
     * executor's non-replicated checkpoint blocks fail the query, while
     * a persisted frame keeps lineage and recomputes (PinRecoverySpec).

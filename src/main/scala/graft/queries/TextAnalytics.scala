@@ -394,8 +394,8 @@ object TextAnalytics extends QueryModule {
 
   /** Counted x16 head sizes, pinned per (session, corpus plan, minDf):
     * the broadcast-gate count is a pure function of the pinned stats
-    * frame and minDf, so repeated invocations (Bench reps, the reps=2
-    * canary) must not re-pay the count job (round-19 review). On a miss
+    * frame and minDf, so repeated invocations (benchmark passes, family
+    * consumers) must not re-pay the count job (round-19 review). On a miss
     * the count runs EAGERLY, during DataFrame construction — the gate
     * needs the number before the plan can be chosen.
     */

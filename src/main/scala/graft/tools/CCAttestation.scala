@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Engine half of the CC family's 100× attestation (round 19, r18
@@ -35,14 +35,8 @@ import org.apache.spark.sql.functions._
 object CCAttestation {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt, "graft-ccattest")
 
     import graft.queries.Dedup
     def dump(name: String, df: DataFrame): Unit = {

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** d5_embed_neardup slice-parity dump — the D4SliceProof convention
@@ -19,14 +18,8 @@ object D5SliceProof {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     val mod = if (args.length > 2) args(2).toLong else 10L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "graft-d5-slice")
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.nonEmpty)
       .foreach { kv =>
         val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v)

@@ -1,5 +1,7 @@
 package graft.tools
 
+import graft.core.GraftSession
+import graft.queries.TextAnalytics
 import org.apache.spark.sql.SparkSession
 
 /** Scaling-evidence fixture + probe (round-6 verdict item 3): the sf1
@@ -181,238 +183,162 @@ object ScaleFixture {
       .write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
   }
 
-  /** Generates both scales then times the scale-sensitive query family
-    * on each: the dedup pipeline (d2 pair-gen, d6 materialization, d7
-    * components, d10 keeper), x7 (vocab-bounded PMI shuffle), v6
-    * (k-means over embeddings). Prints one `scale,<query>,<1x sec>,
-    * <10x sec>,<ratio>` line per query — the SCALE.md evidence.
+  /** Generates both scales of a fixture, then prints one slope row per
+    * query: `<label>,<query>,<small sec>,<big sec>,<ratio>` — the
+    * SCALE.md evidence. Every timing writes the query's whole result to
+    * Spark's `noop` sink (see [[slope]]).
     *
     * Usage: runMain graft.tools.ScaleFixture [root] [mode]
-    * mode ∈ all | core (docs/embeddings families) | events (the
-    * events-table family, round-10 verdict item 3) | skew (x14/x16
-    * default-vs-salted on the hot-context corpus, verdict item 1).
+    * mode ∈ all | core (docs/embeddings families, 1× vs 10×) | events
+    * (the events-table family) | skew (x14/x16 default-vs-salted on the
+    * hot-context corpus) | x25 (exact vs approx boundaries) | decade2 /
+    * edecade2 (documents / events at 10× vs 100×) | x25hc (generation
+    * only) | q:<name>,<name>… (the named document-family queries, 1× vs
+    * 10×).
     */
   def main(args: Array[String]): Unit = {
     val root = if (args.nonEmpty) args(0) else "/root/repo/.scale"
     val mode = if (args.length > 1) args(1) else "all"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "8g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def time(q: String, dir: String): Double = {
-      val t0 = System.nanoTime()
-      graft.SparkEntry.queries(q)(spark, dir).count()
-      (System.nanoTime() - t0) / 1e9
+    val spark = GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "graft-scale")
+    def docsAndEmbeddings(dir: String, mult: Int): String = {
+      genDocuments(spark, dir, mult); genEmbeddings(spark, dir, mult); dir
+    }
+    def events(dir: String, mult: Int): String = {
+      genEvents(spark, dir, mult); dir
+    }
+    def docs(dir: String, mult: Int): String = {
+      genDocuments(spark, dir, mult); dir
     }
 
-    if (mode == "all" || mode == "core") runCore(spark, root, time)
-    if (mode == "all" || mode == "events") runEvents(spark, root, time)
-    if (mode == "all" || mode == "skew") runSkew(spark, root, time)
-    if (mode == "all" || mode == "x25") runX25(spark, root, time)
+    if (mode == "all" || mode == "core")
+      slope(spark, "scale", coreQueries,
+        docsAndEmbeddings(s"$root/x1", 1), docsAndEmbeddings(s"$root/x10", 10))
+    if (mode == "all" || mode == "events")
+      slope(spark, "scale", eventQueries,
+        events(s"$root/e1", 1), events(s"$root/e10", 10))
+    if (mode == "all" || mode == "skew") {
+      val (s1, s10) = (s"$root/s1", s"$root/s10")
+      genDocumentsSkew(spark, s1, 1); genDocumentsSkew(spark, s10, 10)
+      for (shape <- Seq("default", "salted")) {
+        spark.conf.set(TextAnalytics.SaltedSkewKey, (shape == "salted").toString)
+        slope(spark, s"skew-$shape",
+          Seq("x14_unigram_logprob", "x16_bigram_logprob"), s1, s10)
+      }
+      spark.conf.unset(TextAnalytics.SaltedSkewKey)
+    }
+    // x25 exact vs percentile_approx boundaries: the exact aggregate's
+    // state grows with distinct quality values; the sketch should hold ~1×
+    if (mode == "all" || mode == "x25") {
+      val (x1, x10) = (docs(s"$root/x1", 1), docs(s"$root/x10", 10))
+      for (shape <- Seq("exact", "approx")) {
+        spark.conf.set(TextAnalytics.ApproxBoundariesKey,
+          (shape == "approx").toString)
+        slope(spark, s"x25-$shape", Seq("x25_shard_manifest"), x1, x10)
+      }
+      spark.conf.unset(TextAnalytics.ApproxBoundariesKey)
+    }
     // generation-only: the high-cardinality x25 fixture dirs
     if (mode == "x25hc") {
       genDocumentsHighCard(spark, s"$root/hc10", 10)
       genDocumentsHighCard(spark, s"$root/hc100", 100)
       println("x25hc fixtures written: hc10 (50k docs), hc100 (500k docs)")
     }
-    if (mode == "decade2") runDecade2(spark, root, time)
-    if (mode == "edecade2") runEventsDecade2(spark, root, time)
-    // "q:<name>,<name>…" — slope just the named document-family queries
-    // (targeted reruns for newly-added ops without the full core sweep)
-    if (mode.startsWith("q:")) runNamed(spark, root, time,
-      mode.stripPrefix("q:").split(",").toSeq)
+    // second decade: the steepest first-decade slopes at 10× vs 100×
+    if (mode == "decade2")
+      slope(spark, "decade2", decade2Queries,
+        docs(s"$root/x10", 10), docs(s"$root/x100", 100))
+    if (mode == "edecade2")
+      slope(spark, "edecade2", Seq("w1_tumbling", "a9_session_marker",
+        "j8_range_outage", "j6w_windowed_anti", "p22_sessionize",
+        "p23_retention_cohorts"),
+        events(s"$root/e10", 10), events(s"$root/e100", 100))
+    if (mode.startsWith("q:"))
+      slope(spark, "scale", mode.stripPrefix("q:").split(",").toSeq,
+        docsAndEmbeddings(s"$root/x1", 1), docsAndEmbeddings(s"$root/x10", 10))
     spark.stop()
   }
 
-  /** Second-decade spot run (r10 verdict item 8): the steepest-slope
-    * document queries at 10× vs 100× (50k → 500k docs) — the 12×-linear
-    * bar had only ever been tested one decade out.
+  /** Seconds to compute `q`'s whole result on `dir`: the output goes to
+    * Spark's `noop` sink, so every projection and Window runs — timing
+    * a row count would let Catalyst prune them.
     */
-  private def runDecade2(spark: SparkSession, root: String,
-      time: (String, String) => Double): Unit = {
-    val tenX = s"$root/x10"
-    val hundredX = s"$root/x100"
-    genDocuments(spark, tenX, 10)
-    genDocuments(spark, hundredX, 100)
-    val queries = Seq("x14_unigram_logprob", "x16_bigram_logprob",
-      "d12_ngram_novelty",
-      // round-11 continuation: the current steepest first-decade slopes
-      "x17_hash_embedding", "x25_shard_manifest", "x20_dsir_weights",
-      "d18_incremental_dedup", "x29_interp_lm",
-      // session 2: x31 is the steepest first-decade slope (5.9× — four
-      // corpus passes by construction); x32 rides the same loop
-      "x31_bpe_merges", "x32_bpe_encode",
-      // session-2 ops with non-trivial machinery behind them: the CC
-      // pin consumers and the skew diagnostic
-      "d33_effective_tokens", "d35_dedup_audit", "x34_skew_report")
-    queries.foreach(q => graft.SparkEntry.queries(q)(spark, tenX).count())
-    // evict after warmup (the runCore convention): otherwise the 10×
-    // side of a pin consumer (d33/d35 ride the CC pin) measures warm
-    // while the 100× side pays pair-gen + CC cold — a 19.6× phantom
-    // slope that is measurement asymmetry, not scaling
+  private def time(spark: SparkSession, q: String, dir: String): Double = {
+    val t0 = System.nanoTime()
+    graft.SparkEntry.queries(q)(spark, dir)
+      .write.format("noop").mode("overwrite").save()
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  /** One slope row per query. Warms up on `small` (JIT + codegen,
+    * untimed), then evicts every pin the warm-up built, so the `small`
+    * side builds its pins cold exactly like the `big` side — a warm
+    * small side would show a phantom slope that is measurement
+    * asymmetry, not scaling. Queries run in the given fixed order on
+    * each side: pin consumers reuse the pins their family's first query
+    * built, as a curation run would.
+    */
+  private def slope(spark: SparkSession, label: String, queries: Seq[String],
+      small: String, big: String): Unit = {
+    queries.foreach(time(spark, _, small))
     graft.core.Pins.evict(spark)
-    val t10 = queries.map(q => q -> time(q, tenX)).toMap
-    val t100 = queries.map(q => q -> time(q, hundredX)).toMap
-    queries.foreach { q =>
-      println(f"decade2,$q,${t10(q)}%.2f,${t100(q)}%.2f,${t100(q) / t10(q)}%.1f")
+    val ts = queries.map(time(spark, _, small))
+    val tb = queries.map(time(spark, _, big))
+    queries.lazyZip(ts).lazyZip(tb).foreach { (q, s, b) =>
+      println(f"$label,$q,$s%.2f,$b%.2f,${b / s}%.1f")
     }
   }
 
-  /** x25 exact vs percentile_approx boundary slope (round-10 verdict
-    * item 2): the exact aggregate's state grows with distinct quality
-    * values; the sketch path should hold ~1×.
-    */
-  private def runX25(spark: SparkSession, root: String,
-      time: (String, String) => Double): Unit = {
-    val oneX = s"$root/x1"
-    val tenX = s"$root/x10"
-    genDocuments(spark, oneX, 1)
-    genDocuments(spark, tenX, 10)
-    for (shape <- Seq("exact", "approx")) {
-      spark.conf.set(graft.queries.TextAnalytics.ApproxBoundariesKey,
-        (shape == "approx").toString)
-      graft.SparkEntry.queries("x25_shard_manifest")(spark, oneX).count()
-      val t1 = time("x25_shard_manifest", oneX)
-      val t10 = time("x25_shard_manifest", tenX)
-      println(f"x25,$shape,$t1%.2f,$t10%.2f,${t10 / t1}%.1f")
-    }
-    spark.conf.unset(graft.queries.TextAnalytics.ApproxBoundariesKey)
-  }
+  private val eventQueries = Seq("w1_tumbling", "w2_sliding", "w3_session",
+    "a9_session_marker", "a18_trailing_hour", "j7_asof_attribution",
+    "j8_range_outage", "p22_sessionize", "j6w_windowed_anti",
+    "p23_retention_cohorts")
 
-  /** The events-table family (round-10 verdict item 3): windowed aggs,
-    * sessionization, as-of/range joins, and the j6w windowed anti-join —
-    * the queries the docs/embeddings fixture could not see.
-    */
-  /** Events-family second decade (session 2): 10× vs 100× = 1M → 10M
-    * events, 15k → 150k users — the events queries' 12×-linear bar had
-    * only ever been tested one decade out (the documents family got its
-    * second decade in `runDecade2`).
-    */
-  private def runEventsDecade2(spark: SparkSession, root: String,
-      time: (String, String) => Double): Unit = {
-    val e10 = s"$root/e10"
-    val e100 = s"$root/e100"
-    genEvents(spark, e10, 10); genEvents(spark, e100, 100)
-    val queries = Seq("w1_tumbling", "a9_session_marker", "j8_range_outage",
-      "j6w_windowed_anti", "p22_sessionize", "p23_retention_cohorts")
-    queries.foreach(q => graft.SparkEntry.queries(q)(spark, e10).count())
-    val t10 = queries.map(q => q -> time(q, e10)).toMap
-    val t100 = queries.map(q => q -> time(q, e100)).toMap
-    queries.foreach { q =>
-      println(
-        f"edecade2,$q,${t10(q)}%.2f,${t100(q)}%.2f,${t100(q) / t10(q)}%.1f")
-    }
-  }
+  private val decade2Queries = Seq("x14_unigram_logprob",
+    "x16_bigram_logprob", "d12_ngram_novelty",
+    // round-11 continuation: the current steepest first-decade slopes
+    "x17_hash_embedding", "x25_shard_manifest", "x20_dsir_weights",
+    "d18_incremental_dedup", "x29_interp_lm",
+    // session 2: x31 is the steepest first-decade slope (5.9× — four
+    // corpus passes by construction); x32 rides the same loop
+    "x31_bpe_merges", "x32_bpe_encode",
+    // session-2 ops with non-trivial machinery behind them: the CC
+    // pin consumers and the skew diagnostic
+    "d33_effective_tokens", "d35_dedup_audit", "x34_skew_report")
 
-  private def runEvents(spark: SparkSession, root: String,
-      time: (String, String) => Double): Unit = {
-    val e1 = s"$root/e1"
-    val e10 = s"$root/e10"
-    genEvents(spark, e1, 1); genEvents(spark, e10, 10)
-    val queries = Seq("w1_tumbling", "w2_sliding", "w3_session",
-      "a9_session_marker", "a18_trailing_hour", "j7_asof_attribution",
-      "j8_range_outage", "p22_sessionize", "j6w_windowed_anti",
-      "p23_retention_cohorts")
-    queries.foreach(q => graft.SparkEntry.queries(q)(spark, e1).count())
-    val t1 = queries.map(q => q -> time(q, e1)).toMap
-    val t10 = queries.map(q => q -> time(q, e10)).toMap
-    queries.foreach { q =>
-      println(f"scale,$q,${t1(q)}%.2f,${t10(q)}%.2f,${t10(q) / t1(q)}%.1f")
-    }
-  }
-
-  /** x14/x16 on the hot-context corpus, default vs salted shape. */
-  private def runSkew(spark: SparkSession, root: String,
-      time: (String, String) => Double): Unit = {
-    val s1 = s"$root/s1"
-    val s10 = s"$root/s10"
-    genDocumentsSkew(spark, s1, 1); genDocumentsSkew(spark, s10, 10)
-    val queries = Seq("x14_unigram_logprob", "x16_bigram_logprob")
-    for (shape <- Seq("default", "salted")) {
-      spark.conf.set(graft.queries.TextAnalytics.SaltedSkewKey,
-        (shape == "salted").toString)
-      queries.foreach(q => graft.SparkEntry.queries(q)(spark, s1).count())
-      val t1 = queries.map(q => q -> time(q, s1)).toMap
-      val t10 = queries.map(q => q -> time(q, s10)).toMap
-      queries.foreach { q =>
-        println(f"skew,$q,$shape,${t1(q)}%.2f,${t10(q)}%.2f,${t10(q) / t1(q)}%.1f")
-      }
-    }
-    spark.conf.unset(graft.queries.TextAnalytics.SaltedSkewKey)
-  }
-
-  private def runNamed(spark: SparkSession, root: String,
-      time: (String, String) => Double, queries: Seq[String]): Unit = {
-    val oneX = s"$root/x1"
-    val tenX = s"$root/x10"
-    genDocuments(spark, oneX, 1); genEmbeddings(spark, oneX, 1)
-    genDocuments(spark, tenX, 10); genEmbeddings(spark, tenX, 10)
-    queries.foreach(q => graft.SparkEntry.queries(q)(spark, oneX).count())
-    graft.core.Pins.evict(spark)
-    val t1 = queries.map(q => q -> time(q, oneX)).toMap
-    val t10 = queries.map(q => q -> time(q, tenX)).toMap
-    queries.foreach { q =>
-      println(f"scale,$q,${t1(q)}%.2f,${t10(q)}%.2f,${t10(q) / t1(q)}%.1f")
-    }
-  }
-
-  private def runCore(spark: SparkSession, root: String,
-      time: (String, String) => Double): Unit = {
-    val oneX = s"$root/x1"
-    val tenX = s"$root/x10"
-    genDocuments(spark, oneX, 1); genEmbeddings(spark, oneX, 1)
-    genDocuments(spark, tenX, 10); genEmbeddings(spark, tenX, 10)
-
-    val queries = Seq("d2_jaccard_pairs", "d16_containment",
-      "d17_edit_verify", "d7_dup_components",
-      "d10_best_keeper", "d6_dedup_corpus", "x7_pmi_bigrams", "v6_kmeans",
-      "d12_ngram_novelty", "v10_sign_projection", "d13_chunk_dedup",
-      "d14_lsh_recall", "v12_knn_multiprobe", "v13_knn_pq_adc",
-      "v14_knn_ivf_adc", "p20_weighted_sample", "x13_source_divergence",
-      "x14_unigram_logprob", "d15_source_cap", "d18_incremental_dedup",
-      "x16_bigram_logprob", "x17_hash_embedding", "t6_cms_heavy_hitters",
-      "x18_hll_distinct",
-      // round-8 additions over documents/embeddings (the event-table
-      // family has its own section — runEvents — since round 11)
-      "x19_cdc_chunks", "d19_semantic_dedup", "x20_dsir_weights",
-      "j11_bm25", "d20_dup_pagerank", "d21_leakage_split",
-      "x21_temperature_mix", "x22_zipf_slope", "x23_hist_quantiles",
-      "x24_pii_scrub", "x25_shard_manifest", "d22_snapshot_diff",
-      "d23_source_overlap", "d24_normalized_dedup", "x26_gopher_rules",
-      "d25_substring_spans", "x27_quality_classifier",
-      "d26_lsh_dedup_components", "d27_lsh_keeper",
-      // round-11 retrieval additions
-      "v15_mmr_rerank", "j12_rrf_fusion",
-      // round-11 second batch: URL dedup, contamination report,
-      // positional phrase search, distributed classifier training
-      "d29_url_dedup", "d30_contamination_report", "j13_phrase_search",
-      "x28_classifier_train",
-      // round-11 third batch: hard negatives, interpolated LM, host filter
-      "v16_hard_negatives", "x29_interp_lm", "d31_host_filter",
-      "x30_dataset_card", "d32_dup_weights", "x31_bpe_merges", "v17_pq_train",
-      // round-11 fifth batch: cluster-balanced diversity sample,
-      // BPE encode (the x31-apply corpus pass), incremental IVF,
-      // dedup-aware token budget
-      "v18_cluster_sample", "x32_bpe_encode", "v19_ivf_increment",
-      "d33_effective_tokens", "x33_oov_rate", "d34_incremental_components",
-      "v20_cell_drift", "d35_dedup_audit", "x34_skew_report")
-    // warmup (JIT + codegen) on the small scale, untimed
-    queries.foreach(q => graft.SparkEntry.queries(q)(spark, oneX).count())
-    // warmup must not pre-pay 1x pair-gen, k-means or bm25 pins
-    graft.core.Pins.evict(spark)
-
-    // fixed order: d2 then d7 pay pair-gen; d10/d6 reuse the session
-    // cache exactly as a curation run would — documented in SCALE.md
-    val t1 = queries.map(q => q -> time(q, oneX)).toMap
-    val t10 = queries.map(q => q -> time(q, tenX)).toMap
-    queries.foreach { q =>
-      println(f"scale,$q,${t1(q)}%.2f,${t10(q)}%.2f,${t10(q) / t1(q)}%.1f")
-    }
-  }
+  // fixed order: d2 then d7 pay pair-gen; d10/d6 reuse the session pins
+  // exactly as a curation run would — documented in SCALE.md
+  private val coreQueries = Seq("d2_jaccard_pairs", "d16_containment",
+    "d17_edit_verify", "d7_dup_components",
+    "d10_best_keeper", "d6_dedup_corpus", "x7_pmi_bigrams", "v6_kmeans",
+    "d12_ngram_novelty", "v10_sign_projection", "d13_chunk_dedup",
+    "d14_lsh_recall", "v12_knn_multiprobe", "v13_knn_pq_adc",
+    "v14_knn_ivf_adc", "p20_weighted_sample", "x13_source_divergence",
+    "x14_unigram_logprob", "d15_source_cap", "d18_incremental_dedup",
+    "x16_bigram_logprob", "x17_hash_embedding", "t6_cms_heavy_hitters",
+    "x18_hll_distinct",
+    // round-8 additions over documents/embeddings (the event-table
+    // family is `eventQueries` since round 11)
+    "x19_cdc_chunks", "d19_semantic_dedup", "x20_dsir_weights",
+    "j11_bm25", "d20_dup_pagerank", "d21_leakage_split",
+    "x21_temperature_mix", "x22_zipf_slope", "x23_hist_quantiles",
+    "x24_pii_scrub", "x25_shard_manifest", "d22_snapshot_diff",
+    "d23_source_overlap", "d24_normalized_dedup", "x26_gopher_rules",
+    "d25_substring_spans", "x27_quality_classifier",
+    "d26_lsh_dedup_components", "d27_lsh_keeper",
+    // round-11 retrieval additions
+    "v15_mmr_rerank", "j12_rrf_fusion",
+    // round-11 second batch: URL dedup, contamination report,
+    // positional phrase search, distributed classifier training
+    "d29_url_dedup", "d30_contamination_report", "j13_phrase_search",
+    "x28_classifier_train",
+    // round-11 third batch: hard negatives, interpolated LM, host filter
+    "v16_hard_negatives", "x29_interp_lm", "d31_host_filter",
+    "x30_dataset_card", "d32_dup_weights", "x31_bpe_merges", "v17_pq_train",
+    // round-11 fifth batch: cluster-balanced diversity sample,
+    // BPE encode (the x31-apply corpus pass), incremental IVF,
+    // dedup-aware token budget
+    "v18_cluster_sample", "x32_bpe_encode", "v19_ivf_increment",
+    "d33_effective_tokens", "x33_oov_rate", "d34_incremental_components",
+    "v20_cell_drift", "d35_dedup_audit", "x34_skew_report")
 }

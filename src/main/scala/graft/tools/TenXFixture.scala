@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Whole-registry 10× fixture (round-15 verdict item 2): replicates the
@@ -31,15 +31,8 @@ object TenXFixture {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = if (args.length > 1) args(1) else "/root/repo/.scale10"
     val mult = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.core.GraftSession.local(cpus, "graft-tenx")
 
     def tbl(name: String): DataFrame =
       spark.read.parquet(s"$src/$name.parquet")
@@ -58,7 +51,7 @@ object TenXFixture {
     val vecB = base(tbl("embeddings"), "vec_id")
 
     def write(name: String, df: DataFrame): Unit = {
-      df.repartition(cpus.toInt).write.mode("overwrite")
+      df.repartition(cpus).write.mode("overwrite")
         .parquet(s"$out/$name.parquet")
       println(s"[10x] $name: ${spark.read.parquet(s"$out/$name.parquet").count()} rows")
     }

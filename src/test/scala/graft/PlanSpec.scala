@@ -834,4 +834,44 @@ class PlanSpec extends SparkSpec {
       s"memberships ride the band lists — no join back:\n$shown")
     graft.queries.Dedup.evictCaches(spark, Some(dir))
   }
+
+  test("whole-result guard: a noop write executes a18's Window, count() " +
+      "prunes it") {
+    // Why no timing path may use count(): Catalyst prunes every column a
+    // row count does not need, and a18's trailing-hour Window with them,
+    // so a count() time measures less than the query computes. The noop
+    // sink consumes every column; its executed plan is captured the way
+    // a tracer sees it, from a QueryExecutionListener.
+    import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.datasources.v2.V2TableWriteExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val writes = new LinkedBlockingQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+                             durationNs: Long): Unit =
+        qe.executedPlan match {
+          case w: V2TableWriteExec => writes.put(w)
+          case _ =>
+        }
+      override def onFailure(funcName: String, qe: QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    def windows(p: SparkPlan): Int =
+      graft.core.PlanWalk.nodes(p).count(_.isInstanceOf[WindowExec])
+    val a18 = SparkEntry.queries("a18_trailing_hour")
+    spark.listenerManager.register(listener)
+    val written =
+      try {
+        a18(spark, dir).write.format("noop").mode("overwrite").save()
+        writes.poll(60, TimeUnit.SECONDS)
+      } finally spark.listenerManager.unregister(listener)
+    assert(written != null, "no executed plan captured from the noop write")
+    assert(windows(written) > 0,
+      s"the noop write must execute a18's Window:\n$written")
+    val counted = a18(spark, dir).groupBy().count().queryExecution.executedPlan
+    assert(windows(counted) == 0,
+      s"count() is expected to prune a18's Window:\n$counted")
+  }
 }

@@ -8,6 +8,12 @@ from <outDir>/oracle_sql.json in DuckDB with the sf tables registered as
 views, and compares: schema (column names, sorted), row count, and a hash
 of the value matrix with columns sorted by name and rows sorted by all
 columns (order-insensitive compare, like the driver).
+
+Every oracle_sql.json name is accounted for. A name that graft.Verify's
+<outDir>/verify.json lists under "refused" (a capacity guard's designed
+refusal) prints REFUSED and is counted apart; one it lists under "failed",
+or one with no result dir, prints FAIL with the recorded cause. Exit 1 on
+any FAIL.
 """
 import sys, os, json, glob
 import duckdb
@@ -51,13 +57,27 @@ def main():
         elif os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-    n_pass = n_fail = n_skip = 0
-    for d in sorted(glob.glob(f"{out_dir}/*")):
-        if not os.path.isdir(d):
-            continue
-        name = os.path.basename(d)
+    rec_path = f"{out_dir}/verify.json"
+    rec = json.load(open(rec_path)) if os.path.exists(rec_path) else {}
+    failed, refused = rec.get("failed", {}), rec.get("refused", {})
+    dirs = {os.path.basename(d) for d in glob.glob(f"{out_dir}/*")
+            if os.path.isdir(d)}
+    n_pass = n_fail = n_skip = n_refused = 0
+    for name in sorted(dirs | set(oracle) | set(failed) | set(refused)):
         if name in skip or (only and name not in only):
             continue
+        # a recorded outcome outranks a result dir, which may be stale
+        if name in refused:
+            print(f"REFUSED {name:26s} {refused[name]}")
+            n_refused += 1
+            continue
+        if name in failed or name not in dirs:
+            cause = failed.get(name) or (
+                "no result dir" if rec else f"no result dir (no {rec_path})")
+            print(f"FAIL  {name:28s} {cause}")
+            n_fail += 1
+            continue
+        d = f"{out_dir}/{name}"
         spark_df = pd.concat(
             [pd.read_parquet(f) for f in sorted(glob.glob(f"{d}/*.parquet"))],
             ignore_index=True)
@@ -91,7 +111,8 @@ def main():
                 i = neq[c].idxmax()
                 print(f"      row {i} col {c}: spark={a[c][i]!r} duck={b[c][i]!r}")
             n_fail += 1
-    print(f"\n{n_pass} pass, {n_fail} fail, {n_skip} rows-only")
+    print(f"\n{n_pass} pass, {n_fail} fail, {n_refused} refused, "
+          f"{n_skip} rows-only")
     sys.exit(1 if n_fail else 0)
 
 

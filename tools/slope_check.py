@@ -1,12 +1,14 @@
 #!/usr/bin/env python3
-"""Whole-suite slope table (round-15 verdict item 2): compares two
-graft.Bench JSON records — the sf0.1 suite and the 10x fixture suite —
-and prints per-family totals plus every query whose 10x/1x ratio
-exceeds the linear bar (default 12x, the SCALE.md convention: linear
-growth + constant-factor room; queries under 0.3 s at 1x are reported
-but not flagged, their ratios are stage-floor noise).
+"""Whole-suite slope table: compares two graft.Verify records
+(<outDir>/verify.json) — one run over the sf0.1 tables and one over the
+10x fixture (graft.tools.TenXFixture) — and prints per-family totals plus
+every query whose 10x/1x ratio exceeds the linear bar (default 12x, the
+SCALE.md convention: linear growth + constant-factor room; queries under
+0.3 s at 1x are reported but not flagged, their ratios are stage-floor
+noise). Verify times each query writing its whole result, so the ratios
+cover every operator the query computes.
 
-Usage: slope_check.py <bench_1x.json> <bench_10x.json> [bar]
+Usage: slope_check.py <verify_1x.json> <verify_10x.json> [bar]
 """
 import json
 import sys
@@ -14,19 +16,8 @@ from collections import defaultdict
 
 
 def main():
-    def full_record(path):
-        rec = json.load(open(path))
-        # the compact stdout line carries only the 5 slowest queries; a
-        # slope table computed from it would silently present <=5 queries
-        # per family as whole-suite results (round-16 review)
-        if "queries_truncated_to_slowest" in rec:
-            sys.exit(f"{path} is a compact (truncated-to-slowest) bench "
-                     "line — point at the full record its 'self' field "
-                     "names (e.g. BENCH_SELF.json)")
-        return rec["queries"]
-
-    one = full_record(sys.argv[1])
-    ten = full_record(sys.argv[2])
+    one = json.load(open(sys.argv[1]))["queries"]
+    ten = json.load(open(sys.argv[2]))["queries"]
     bar = float(sys.argv[3]) if len(sys.argv) > 3 else 12.0
     fam1, fam10 = defaultdict(float), defaultdict(float)
     flagged, watched = [], []
