@@ -1,5 +1,6 @@
 package graft
 import graft.core.{GraftSession, GuardRefusal}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 
@@ -9,7 +10,10 @@ import java.nio.file.{Files, Paths}
   *   - `queries`: name → seconds to materialize and write the whole
   *     result, or -1 on a failure or refusal;
   *   - `failed`:  name → `Class: first message line`;
-  *   - `refused`: name → a capacity guard's [[GuardRefusal]] message.
+  *   - `refused`: name → a capacity guard's [[GuardRefusal]] message;
+  *   - `codegen`: `classes` (name → classes Spark compiled while the
+  *     query ran) and `total`, the pass's sum: the generated-code
+  *     working set that `GraftSession.CodegenCacheEntries` must hold.
   *
   * Usage: runMain graft.Verify <sfDir> <outDir> [name ...]
   * (`SPARK_GRAFT_CPUS` sizes the session, default 4).
@@ -74,8 +78,17 @@ object Verify {
     }
   }
 
-  /** `verify.json`: the outcomes as one JSON object, names sorted. */
-  def record(outcomes: Seq[(String, Outcome)]): String = {
+  /** Classes compiled so far in this JVM: every whole-stage and
+    * expression class that missed Spark's codegen cache.
+    */
+  private[graft] def compiledClasses(): Long =
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** `verify.json`: the outcomes and the per-query compiled-class
+    * counts as one JSON object, names sorted.
+    */
+  def record(outcomes: Seq[(String, Outcome)],
+             compiled: Seq[(String, Long)] = Nil): String = {
     val sorted = outcomes.sortBy(_._1)
     def obj(kvs: Seq[(String, String)]): String =
       kvs.map { case (k, v) => s"${q(k)}: $v" }.mkString("{", ", ", "}")
@@ -85,8 +98,11 @@ object Verify {
     }
     val failed = sorted.collect { case (k, Failed(c)) => k -> q(c) }
     val refused = sorted.collect { case (k, Refused(m)) => k -> q(m) }
+    val classes = compiled.sortBy(_._1).map { case (k, n) => k -> n.toString }
     s"""{"queries": ${obj(secs)},\n "failed": ${obj(failed)},\n""" +
-      s""" "refused": ${obj(refused)}}""" + "\n"
+      s""" "refused": ${obj(refused)},\n""" +
+      s""" "codegen": {"classes": ${obj(classes)}, """ +
+      s""""total": ${compiled.map(_._2).sum}}}""" + "\n"
   }
 
   def main(args: Array[String]): Unit = {
@@ -95,19 +111,21 @@ object Verify {
     val spark = GraftSession.local(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, "graft-verify")
     new java.io.File(outDir).mkdirs()
-    val outcomes = SparkEntry.queries.toSeq.filter(kv => selected(kv._1))
+    val runs = SparkEntry.queries.toSeq.filter(kv => selected(kv._1))
       .map { case (name, fn) =>
+        val before = compiledClasses()
         val o = outcome(spark, sfDir, outDir)(name, fn)
         o match {
           case Failed(c) => System.err.println(s"[verify] $name failed: $c")
           case Refused(m) => System.err.println(s"[verify] $name refused: $m")
           case Done(_) =>
         }
-        name -> o
+        (name -> o, name -> (compiledClasses() - before))
       }
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
       oracleJson(selected))
-    Files.writeString(Paths.get(s"$outDir/verify.json"), record(outcomes))
+    Files.writeString(Paths.get(s"$outDir/verify.json"),
+      record(runs.map(_._1), runs.map(_._2)))
     spark.stop()
   }
 }

@@ -8,8 +8,31 @@ import org.apache.spark.sql.SparkSession
   * partitions); on a real cluster the same builder is used without `master`
   * and with cluster-sized `spark.sql.shuffle.partitions` (AQE coalesces at
   * runtime, so oversizing is safe).
+  *
+  * The builder also sizes Spark's generated-class cache
+  * ([[CodegenCacheEntries]]). That conf is static: Spark reads it once,
+  * when the first class of the JVM is compiled, so it must be set in the
+  * builder before the SparkContext starts. A later `spark.conf.set` is
+  * refused, and a session that `getOrCreate` returns from an earlier
+  * builder keeps that builder's value. Generated class names carry no
+  * stage id (`spark.sql.codegen.useIdInClassName=false`): AQE numbers
+  * the codegen stages in the order it plans them, which varies from run
+  * to run when a pin materializes inside another query, and the same
+  * code under a new number is a new cache key and a new compile.
   */
 object GraftSession {
+  /** `spark.sql.codegen.cache.maxEntries`: how many compiled whole-stage
+    * and expression classes the JVM keeps. Spark's default of 100 is far
+    * below this engine's working set: one pass over the 165-query
+    * registry compiles 1,512 classes (`graft.Verify`'s `codegen.total` at
+    * sf0.01; 2,545 under Spark's defaults, where evicted and renumbered
+    * classes recompile within the pass). At 100 every class is evicted
+    * before its next use, so each pass re-runs Janino on every stage and
+    * the JIT restarts on the fresh classes. 4096 holds the whole registry
+    * twice over; keeping them costs ~13 MB of metaspace.
+    */
+  val CodegenCacheEntries: Int = 4096
+
   /** `rocksDbState = true` switches streaming state to the RocksDB
     * provider — the production choice once per-key state exceeds heap
     * (bounded memory, incremental checkpoints). Semantics identical;
@@ -34,6 +57,8 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.core.GraftExtensions")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // spark.graft.checkpointDir (opt-in): wires the context checkpoint

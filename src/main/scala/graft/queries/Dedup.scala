@@ -642,34 +642,32 @@ object Dedup extends QueryModule {
     // graph-analytics class the engine lacked (d7's components label
     // connectivity; PageRank ranks WITHIN it): high-PR docs are the
     // template hubs a curation run inspects first, the "which
-    // boilerplate family dominates" signal. Each iteration is one
-    // edges⋈deg⋈pr join + one dst-keyed aggregate — shuffle ∝ edges
-    // with map-side combine, the standard distributed-PR shape (no
-    // driver-side graph). The edges are the doc-level expansion of the
-    // session's LSH candidate pin, re-derived per reference (deg and both
-    // iterations): the expansion is cheap, and the minhash/band work runs
-    // once, in the pin build. Dangling docs (no near-dup
-    // partner) hold the (1-d)/N floor — mass from dangling nodes is
+    // boilerplate family dominates" signal. The edges (the doc-level
+    // expansion of the session's LSH candidate pin; the minhash/band work
+    // runs once, in the pin build) are grouped ONCE into an adjacency
+    // frame (src, dsts), and both iterations read it: each is one
+    // adj⋈pr join on src, an explode of dsts with p/|dsts| per
+    // contribution, and one dst-keyed aggregate — the standard
+    // distributed-PR shape (no driver-side graph). Dangling docs (no
+    // near-dup partner) hold the (1-d)/N floor — mass from dangling nodes is
     // NOT redistributed (documented simplified variant; both engines
     // apply the same rule). Parity: per-contribution round-9 +
     // decimal accumulation, intermediate round-9, final round-6.
     "d20_dup_pagerank" -> { (s, dir) =>
       import s.implicits._
       val docs = Tables.documents(s, dir).select($"doc_id")
-      // the candidate pairs come from the session pin (the expensive
-      // band exchange runs once for the whole family); the cheap
-      // doc-level expansion recomputes per reference
       val pairs = lshCandDocPairs(s, dir)
       val edges = pairs.select($"doc_i".as("src"), $"doc_j".as("dst"))
         .union(pairs.select($"doc_j".as("src"), $"doc_i".as("dst")))
-      val deg = edges.groupBy($"src").agg(count(lit(1)).as("deg"))
+      // one adjacency list per src, shared by both steps; |dsts| is the
+      // out-degree (edges are a bag, and collect_list keeps duplicates)
+      val adj = edges.groupBy($"src").agg(collect_list($"dst").as("dsts"))
       val nF = docs.agg(count(lit(1)).as("n"))
       def step(pr: DataFrame, scale: Int): DataFrame =
         docs.join(
-            edges.join(deg, "src")
-              .join(pr.toDF("src", "p"), "src")
-              .select($"dst".as("doc_id"),
-                round($"p" / $"deg", 9).cast("decimal(28,12)").as("t"))
+            adj.join(pr.toDF("src", "p"), "src")
+              .select(explode($"dsts").as("doc_id"),
+                round($"p" / size($"dsts"), 9).cast("decimal(28,12)").as("t"))
               .groupBy($"doc_id").agg(sum($"t").cast("double").as("m")),
             Seq("doc_id"), "left")
           .crossJoin(broadcast(nF)) // 1-row doc count

@@ -679,13 +679,13 @@ object TextAnalytics extends QueryModule {
         round(max(col("quality")), 6).as("q_max"),
         sum(HashFunctions.knuthHash(col("doc_id"))).as("id_checksum"))
 
-  /** Per-language stopword-profile hit counts (profile order). */
-  private def langHits(text: Column): Seq[Column] = {
-    val toks = TextFunctions.wsTokens(text)
+  /** Per-language stopword-profile hit counts over whitespace tokens
+    * (profile order).
+    */
+  private def langHits(toks: Column): Seq[Column] =
     langProfiles.map { case (_, words) =>
       size(filter(toks, w => array_contains(array(words.map(lit): _*), w)))
     }
-  }
 
   /** Profile-hit argmax with deterministic profile-order tiebreak — the
     * ONE language prediction rule, shared by x2 and d8.
@@ -698,7 +698,8 @@ object TextAnalytics extends QueryModule {
       .otherwise("es")
   }
 
-  private def predLangCol(text: Column): Column = predLangOf(langHits(text))
+  private def predLangCol(text: Column): Column =
+    predLangOf(langHits(TextFunctions.wsTokens(text)))
 
   /** x11's shard count — the packing op's parallelism. Derived once per
     * JVM from the session's parallelism (d5's derived-constant pattern;
@@ -999,12 +1000,20 @@ object TextAnalytics extends QueryModule {
     // deterministic tiebreak (profile order).
     "x2_langid" -> { (s, dir) =>
       import s.implicits._
-      val hits = langHits($"text")
+      // the tokens, then the four hit counts as one struct, each in its
+      // own lower Project: CollapseProject does not inline a non-cheap
+      // value its consumer reads more than once, so the token split and
+      // each profile filter run once per row (x5's pattern)
+      val scored = Tables.documents(s, dir)
+        .select($"doc_id", TextFunctions.wsTokens($"text").as("toks"))
+        .select($"doc_id", struct(langProfiles.zip(langHits($"toks"))
+          .map { case ((lang, _), h) => h.as(lang) }: _*).as("h"))
+      val hits = langProfiles.map { case (lang, _) => $"h.$lang" }
       val Seq(en, de, fr, es) = hits
-      val pred = predLangOf(hits)
-      Tables.documents(s, dir)
+      scored
         .select($"doc_id", en.cast("bigint").as("en_hits"), de.cast("bigint").as("de_hits"),
-          fr.cast("bigint").as("fr_hits"), es.cast("bigint").as("es_hits"), pred.as("pred_lang"))
+          fr.cast("bigint").as("fr_hits"), es.cast("bigint").as("es_hits"),
+          predLangOf(hits).as("pred_lang"))
     },
 
     // Language-ID, character-n-gram variant: score = how many of the

@@ -761,7 +761,7 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
     val allowed = Set("d8_corpus_curation", "d10_best_keeper",
       "d18_incremental_dedup", "d27_lsh_keeper", "d35_dedup_audit",
-      "x1_token_stats", "x2_langid", "x3_quality", "x7_pmi_bigrams",
+      "x1_token_stats", "x3_quality", "x7_pmi_bigrams",
       "x15_quality_deciles", "x25_shard_manifest", "x26_gopher_rules",
       "x27_quality_classifier", "x30_dataset_card")
     assert(!allowed.contains("x5_langid_ngram"))

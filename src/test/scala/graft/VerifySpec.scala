@@ -69,12 +69,18 @@ class VerifySpec extends SparkSpec {
     val rec = Verify.record(Seq(
       name -> Verify.Failed(msg),
       "r\"" -> Verify.Refused("cap\u0000"),
-      "ok" -> Verify.Done(1.5)))
+      "ok" -> Verify.Done(1.5)),
+      Seq(name -> 3L, "r\"" -> 0L, "ok" -> 12L))
     val json = parse(rec)
     assert(json.get("failed").get(name).asText() == msg)
     assert(json.get("refused").get("r\"").asText() == "cap\u0000")
     assert(json.get("queries").get(name).asInt() == -1)
     assert(json.get("queries").get("ok").asDouble() == 1.5)
+    // codegen: classes compiled per query, and the pass total
+    val codegen = json.get("codegen")
+    assert(codegen.get("classes").get(name).asLong() == 3L)
+    assert(codegen.get("classes").get("ok").asLong() == 12L)
+    assert(codegen.get("total").asLong() == 15L)
     // the keys go through the same escaper as oracle_sql.json
     assert(rec.contains(Verify.q(name)))
   }
