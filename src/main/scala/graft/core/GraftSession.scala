@@ -24,7 +24,7 @@ object GraftSession {
   /** `spark.sql.codegen.cache.maxEntries`: how many compiled whole-stage
     * and expression classes the JVM keeps. Spark's default of 100 is far
     * below this engine's working set: one pass over the 165-query
-    * registry compiles 1,512 classes (`graft.Verify`'s `codegen.total` at
+    * registry compiles 1,501 classes (`graft.Verify`'s `codegen.total` at
     * sf0.01; 2,545 under Spark's defaults, where evicted and renumbered
     * classes recompile within the pass). At 100 every class is evicted
     * before its next use, so each pass re-runs Janino on every stage and

@@ -3,22 +3,24 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Distributed connected components by iterative min-label propagation —
-  * the transitive-closure step real dedup needs (near-dup pairs form
-  * cliques/chains; one-pass keep rules miss transitivity).
+/** Distributed connected components — the transitive-closure step real
+  * dedup needs (near-dup pairs form cliques/chains; one-pass keep rules
+  * miss transitivity). [[runStar]] runs the alternating
+  * large-star/small-star algorithm (Kiveris et al., "Connected
+  * Components in MapReduce and Beyond", SoCC'14): edge rewiring halves
+  * star depth every round, so rounds = O(log n) instead of the
+  * O(diameter) of label propagation — the planet-scale shape. Labels are
+  * (id, component = min reachable id): iteration-order independent, so
+  * results are deterministic and oracle-reproducible (DuckDB recursive
+  * CTE); OperatorsSpec checks them against a plain JVM union-find.
   *
-  * Each round every node takes the min label among itself and its
-  * neighbors; fixpoint = every node labeled with the min node id of its
-  * component. The fixpoint is iteration-order independent, so results are
-  * deterministic and oracle-reproducible (DuckDB recursive CTE).
-  *
-  * Scale contract: each round is one join + one agg shuffle, both keyed
-  * on node id; per-round checkpointing breaks lineage so plans stay flat
-  * across rounds (the rewired edge set doubles the plan per round
-  * otherwise — truncation is required, not an optimization). Rounds
-  * needed = component diameter; the loop runs to FIXPOINT by default (a
-  * silently-unconverged result would be wrong, not slow) — `maxIter` is
-  * an explicit opt-in cap that THROWS when exceeded.
+  * Scale contract: each round is 2 aggs + 2 joins keyed on node id;
+  * per-round checkpointing breaks lineage so plans stay flat across
+  * rounds (the rewired edge set doubles the plan per round otherwise —
+  * truncation is required, not an optimization). The loop runs to
+  * FIXPOINT by default (a silently-unconverged result would be wrong,
+  * not slow) — `maxIter` is an explicit opt-in cap that THROWS when
+  * exceeded.
   *
   * Fault tolerance: truncated lineage means the result can only be
   * recomputed back to the last round's checkpoint. With the default
@@ -33,14 +35,6 @@ import org.apache.spark.sql.functions._
   * rounds delete as soon as their successor is written; exactly one
   * final-round directory per CC run remains (the pins' recompute path),
   * owned by the deployment's checkpoint-dir lifecycle.
-  *
-  * For high-diameter graphs (long similarity chains) `runStar` runs the
-  * alternating large-star/small-star algorithm (Kiveris et al.,
-  * "Connected Components in MapReduce and Beyond", SoCC'14): edge
-  * rewiring halves star depth every round, so rounds = O(log n) instead
-  * of O(diameter) — the planet-scale shape. Both produce identical
-  * (id, component=min reachable id) labels; OperatorsSpec proves
-  * agreement on random graphs.
   */
 object ConnectedComponents {
 
@@ -70,7 +64,7 @@ object ConnectedComponents {
     private val pathOf =
       new java.util.IdentityHashMap[DataFrame, String]()
 
-    def pin(df: DataFrame, eager: Boolean): DataFrame = base match {
+    def pin(df: DataFrame): DataFrame = base match {
       case Some(b) =>
         val p = s"$b/round-$round"
         round += 1
@@ -80,7 +74,7 @@ object ConnectedComponents {
         val out = spark.read.schema(df.schema).parquet(p)
         pathOf.put(out, p)
         out
-      case None => df.localCheckpoint(eager = eager)
+      case None => df.localCheckpoint(eager = false)
     }
 
     /** `df`'s round is superseded — delete its files (reliable mode;
@@ -134,67 +128,7 @@ object ConnectedComponents {
     }
   }
 
-  /** nodes: (id) one row per node; edges: (src, dst) undirected (either
-    * orientation). Returns (id, component) with component = min id
-    * reachable. Throws IllegalStateException if `maxIter` rounds pass
-    * without reaching the fixpoint.
-    */
-  def run(nodes: DataFrame, edges: DataFrame,
-          maxIter: Int = Int.MaxValue): DataFrame = {
-    val pins = new RoundPins(nodes.sparkSession)
-    // the try covers the INITIAL pins too (round-16 review): the round-0
-    // write evaluates the full upstream edge plan — the most
-    // failure-prone materialization of the whole run — and a throw there
-    // would otherwise orphan the already-written round files
-    try {
-    val sym = pins.pin(
-      edges.select(col("src"), col("dst"))
-        .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct(), eager = true)
-
-    var pinned = pins.pin(
-      nodes.select(col("id"), col("id").as("component")), eager = false)
-    var labels: DataFrame = pinned
-    var changed = 1L
-    var iter = 0
-    while (changed > 0) {
-      if (iter >= maxIter)
-        throw new IllegalStateException(
-          s"ConnectedComponents: no fixpoint after $maxIter rounds " +
-            "(component diameter exceeds the cap); labels would be wrong")
-      val prop = sym.join(labels, sym("src") === labels("id"))
-        .groupBy(col("dst")).agg(min(col("component")).as("nbr_min"))
-      // Fold the did-anything-change flag into the same pass instead of
-      // re-joining next against old labels: one scan of the fresh
-      // checkpoint replaces a per-round join.
-      val next = pins.pin(
-        labels.join(prop, labels("id") === prop("dst"), "left_outer")
-          .select(labels("id"),
-            least(col("component"), coalesce(col("nbr_min"), col("component")))
-              .as("component"),
-            (coalesce(col("nbr_min"), col("component")) < col("component"))
-              .as("chg")), eager = false)
-      // the filtered count is the materializing action for the lazy
-      // local checkpoint (reliable mode already materialized via the
-      // round-file write; there the count is metadata-only)
-      changed = next.filter(col("chg")).count()
-      pins.release(pinned) // round i-1 fully consumed — files delete
-      pinned = next
-      labels = next.drop("chg")
-      iter += 1
-      // Diagnosable progress: an unexpectedly deep graph shows up as a
-      // round counter climbing, not as a silent hang (ADVICE r2).
-      log.info(s"ConnectedComponents: round $iter, $changed labels changed")
-    }
-    // the fixpoint labels are file-backed — sym is no longer in their
-    // lineage, so its round files delete too; only the final round's
-    // files survive (the persisted component pins recompute through them)
-    pins.release(sym)
-    labels
-    } catch { case e: Throwable => pins.releaseAll(); throw e }
-  }
-
-  /** Large-star: process every edge from its smaller endpoint u; connect
+    /** Large-star: process every edge from its smaller endpoint u; connect
     * each strictly-larger neighbor to m = min(N(u) ∪ {u}). One agg + one
     * join, both keyed on the node id. NO distinct here: the output feeds
     * [[smallStar]] inside the same round, whose min-aggregate is
@@ -228,14 +162,14 @@ object ConnectedComponents {
       .distinct()
   }
 
-  /** Max edge count for the driver-local fixpoint finish (round 20,
+  /** Default edge count for the driver-local fixpoint finish (round 20,
     * optimization guide §1.2 "the distributed algorithm" + §5 driver
     * rules): once the rewired edge frame is this small, the remaining
     * rounds are pure fixed overhead — each large/small-star round costs
     * 4 exchanges + a count job + AQE replans regardless of data volume,
     * and the closing rounds of ANY run operate on a frame of roughly
     * one edge per duplicated doc. Below the bound the loop collects the
-    * edges (≤ ~3 MB at the default — bounded by the GUARD, not by the
+    * edges (≤ ~3 MB at this default — bounded by the GUARD, not by the
     * corpus, the d23/j5 bounded-frame doctrine; the count that gates it
     * is computed every round anyway) and finishes with an exact
     * union-find, entering the result as a literal (id, component) frame
@@ -245,20 +179,9 @@ object ConnectedComponents {
     * fires while the graph is large: runs stay on the O(log n)
     * distributed path until the live edge frame genuinely shrinks
     * below the cap, at which point one task's worth of work is exactly
-    * what remains. 0 disables.
+    * what remains.
     */
-  private[graft] def localEdgeMax(
-      spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption("spark.graft.cc.localEdgeMax").map { v =>
-      // name the config key on a malformed value (round-21, r20 ADVICE):
-      // a bare NumberFormatException deep inside a query run is
-      // undiagnosable without this context
-      try v.toLong
-      catch { case _: NumberFormatException =>
-        throw new IllegalArgumentException(
-          s"spark.graft.cc.localEdgeMax must be a long, got '$v'")
-      }
-    }.getOrElse(200000L)
+  val DefaultLocalEdgeMax: Long = 200000L
 
   /** Exact min-label union-find over a collected edge list: returns
     * (id -> component) for every id present in `edges`, component = min
@@ -293,18 +216,20 @@ object ConnectedComponents {
     out
   }
 
-  /** Alternating large-star/small-star connected components — same
-    * contract as [[run]] (labels = min reachable id, fixpoint-guaranteed,
-    * `maxIter` throws), but edge REWIRING instead of label propagation:
-    * each round shortcuts paths toward the component minimum, so a
-    * diameter-d chain converges in O(log d) rounds where label
-    * propagation needs d. Per round: 2 aggs + 2 joins keyed on node id
-    * plus one set-equality check (anti-join count) for the fixpoint.
-    * Once the live edge frame drops under [[localEdgeMax]], the run
-    * finishes with the exact driver-local union-find instead of paying
-    * per-round distributed overhead for a frame one task could close.
-    */
-  /** @param edgesDistinct caller-asserted contract that `edges` is
+  /** Alternating large-star/small-star connected components. nodes:
+    * (id) one row per node; edges: (src, dst) undirected (either
+    * orientation). Returns (id, component) with component = min id
+    * reachable; throws IllegalStateException if `maxIter` rounds pass
+    * without reaching the fixpoint. Each round shortcuts paths toward
+    * the component minimum, so a diameter-d chain converges in O(log d)
+    * rounds where label propagation needs d. Per round: 2 aggs + 2
+    * joins keyed on node id plus one set-equality check (anti-join
+    * count) for the fixpoint. Once the live edge frame has at most
+    * `localEdgeMax` edges, the run finishes with the exact driver-local
+    * union-find instead of paying per-round distributed overhead for a
+    * frame one task could close; 0 keeps every round distributed.
+    *
+    * @param edgesDistinct caller-asserted contract that `edges` is
     *   already duplicate-free with src ≠ dst (true for the dedup pair
     *   frames: grouped output with doc_i < doc_j) — skips the initial
     *   normalization `distinct()`, one full edge exchange. The algorithm
@@ -313,7 +238,8 @@ object ConnectedComponents {
     */
   def runStar(nodes: DataFrame, edges: DataFrame,
               maxIter: Int = Int.MaxValue,
-              edgesDistinct: Boolean = false): DataFrame = {
+              edgesDistinct: Boolean = false,
+              localEdgeMax: Long = DefaultLocalEdgeMax): DataFrame = {
     val norm = edges
       .select(col("src").as("a"), col("dst").as("b"))
     // LAZY checkpoints throughout (local mode): the count() that every
@@ -324,7 +250,7 @@ object ConnectedComponents {
     // (Reliable mode materializes via the round-file write; its count
     // is metadata-only.)
     val pins = new RoundPins(nodes.sparkSession)
-    // Driver-local finish (see [[localEdgeMax]]): the star rounds
+    // Driver-local finish (see [[DefaultLocalEdgeMax]]): the star rounds
     // preserve connectivity (Kiveris et al. §3), so an exact union-find
     // over ANY round's live edge frame — including round 0 — yields the
     // same min-id components as running the rewiring to its fixpoint.
@@ -353,14 +279,13 @@ object ConnectedComponents {
     try {
     var e = pins.pin(
       if (edgesDistinct) norm
-      else norm.where(col("a") =!= col("b")).distinct(), eager = false)
+      else norm.where(col("a") =!= col("b")).distinct())
     var eCount = e.count()
     var converged = eCount == 0
-    val localCap = localEdgeMax(nodes.sparkSession)
-    val localOk = localCap > 0 &&
+    val localOk = localEdgeMax > 0 &&
       e.schema.fields.take(2).forall(
         _.dataType == org.apache.spark.sql.types.LongType)
-    if (!converged && localOk && eCount <= localCap)
+    if (!converged && localOk && eCount <= localEdgeMax)
       return localFinish(e)
     var iter = 0
     while (!converged) {
@@ -369,7 +294,7 @@ object ConnectedComponents {
           s"ConnectedComponents.runStar: no fixpoint after $maxIter " +
             "rounds; labels would be wrong")
       // ONE lazy localCheckpoint per round, materialized by the count.
-      val next = pins.pin(smallStar(largeStar(e)), eager = false)
+      val next = pins.pin(smallStar(largeStar(e)))
       val nextCount = next.count()
       // Both sets are distinct, so subset + equal cardinality ⇒ equal: at
       // the star fixpoint one more ls+ss round is a no-op. The (cheap)
@@ -381,7 +306,7 @@ object ConnectedComponents {
       eCount = nextCount
       iter += 1
       log.info(s"ConnectedComponents.runStar: round $iter done ($eCount edges)")
-      if (!converged && localOk && eCount <= localCap)
+      if (!converged && localOk && eCount <= localEdgeMax)
         return localFinish(e)
     }
     // At the fixpoint every non-root points directly at its component

@@ -41,36 +41,6 @@ object KeyedOps {
     topKPerKey(local.drop("__salt"), keys, order, k, rankCol)
   }
 
-  /** Skew-robust equi-join of a stats frame (one row per key tuple —
-    * e.g. per-term global counts, per-shingle document frequencies)
-    * onto a corpus-sized frame: the stats rows replicate across all
-    * `buckets` salt values (a Generate, not a join), the big side
-    * carries salt = hash(saltBy) mod buckets, and the join keys on
-    * (terms…, salt) — so a Zipf-hot key's rows split across `buckets`
-    * join partitions BY CONSTRUCTION, where a window count over the
-    * bare key would buffer the key's whole corpus share in one
-    * partition that no runtime feature can split. The join strategy
-    * stays size-selected (broadcast while the stats side fits, shuffle
-    * on the salted keys past that). `saltBy` must be a column of the
-    * BIG side that spreads rows within a key (a doc/row id).
-    *
-    * `joinType` extends the salting to LEFT joins (round 19 — x16's
-    * pruned-head fallback keeps missing-as-null semantics): unmatched
-    * big rows survive with nulls, and salting stays correct because
-    * every stats row exists under EVERY salt value, so a big row
-    * misses iff its key tuple is absent from the stats frame.
-    */
-  def saltedStatsJoin(big: DataFrame, stats: DataFrame, terms: Seq[String],
-                      buckets: Int, saltBy: Column,
-                      joinType: String = "inner"): DataFrame = {
-    val statsS = stats.withColumn("__salt",
-      explode(sequence(lit(0), lit(buckets - 1))))
-    big.withColumn("__salt",
-        pmod(xxhash64(saltBy), lit(buckets.toLong)).cast("int"))
-      .join(statsS, terms :+ "__salt", joinType)
-      .drop("__salt")
-  }
-
   /** Arg-max: the whole row achieving the max of `ord` per key (reference
     * `Combine.perKey(MaxFlow)`, `TrafficMaxLaneFlow.scala:245-248`).
     *

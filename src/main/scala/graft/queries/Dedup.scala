@@ -800,8 +800,8 @@ object Dedup extends QueryModule {
     // aggregate bounds any hot fp to one partial row per map partition
     // and the join back is AQE-skew-splittable. The trade is the gram
     // generation running in both join branches (two linear corpus
-    // passes — the salted-LM-shape trade, accepted for the same
-    // reason); the duplicated-fp filter rides the STATS side, so the
+    // passes, accepted because a hot fp no longer pins one task); the
+    // duplicated-fp filter rides the STATS side, so the
     // join's build input shrinks to actually-duplicated fingerprints.
     // The span-merge windows partition on doc_id (bounded per doc).
     "d25_substring_spans" -> { (s, dir) =>
@@ -1178,12 +1178,10 @@ object Dedup extends QueryModule {
     // engine's heavy plans cluster on (8-gram shingles — the d2/d25
     // blocking keys; bigram left-contexts — the x16/x29 w1 keys), the
     // top-3 hottest keys and each one's share of all instances. A key
-    // holding ≥ a few percent means the default clustered plan will
-    // straggle; as of round 13 the SAME statistic drives automatic
-    // shape selection in-plan (TextAnalytics.saltedFor — the x14/x16/
-    // x29/d12 paths probe their own key family and salt themselves),
-    // and this query remains the human-readable pre-flight report (plus
-    // the d2 stop-shingle cap's sizing input). Plan: one
+    // holding ≥ a few percent means a plan clustered on that key will
+    // straggle — d12's shingle-keyed window count is the one that
+    // cannot be split at runtime. The report is also the d2
+    // stop-shingle cap's sizing input. Plan: one
     // corpus pass + one vocab-sized hash agg per family, top-3 via
     // distributed TakeOrderedAndProject, totals fold from the SAME
     // grouped frame (no second corpus pass); output 6 rows. Shares are
@@ -1830,42 +1828,19 @@ object Dedup extends QueryModule {
       .toDF("src_i", "src_j", "n_common", "jaccard")
   }
 
-  private[graft] def ngramNovelty(docs: DataFrame, n: Int): DataFrame =
-    ngramNovelty(docs, n,
-      TextAnalytics.saltedFor(docs, s"shingle$n")(
-        _.select(explode(HashedShinglesExpr.hashedShingles(col("text"), n))
-          .as("k"))))
-
-  private[graft] def ngramNovelty(docs: DataFrame, n: Int,
-      salted: Boolean): DataFrame = {
+  /** d12 core: df as a window count over ONE shingle-clustered exchange
+    * (the round-10 j11/d25 pattern): one shingle-gen pass, one
+    * repartition(shingle), then the per-doc agg (its own doc-keyed
+    * exchange, map-side partial). The trade: a boilerplate-hot shingle
+    * lands whole in one window partition, which no runtime feature can
+    * split; `x34_skew_report` reports that case before a run.
+    */
+  private[graft] def ngramNovelty(docs: DataFrame, n: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // DEFAULT: df as a window count over ONE shingle-clustered exchange
-    // (the round-10 j11/d25 pattern): the former docFreq aggregate +
-    // join consumed the shingle frame from two differently-pruned
-    // branches — the corpus shingle generation ran twice and the join
-    // reshuffled it again. Now: one shingle-gen pass, one
-    // repartition(shingle), then the per-doc agg (its own doc-keyed
-    // exchange, map-side partial). Boilerplate hot shingles concentrate
-    // a window partition, so `spark.graft.saltedSkew` selects the same
-    // fallback as x14/x16 (round-10 ADVICE — the guard is real code,
-    // not a comment): df folds via a two-phase partial aggregate (each
-    // final group gets ≤ one partial row per map partition, whatever
-    // the shingle's corpus share) and joins back through
-    // KeyedOps.saltedStatsJoin on (shingle, salt). SkewFallbackSpec
-    // proves identity on a boilerplate-heavy corpus.
-    val sh = docs.select(col("doc_id"),
-      explode(HashedShinglesExpr.hashedShingles(col("text"), n)).as("shingle"))
-    val withDf =
-      if (salted) {
-        val dfTbl = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-        graft.operators.KeyedOps.saltedStatsJoin(sh, dfTbl, Seq("shingle"),
-          TextAnalytics.saltBuckets(docs.sparkSession), col("doc_id"))
-      } else {
-        sh.repartition(col("shingle"))
-          .withColumn("df",
-            count(lit(1)).over(Window.partitionBy(col("shingle"))))
-      }
-    withDf
+    docs.select(col("doc_id"),
+        explode(HashedShinglesExpr.hashedShingles(col("text"), n)).as("shingle"))
+      .repartition(col("shingle"))
+      .withColumn("df", count(lit(1)).over(Window.partitionBy(col("shingle"))))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_shingles"),
         sum(when(col("df") >= 2, 1L).otherwise(0L)).as("n_shared"))

@@ -81,6 +81,7 @@ object Similarity extends QueryModule {
     Tables.embeddings(s, dir)
 
   private val SemTau = 0.4 // d19 semantic-dup cosine threshold (= d5's)
+  private val D5BlockBytes = 64L << 20 // d5's target bytes per vector block
 
   /** v6's deterministic 2-round Lloyd assignment, factored so d19 (and
     * the spec's planted corpora) reuse it: init = first k vectors,
@@ -458,8 +459,6 @@ object Similarity extends QueryModule {
       // single-row limit while the B(B+1)/2-task grid stays ≥ cluster
       // parallelism. The sizing probes are cheap: count() is parquet
       // row-group metadata; the dim probe reads one row.
-      val blockBytes = s.conf.getOption("graft.d5.blockBytes")
-        .map(_.toLong).getOrElse(64L << 20)
       val n = corpus.count()
       // CORPUS-SIZE GUARD (round-15 verdict item 5): the exact all-pairs
       // contract is the reference oracle, but its compute is O(n²) BY
@@ -484,7 +483,7 @@ object Similarity extends QueryModule {
       val gridFloor = math.ceil(
         math.sqrt(2.0 * s.sparkContext.defaultParallelism)).toLong
       val B = Seq(2L, gridFloor,
-        math.ceil(n.toDouble * perVec / blockBytes).toLong).max
+        math.ceil(n.toDouble * perVec / D5BlockBytes).toLong).max
       // persist + eager count materializes the B-row block frame ONCE
       // (the grid self-join duplicates its plan subtree, which would run
       // the full-corpus scan + collect_list shuffle twice — unlike the
@@ -495,16 +494,15 @@ object Similarity extends QueryModule {
       // the query; the persisted frame recomputes lost blocks.
       val blocks = embedBlocks(corpus, B)
       blocks.count()
-      // Grid-size sanity: B is derived from blockBytes, so a
-      // misconfigured graft.d5.blockBytes (bytes-vs-MB slip) must fail
-      // loudly here, not overflow Int in the repartition below or
-      // launch a million-task grid.
+      // Grid-size sanity: a grid past ~1e6 cells must fail loudly
+      // here, not overflow Int in the repartition below or launch a
+      // million-task grid.
       val gridCells = B * (B + 1) / 2
       require(gridCells <= 1000000L,
-        s"d5_embed_neardup block grid would be $gridCells cells (B=$B): " +
-          "graft.d5.blockBytes is likely misconfigured — a block should " +
-          "hold corpusBytes/B ≈ tens of MB, giving a grid within ~1e6 " +
-          "cells even on a large cluster.")
+        s"d5_embed_neardup block grid would be $gridCells cells (B=$B), " +
+          "past the 1e6-cell ceiling: a block holds corpusBytes/B ≈ " +
+          "D5BlockBytes (64 MiB), so the corpus bytes or the cluster's " +
+          "parallelism is far outside what the exact grid serves.")
       blocks.toDF("blk_a", "vecs_a")
         .join(blocks.toDF("blk_b", "vecs_b"), $"blk_a" <= $"blk_b")
         // ONE GRID CELL PER TASK (round 17): the grid frame is
@@ -518,7 +516,7 @@ object Similarity extends QueryModule {
         // task. The exchange moves the JOINED grid rows — each carries
         // two block payloads, so total traffic is ≈ (B+1) copies of the
         // corpus. That replication is inherent to exact block all-pairs
-        // (every block must meet every block) and is what blockBytes
+        // (every block must meet every block) and is what D5BlockBytes
         // sizes; it is NOT "only the B block payloads".
         .repartition(math.toIntExact(gridCells))
         .as[(Long, Seq[(Long, Array[Float])], Long, Seq[(Long, Array[Float])])]

@@ -104,11 +104,10 @@ object TextAnalytics extends QueryModule {
     * oracle query and the physical writer `io/TrainExport`.
     *
     * Scale note: exact `percentile` keeps a value map ∝ distinct
-    * quality doubles (∝ docs — measured 6.0× at the fixture's 10×).
-    * The 100 TB swap — `percentile_approx`, bounded mergeable state —
-    * is REAL CODE behind `spark.graft.export.approxBoundaries` (see
-    * the two-arg [[curriculumFrameOf]]); exact stays the default for
-    * bit-exact DuckDB `quantile_cont` parity at test SF.
+    * quality doubles (∝ docs — measured 6.0× at the fixture's 10×), and
+    * exact is what DuckDB's `quantile_cont` replays bit for bit. A
+    * `percentile_approx` form (bounded mergeable state) measured
+    * wall-neutral at 10× and 100× (SCALE.md), so it is not carried.
     */
   private[graft] def curriculumFrame(s: SparkSession, dir: String): DataFrame =
     curriculumFrameOf(Tables.documents(s, dir))
@@ -118,36 +117,13 @@ object TextAnalytics extends QueryModule {
     * a curated subset re-balances its own shards (the curation
     * pipeline's export path).
     */
-  private[graft] def curriculumFrameOf(docs: DataFrame): DataFrame =
-    curriculumFrameOf(docs, docs.sparkSession.conf
-      .get(ApproxBoundariesKey, "false").toBoolean)
-
-  /** `spark.graft.export.approxBoundaries` — when true, the octile
-    * boundaries come from `percentile_approx` (round-10 verdict item 2:
-    * the 100 TB swap, previously prose-only). Exact `percentile` keeps
-    * a per-partition buffer of every distinct quality double — state ∝
-    * corpus, the suite's worst measured slope (4.6× at 10× data);
-    * `percentile_approx` keeps a mergeable bounded-size quantile
-    * summary (state ∝ accuracy, not rows) with rank error ≤ n/accuracy,
-    * deterministic at fixed accuracy. The downstream plan — broadcast
-    * 1-row boundary frame + rowwise classify + shard-keyed export — is
-    * identical; only docs within the boundary rank-error band can
-    * change shard (ApproxBoundariesSpec bounds the disagreement).
-    * Exact stays the default: the oracle needs DuckDB `quantile_cont`
-    * bit-parity at test SF.
-    */
-  private[graft] def curriculumFrameOf(docs: DataFrame,
-      approx: Boolean): DataFrame = {
+  private[graft] def curriculumFrameOf(docs: DataFrame): DataFrame = {
     val scored = docs
       .select(col("doc_id"), col("lang"), col("source"), col("text"),
         size(TextFunctions.wsTokens(col("text"))).cast("long").as("n_toks"),
         qualityCol(col("text")).as("quality"))
-    val fracs = array((1 to 7).map(i => lit(i / 8.0)): _*)
-    val bounds =
-      if (approx) scored.agg(percentile_approx(col("quality"), fracs,
-        lit(docs.sparkSession.conf.get(ApproxAccuracyKey, "10000").toInt))
-        .as("bs"))
-      else scored.agg(percentile(col("quality"), fracs).as("bs"))
+    val bounds = scored.agg(percentile(col("quality"),
+      array((1 to 7).map(i => lit(i / 8.0)): _*)).as("bs"))
     scored.crossJoin(broadcast(bounds)) // 1-row boundary frame
       .select(col("doc_id"), col("lang"), col("source"), col("text"),
         col("n_toks"), col("quality"),
@@ -156,14 +132,9 @@ object TextAnalytics extends QueryModule {
           .as("shard"))
   }
 
-  private[graft] val ApproxBoundariesKey =
-    "spark.graft.export.approxBoundaries"
-  private[graft] val ApproxAccuracyKey =
-    "spark.graft.export.approxAccuracy"
-
-  // ------------------- x14/x16/x29 LM-score plan shapes ---------------
+  // -------------------- x14/x16/x29 LM-score plan ---------------------
   //
-  // Round 14: BOTH shapes now read the session-pinned per-doc count
+  // Round 14: the LM scores read the session-pinned per-doc count
   // frames ([[sharedPostings]] / [[sharedBigrams]]) — the corpus
   // tokenize + explode + (doc, term) aggregation runs ONCE per session
   // and corpus, charged to the family's first consumer; every LM score
@@ -176,128 +147,14 @@ object TextAnalytics extends QueryModule {
   // all map partitions and the map-side partials bound the shuffle to
   // distinct (doc, term) pairs.
   //
-  // Two result-identical join shapes per query, selected by the
-  // tri-state `spark.graft.saltedSkew` — "true"/"false" force a shape,
-  // and the DEFAULT "auto" probes the corpus itself (see [[saltedFor]]
-  // below). SkewFallbackSpec proves identity on a planted hot-context
-  // corpus AND the driver fixtures, and pins the auto dispatch on both:
-  //
-  // DEFAULT (agg + join): global term totals fold FROM the pin by
-  // two-phase partial aggregation (each final group receives at most
-  // one partial row per map partition, whatever the term's corpus
-  // share), then the vocab-sized stats frame joins back onto the pin on
-  // the bare term key. The join strategy stays size-selected —
-  // broadcast while the vocab fits, shuffle-join past that — and a
-  // Zipf-hot term's join partition CAN be split by AQE skew-join
-  // handling (unlike the analytic window this shape replaced).
-  //
-  // SALTED (the 100 TB by-construction fallback): same pin, same stats
-  // fold, but the join back keys on (term…, salt) with the stats side
-  // replicated across `spark.graft.saltBuckets` explicit salts (salt =
-  // hash(doc_id) mod S on the big side), so a hot term's postings split
-  // across S join partitions by construction — bounded without relying
-  // on AQE's skew thresholds. Cost trade vs default: the S× stats-side
-  // replication — which is why the auto probe only selects it when a
-  // genuinely hot key would otherwise dominate the stage (ScaleFixture
-  // measures both shapes on a corpus where one context holds ≥20% of
-  // bigrams). PlanSpec pins the join keys of both shapes.
-  private[graft] val SaltedSkewKey = "spark.graft.saltedSkew"
-  private[graft] val SaltBucketsKey = "spark.graft.saltBuckets"
-  private[graft] val SkewThresholdKey = "spark.graft.skewProbe.threshold"
-  private[graft] val SkewProbeFractionKey = "spark.graft.skewProbe.fraction"
-
-  private[graft] def saltBuckets(s: SparkSession): Int =
-    s.conf.get(SaltBucketsKey, "16").toInt
-
-  // ---------------- automatic skew-path selection (round 13) ----------
-  //
-  // x34_skew_report MEASURES the straggler trigger; this wires the
-  // measurement to plan selection, the way the reference fans out hot
-  // keys in-pipeline (`withHotKeyFanout`, AutoComplete.scala:249-254):
-  // `spark.graft.saltedSkew` is now tri-state — "true"/"false" force a
-  // shape (the old manual switch, unchanged semantics), and the new
-  // DEFAULT "auto" probes the query's own clustering-key family on a
-  // deterministic hash sample and picks the salted shape iff the top
-  // key holds ≥ `spark.graft.skewProbe.threshold` (default 0.10) of all
-  // instances. Rationale for 10%: on a 1000-executor cluster the fair
-  // per-partition share is 0.1%, so a 10% key is a 100× straggler under
-  // the window-count shape — while the measured fixture corpora (top
-  // token ≈ 3.4%) stay on the default shape, which A/B-benches 1.5-2×
-  // faster than salted at flat-key SFs (the salted shape's second
-  // corpus pass + S× stats replication only pays for itself when the
-  // hot partition would otherwise dominate the stage). The probe is ONE
-  // tiny job — a two-phase (map-side partial) count over a
-  // `hashSample(doc_id, fraction)` slice (default 5%), so no hot key
-  // ever concentrates in the probe itself — cached per (session,
-  // dataset plan, key family), i.e. it runs once per corpus per JVM,
-  // the "cached per-dataset statistic" a 100 TB pipeline would persist
-  // alongside the data.
-
-  /** Top-1 key share of `keyed` (one column `k`), pinned under
-    * (session, tag). Package-visible for the wiring spec.
-    */
-  private[graft] def hotKeyShare(sess: SparkSession, tag: String,
-      keyed: => DataFrame): Double =
-    Pins.get("skew_probe", sess, None, tag) {
-      val r = keyed.groupBy(col("k")).agg(count(lit(1)).as("n"))
-        .agg(max(col("n")).as("maxn"), sum(col("n")).as("tot")).head()
-      if (r.isNullAt(1) || r.getLong(1) == 0L) 0.0
-      else r.getLong(0).toDouble / r.getLong(1)
-    }
-
-  /** The tri-state dispatch: force via "true"/"false", else probe
-    * `keyOf(sampled docs)`'s hot-key share against the threshold.
-    * `family` names the clustering-key family (probe cache key — each
-    * shingle width gets its own). Package-visible for Dedup's
-    * shingle-keyed consumers; the TOKEN family dispatches through
-    * [[tokenSkewSalted]] instead, which reads the exact share from the
-    * pinned vocab stats rather than a sampled corpus pass.
-    */
-  private[graft] def saltedFor(docs: DataFrame, family: String)(
-      keyOf: DataFrame => DataFrame): Boolean = {
-    val sess = docs.sparkSession
-    sess.conf.get(SaltedSkewKey, "auto").toLowerCase(java.util.Locale.ROOT) match {
-      case "true"  => true
-      case "false" => false
-      case _ =>
-        val frac = sess.conf.get(SkewProbeFractionKey, "0.05").toDouble
-        val thresh = sess.conf.get(SkewThresholdKey, "0.10").toDouble
-        val sampled =
-          if (frac >= 1.0) docs
-          else docs.filter(HashFunctions.hashSample(col("doc_id"), frac))
-        // frac is part of the cache key (round-13 ADVICE): a changed
-        // probe fraction after the first probe must re-measure, not
-        // read the stale share. The threshold compares OUTSIDE the
-        // cache, so re-tuning it alone re-dispatches for free.
-        hotKeyShare(sess, family + "@" + frac + ":" + Pins.planDigest(docs),
-          keyOf(sampled)) >= thresh
-    }
-  }
-
-  /** The token-family probe dispatch shared by x14/x16/x29/x20 (their
-    * clustering keys — w, w1 — are all draws from the token unigram
-    * distribution, so one probe serves the family). Round 14: the
-    * share is EXACT, read from the pinned vocab stats ([[
-    * sharedTermStats]]) instead of a 5% sample scan — the pin is built
-    * shape-independently before either join shape runs, so the probe
-    * costs one vocab-sized agg over cached blocks, not a corpus pass.
-    */
-  private[graft] def tokenSkewSalted(docs: DataFrame): Boolean = {
-    val sess = docs.sparkSession
-    sess.conf.get(SaltedSkewKey, "auto").toLowerCase(java.util.Locale.ROOT) match {
-      case "true"  => true
-      case "false" => false
-      case _ =>
-        val thresh = sess.conf.get(SkewThresholdKey, "0.10").toDouble
-        val share = Pins.get("skew_probe", sess, None,
-            "token:" + Pins.planDigest(docs)) {
-          val (cw, nC, _) = sharedTermStats(docs)
-          if (nC == 0L) 0.0
-          else cw.agg(max(col("n_w"))).head().getLong(0).toDouble / nC
-        }
-        share >= thresh
-    }
-  }
+  // The plan: global term totals fold FROM the pin by two-phase
+  // partial aggregation (each final group receives at most one partial
+  // row per map partition, whatever the term's corpus share), then the
+  // vocab-sized stats frame joins back onto the pin on the bare term
+  // key. The join strategy stays size-selected — broadcast while the
+  // vocab fits, shuffle-join past that — and a Zipf-hot term's join
+  // partition CAN be split by AQE skew-join handling (unlike the
+  // analytic window this shape replaced). PlanSpec pins the join keys.
 
   // ------------------- j11/j12 pinned retrieval family ----------------
 
@@ -357,8 +214,8 @@ object TextAnalytics extends QueryModule {
 
   /** The ONE whitespace-token bigram frame per (session, corpus plan):
     * (doc_id, w1, w2, n_dw). Same pin doctrine as [[sharedPostings]];
-    * consumed by x16 and x29 (whose default/salted shapes previously
-    * each rebuilt the corpus bigram instance stream).
+    * consumed by x16 and x29 (which previously each rebuilt the corpus
+    * bigram instance stream).
     */
   private[graft] def sharedBigrams(docs: DataFrame): DataFrame =
     Pins.frame("bigrams", docs.sparkSession, None, Pins.planDigest(docs)) {
@@ -392,18 +249,6 @@ object TextAnalytics extends QueryModule {
   // re-enter the score expressions as literals Catalyst constant-folds,
   // arithmetic-identical to the broadcast 1-row frame they replace.
 
-  /** Counted x16 head sizes, pinned per (session, corpus plan, minDf):
-    * the broadcast-gate count is a pure function of the pinned stats
-    * frame and minDf, so repeated invocations (benchmark passes, family
-    * consumers) must not re-pay the count job (round-19 review). On a miss
-    * the count runs EAGERLY, during DataFrame construction — the gate
-    * needs the number before the plan can be chosen.
-    */
-  private[graft] def headRows(docs: DataFrame, minDf: Long,
-      head: DataFrame): Long =
-    Pins.get("x16_head_rows", docs.sparkSession, None,
-      Pins.planDigest(docs) + ":" + minDf)(head.count())
-
   /** Pinned (w, n_w) term totals + the collected (n_c, V) corpus
     * totals, folded ONCE per (session, corpus plan) from
     * [[sharedPostings]] by two-phase partial aggregation. One pin builds
@@ -429,18 +274,6 @@ object TextAnalytics extends QueryModule {
       val c12 = sharedBigrams(docs)
         .groupBy(col("w1"), col("w2")).agg(sum(col("n_dw")).as("c12"))
       c12.join(c12.groupBy(col("w1")).agg(sum(col("c12")).as("c1")), "w1")
-    }
-
-  /** Pinned (w1, c1) context totals — unigram-vocab-sized, folded once
-    * from [[sharedBigramStats]]. Only the x16 minDf tail-prune path
-    * reads it (the exact path's stats rows already carry c1); pinning
-    * keeps the per-eval cost of the pruned form at "broadcast head join
-    * + one w1-keyed join" instead of re-folding the bigram-vocab frame
-    * per evaluation.
-    */
-  private[graft] def sharedBigramCtx(docs: DataFrame): DataFrame =
-    Pins.frame("bigram_ctx", docs.sparkSession, None, Pins.planDigest(docs)) {
-      sharedBigramStats(docs).groupBy(col("w1")).agg(max(col("c1")).as("c1"))
     }
 
   /** Forwards to [[graft.core.Pins.evict]] (see `Dedup.evictCaches`). */
@@ -473,23 +306,10 @@ object TextAnalytics extends QueryModule {
       .select($"doc_id".as("qid"),
         explode(array_distinct(
           slice(TextFunctions.wsTokens($"text"), 1, 3))).as("w"))
-    // spark.graft.bm25.termParallel (round-10 ADVICE, real code):
-    // default clusters on qid alone — post-scan parallelism is then
-    // bounded by the distinct query count (≤5 here), which is the
-    // right trade while queries are few (every downstream operator
-    // shares the one exchange). When query fan-out grows, the flag
-    // widens the clustering to (qid, w) — parallelism ∝ query TERMS —
-    // at the cost of two more posting-sized exchanges (the (qid,doc)
-    // score agg and the per-qid rank no longer ride the first
-    // shuffle). Result-identical (SkewFallbackSpec).
-    val hitKeys =
-      if (s.conf.get("spark.graft.bm25.termParallel", "false").toBoolean)
-        Seq($"qid", $"w")
-      else Seq($"qid")
     val hits = posts
       .select($"doc_id", $"len_d", $"w", $"n_dw") // pinned (doc, w) counts
       .join(broadcast(q), "w")
-      .repartition(hitKeys: _*) // the ONE shuffle — see plan note above
+      .repartition($"qid") // the ONE shuffle — see plan note above
       // one row per (qid, w, posting) ⇒ count over (qid, w) = df(w)
       .withColumn("df",
         count(lit(1)).over(Window.partitionBy($"qid", $"w")))
@@ -514,22 +334,11 @@ object TextAnalytics extends QueryModule {
 
   /** x14 core — per-doc unigram-LM mean log-probability
     * logp(w) = ln((n_w + 1)/(n_c + V)) weighted by the doc's own term
-    * counts, over an arbitrary (doc_id, text) frame. `salted` selects
-    * the skew-robust shape (see the block comment above). ln parity:
+    * counts, over an arbitrary (doc_id, text) frame. ln parity:
     * per-term double rounded to 9, decimal accumulation, final round 6
-    * (the x13 convention) — identical in both shapes because the counts
-    * are identical and the decimal sum is order-insensitive.
+    * (the x13 convention).
     */
-  /** Auto-dispatching form (the query-map entry point): probes the
-    * token family's hot-key share and picks the shape — see
-    * [[saltedFor]]. The 2-arg overload remains the forced-shape core
-    * the differential specs exercise.
-    */
-  private[graft] def unigramLogprob(docs: DataFrame): DataFrame =
-    unigramLogprob(docs, tokenSkewSalted(docs))
-
-  private[graft] def unigramLogprob(docs: DataFrame,
-      salted: Boolean): DataFrame = {
+  private[graft] def unigramLogprob(docs: DataFrame): DataFrame = {
     val sess = docs.sparkSession
     import sess.implicits._
     // the pinned (doc, term) counts — the ONLY corpus-sized input; the
@@ -538,12 +347,7 @@ object TextAnalytics extends QueryModule {
     // pinned vocab-sized term totals + the collected 1-row corpus
     // totals (n_c, V) — corpus statistics, computed once per session
     val (cw, nC, v) = sharedTermStats(docs)
-    val counts =
-      if (salted)
-        graft.operators.KeyedOps.saltedStatsJoin(dw, cw, Seq("w"),
-          saltBuckets(sess), col("doc_id"))
-      else dw.join(cw, "w") // size-selected; AQE-splittable on a hot w
-    counts
+    dw.join(cw, "w") // size-selected; AQE-splittable on a hot w
       .select($"doc_id", $"n_dw",
         round($"n_dw".cast("double") *
             (log(($"n_w" + 1).cast("double")) -
@@ -556,18 +360,13 @@ object TextAnalytics extends QueryModule {
   }
 
   /** x16 core — per-doc bigram-LM mean log-probability
-    * p(w2|w1) = (c(w1,w2) + 1)/(c(w1) + V). Same two shapes as
+    * p(w2|w1) = (c(w1,w2) + 1)/(c(w1) + V). Same plan as
     * [[unigramLogprob]]; V is the unigram vocab size (its own 1-row
     * distinct agg — single-token docs contribute vocabulary but no
     * bigram, so V cannot fold from the bigram stream). Docs with
     * < 2 tokens have no bigrams and no row.
     */
-  /** Auto-dispatching form — see [[unigramLogprob]]. */
-  private[graft] def bigramLogprob(docs: DataFrame): DataFrame =
-    bigramLogprob(docs, tokenSkewSalted(docs))
-
-  private[graft] def bigramLogprob(docs: DataFrame,
-      salted: Boolean): DataFrame = {
+  private[graft] def bigramLogprob(docs: DataFrame): DataFrame = {
     val sess = docs.sparkSession
     import sess.implicits._
     // pinned per-doc bigram counts + pinned (w1, w2, c12, c1) totals;
@@ -577,67 +376,7 @@ object TextAnalytics extends QueryModule {
     val db = sharedBigrams(docs)
     val v = sharedTermStats(docs)._3
     val stats = sharedBigramStats(docs)
-    // TAIL-PRUNED LM — the 100 TB lever for x16's vocab-growth slope
-    // (round-16 verdict item 7): the bigram vocab is the corpus's
-    // heaviest sublinear grower (2.7-6.2x at 10x), and the stats side
-    // of the scoring join carries ALL of it. With graft.x16.minDf = m
-    // (> 1), bigrams seen < m times corpus-wide are dropped from the
-    // stats side and score as UNSEEN (c12 = 0 under the same add-one
-    // smoothing) — the standard LM tail cutoff. The head frame shrinks
-    // to the Zipf head (planted-vocab measurement in SCALE.md), small
-    // enough that Catalyst/AQE picks a broadcast join — no db-side
-    // shuffle and no skew exposure, so the salted fallback is moot in
-    // this path. Context totals (c1) fold BEFORE the prune: they are
-    // the w1 context mass, which the cutoff must not change. Default
-    // (m <= 1) is the EXACT form, plan-identical to round 16
-    // (spec-proven identity).
-    val minDf = sess.conf.getOption("graft.x16.minDf")
-      .map(_.toLong).getOrElse(1L)
-    val counts =
-      if (minDf > 1L) {
-        // broadcast(head) is EXPLICIT (round 18, r17 ADVICE): the
-        // pruned path exists to replace the (w1,w2)-keyed shuffle, but
-        // nothing guaranteed Catalyst picked a broadcast — a small
-        // minDf on a skewed corpus would silently reinstate the
-        // hot-key shuffle the salted fallback absorbs. The hint makes
-        // the contract real: the Zipf head ships to every executor and
-        // the db side never shuffles for this join. The c1-context
-        // join on w1 is unigram-vocab-sized (NOT head-pruned — the
-        // cutoff must not change context mass), so it keeps the salted
-        // machinery when the corpus profile demanded it.
-        val head = stats.filter($"c12" >= minDf)
-          .select($"w1", $"w2", $"c12")
-        // …but the hint is SIZE-GATED (round 19, r18 ADVICE medium):
-        // an explicit broadcast bypasses autoBroadcastJoinThreshold,
-        // so minDf barely above 1 on a large corpus — where the "head"
-        // is nearly the full bigram vocab — would fail the job with a
-        // broadcast-size error or driver OOM where the size-selected
-        // plan degraded gracefully. One exact count of the pruned head
-        // (an agg over the stats frame, paid only on the minDf>1 path)
-        // gates the hint at `graft.x16.broadcastMaxRows` (default 2M
-        // rows ≈ low hundreds of MB of bigram strings); past the
-        // ceiling the join falls back to the salted / size-selected
-        // (w1,w2) LEFT join — identical missing-as-unseen semantics,
-        // skew absorbed by the same salting the exact path uses.
-        val maxHead = sess.conf.getOption("graft.x16.broadcastMaxRows")
-          .map(_.toLong).getOrElse(2000000L)
-        val withHead =
-          if (headRows(docs, minDf, head) <= maxHead)
-            db.join(broadcast(head), Seq("w1", "w2"), "left")
-          else if (salted)
-            graft.operators.KeyedOps.saltedStatsJoin(db, head,
-              Seq("w1", "w2"), saltBuckets(sess), col("doc_id"), "left")
-          else db.join(head, Seq("w1", "w2"), "left")
-        if (salted)
-          graft.operators.KeyedOps.saltedStatsJoin(withHead,
-            sharedBigramCtx(docs), Seq("w1"), saltBuckets(sess),
-            col("doc_id"))
-        else withHead.join(sharedBigramCtx(docs), "w1")
-      } else if (salted)
-        graft.operators.KeyedOps.saltedStatsJoin(db, stats,
-          Seq("w1", "w2"), saltBuckets(sess), col("doc_id"))
-      else db.join(stats, Seq("w1", "w2"))
-    counts
+    db.join(stats, Seq("w1", "w2"))
       .select($"doc_id", $"n_dw",
         round($"n_dw".cast("double") *
             (log((coalesce($"c12", lit(0L)) + 1).cast("double")) -
@@ -702,18 +441,17 @@ object TextAnalytics extends QueryModule {
     predLangOf(langHits(TextFunctions.wsTokens(text)))
 
   /** x11's shard count — the packing op's parallelism. Derived once per
-    * JVM from the session's parallelism (d5's derived-constant pattern;
-    * overridable via -Dgraft.x11.shards) instead of a fixed literal that
-    * would cap the window parallelism at 8×n_langs on any cluster. The
+    * JVM from the session's parallelism (d5's derived-constant pattern)
+    * instead of a fixed literal that would cap the window parallelism at
+    * 8×n_langs on any cluster. The
     * value is then embedded as a LITERAL in both the query and the oracle
     * SQL (p19's threshold pattern), so the doc_id→shard assignment stays
     * deterministic and DuckDB replays it exactly. `lazy val`: the query
     * build and the oracle dump of one run read the SAME computed value.
     */
   private[queries] lazy val packShards: Long = {
-    val n = sys.props.get("graft.x11.shards").map(_.toLong)
-      .orElse(org.apache.spark.sql.SparkSession.getActiveSession
-        .map(_.sparkContext.defaultParallelism.toLong))
+    val n = org.apache.spark.sql.SparkSession.getActiveSession
+      .map(_.sparkContext.defaultParallelism.toLong)
       .getOrElse(Runtime.getRuntime.availableProcessors().toLong)
     math.max(1L, n)
   }
@@ -846,8 +584,8 @@ object TextAnalytics extends QueryModule {
     // read left is the pushed-filter query branch (PlanSpec asserts
     // the shape).
     // Parallelism is bounded by the query count; at real scale you'd
-    // repartition by (qid, w) — or salt — and pay two more tiny
-    // exchanges, but the corpus-side cost is identical. Double parity:
+    // repartition by (qid, w) and pay two more tiny exchanges, but the
+    // corpus-side cost is identical. Double parity:
     // IDF ln round-9 (x13 convention), the TF fraction is pure IEEE
     // double arithmetic written in the same operation order in both
     // engines, per-term product round-9, decimal sum, final round-6.
@@ -1468,9 +1206,8 @@ object TextAnalytics extends QueryModule {
     // signal a pretraining pipeline uses to rank documents before
     // filtering: template spam and wrong-segmentation text score far
     // below fluent prose under the corpus's own distribution. Plan
-    // shapes (default window-count / salted skew fallback) and the
-    // `spark.graft.saltedSkew` dispatch: see [[unigramLogprob]] and
-    // the LM-score block comment above it.
+    // (pinned counts, agg + equi-join on the term): see
+    // [[unigramLogprob]] and the LM-score block comment above it.
     "x14_unigram_logprob" -> ((s, dir) =>
       unigramLogprob(Tables.documents(s, dir))),
 
@@ -1504,10 +1241,9 @@ object TextAnalytics extends QueryModule {
     // p(w2|w1) = (c(w1,w2)+1)/(c(w1)+V), the closest an exact
     // SQL-replayable score gets to the perplexity filters production
     // curation runs (a doc of common words in an uncommon ORDER now
-    // scores low, which x14 cannot see). Plan shapes (default
-    // window-count / salted skew fallback) and the
-    // `spark.graft.saltedSkew` dispatch: see [[bigramLogprob]] and
-    // the LM-score block comment above it.
+    // scores low, which x14 cannot see). Plan (pinned counts, agg +
+    // equi-join on (w1, w2)): see [[bigramLogprob]] and the LM-score
+    // block comment above it.
     "x16_bigram_logprob" -> ((s, dir) =>
       bigramLogprob(Tables.documents(s, dir))),
 
@@ -1871,12 +1607,10 @@ object TextAnalytics extends QueryModule {
     // backs off to the unigram model instead:
     //   p(w2|w1) = λ·c(w1,w2)/c(w1) + (1−λ)·c(w2)/N,   λ = 0.75
     // (the KenLM-class recipe; KN smoothing differs only in the
-    // discount arithmetic, the plan shape is identical). Two shapes,
-    // same flag as x14/x16 (round 14): default joins the pinned bigram
-    // count frame with the pinned (c12, c1) and unigram stats — all
-    // equi-joins, AQE-skew-splittable on a hot w1/w2 ("the"); salted
-    // replaces both attachments with explicit (term…, salt) joins so no
-    // corpus-sized exchange is ever keyed by a bare term. Parity: both
+    // discount arithmetic, the plan shape is identical). Plan (x14/x16's,
+    // round 14): the pinned bigram count frame joins the pinned
+    // (c12, c1) and unigram stats — both equi-joins, AQE-skew-splittable
+    // on a hot w1/w2 ("the"). Parity: both
     // divisions and the interpolation sum are IEEE doubles in identical
     // operand order, ln is round-9 anchored, per-term products round-9,
     // decimal accumulation, final round-6 (x13/x16 convention).
@@ -2069,16 +1803,9 @@ object TextAnalytics extends QueryModule {
 
   /** x29 core — Jelinek-Mercer interpolated bigram LM score
     * p(w2|w1) = λ·c(w1,w2)/c(w1) + (1−λ)·c(w2)/N over an arbitrary
-    * (doc_id, text) frame; `salted` selects the skew-robust shape
-    * (same flag and doctrine as [[bigramLogprob]]). Factored for
-    * SkewFallbackSpec's identity proof on the planted hot-context
-    * corpus.
+    * (doc_id, text) frame.
     */
-  /** Auto-dispatching form — see [[unigramLogprob]]. */
-  private[graft] def interpLm(docs: DataFrame): DataFrame =
-    interpLm(docs, tokenSkewSalted(docs))
-
-  private[graft] def interpLm(docs: DataFrame, salted: Boolean): DataFrame = {
+  private[graft] def interpLm(docs: DataFrame): DataFrame = {
     val sess = docs.sparkSession
     import sess.implicits._
     // pinned unigram stats (w2's totals) + pinned bigram stats; N is
@@ -2088,15 +1815,8 @@ object TextAnalytics extends QueryModule {
     val uni = cw.withColumnsRenamed(Map("w" -> "w2", "n_w" -> "n_w2"))
     val db = sharedBigrams(docs)
     val stats = sharedBigramStats(docs)
-    val counts =
-      if (salted) {
-        val bi = graft.operators.KeyedOps.saltedStatsJoin(db, stats,
-          Seq("w1", "w2"), saltBuckets(sess), col("doc_id"))
-        graft.operators.KeyedOps.saltedStatsJoin(bi, uni, Seq("w2"),
-          saltBuckets(sess), col("doc_id"))
-      } else
-        db.join(stats, Seq("w1", "w2"))
-          .join(uni, "w2") // vocab-sized stats sides — size-selected
+    val counts = db.join(stats, Seq("w1", "w2"))
+      .join(uni, "w2") // vocab-sized stats sides — size-selected
 
     val p = lit(0.75) * ($"c12".cast("double") / $"c1".cast("double")) +
       lit(0.25) * ($"n_w2".cast("double") / lit(nTok).cast("double"))

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.core.GraftSession
-import graft.queries.TextAnalytics
 import org.apache.spark.sql.SparkSession
 
 /** Scaling-evidence fixture + probe (round-6 verdict item 3): the sf1
@@ -108,9 +107,8 @@ object ScaleFixture {
 
   /** The x14/x16 SKEW corpus (round-10 verdict item 1): every odd token
     * position is the hot context "the", so ~50% of bigram instances
-    * share one w1 — far past the verdict's ≥20% bar. Measures the
-    * default window-count shape against the salted fallback where the
-    * hot key actually bites.
+    * share one w1 — far past the verdict's ≥20% bar. Measures x14/x16's
+    * agg + equi-join plan where the hot key actually bites.
     */
   def genDocumentsSkew(spark: SparkSession, outDir: String,
       mult: Int): Unit = {
@@ -129,40 +127,6 @@ object ScaleFixture {
         }
       }
       val text = toks.mkString(" ")
-      Doc(id, text, "en", "synthetic", text.length.toLong)
-    }.repartition(32)
-      .write.mode("overwrite").parquet(s"$outDir/documents.parquet")
-  }
-
-  /** The x25 HIGH-CARDINALITY quality corpus (round 20, r19 verdict
-    * item 2): the standard fixture's ~40-60 token docs over a closed
-    * vocab collapse to only ~5k distinct quality doubles at 100× — the
-    * regime where exact `percentile`'s value map CANNOT hurt, so the
-    * r19 measurement (exact vs approx wall-neutral) never exercised the
-    * approx swap's motivation. Here every doc gets a doc-unique
-    * punctuation+pad tail — `1 + id%499` punct chars and `id%997` pad
-    * chars riding one extra token — so qualityCol's punctuation ratio
-    * (punct/len over a doc-unique (punct, len) pair) makes the quality
-    * double essentially unique per doc: distinct values grow ∝ docs,
-    * which is exactly the state the exact percentile buffers and the
-    * approx sketch bounds.
-    */
-  def genDocumentsHighCard(spark: SparkSession, outDir: String,
-      mult: Int): Unit = {
-    import spark.implicits._
-    val n = 5000L * mult
-    spark.range(n).map { id =>
-      val rng = new scala.util.Random(id * 2654435761L + 23)
-      val nTok = 40 + rng.nextInt(21)
-      val toks = Array.tabulate(nTok) { _ =>
-        val u = rng.nextDouble()
-        val k = (math.exp(u * math.log(2000.0 + 10) +
-          (1 - u) * math.log(10.0)) - 10).toInt
-        s"w${math.max(0, math.min(1999, k))}"
-      }
-      val punct = 1 + (id % 499).toInt
-      val pad = (id % 997).toInt
-      val text = toks.mkString(" ") + " " + ("x" * pad) + ("." * punct)
       Doc(id, text, "en", "synthetic", text.length.toLong)
     }.repartition(32)
       .write.mode("overwrite").parquet(s"$outDir/documents.parquet")
@@ -190,11 +154,10 @@ object ScaleFixture {
     *
     * Usage: runMain graft.tools.ScaleFixture [root] [mode]
     * mode ∈ all | core (docs/embeddings families, 1× vs 10×) | events
-    * (the events-table family) | skew (x14/x16 default-vs-salted on the
-    * hot-context corpus) | x25 (exact vs approx boundaries) | decade2 /
-    * edecade2 (documents / events at 10× vs 100×) | x25hc (generation
-    * only) | q:<name>,<name>… (the named document-family queries, 1× vs
-    * 10×).
+    * (the events-table family) | skew (x14/x16 on the hot-context
+    * corpus) | x25 (the exact shard boundaries) | decade2 / edecade2
+    * (documents / events at 10× vs 100×) | q:<name>,<name>… (the named
+    * document-family queries, 1× vs 10×).
     */
   def main(args: Array[String]): Unit = {
     val root = if (args.nonEmpty) args(0) else "/root/repo/.scale"
@@ -220,30 +183,13 @@ object ScaleFixture {
     if (mode == "all" || mode == "skew") {
       val (s1, s10) = (s"$root/s1", s"$root/s10")
       genDocumentsSkew(spark, s1, 1); genDocumentsSkew(spark, s10, 10)
-      for (shape <- Seq("default", "salted")) {
-        spark.conf.set(TextAnalytics.SaltedSkewKey, (shape == "salted").toString)
-        slope(spark, s"skew-$shape",
-          Seq("x14_unigram_logprob", "x16_bigram_logprob"), s1, s10)
-      }
-      spark.conf.unset(TextAnalytics.SaltedSkewKey)
+      slope(spark, "skew", Seq("x14_unigram_logprob", "x16_bigram_logprob"),
+        s1, s10)
     }
-    // x25 exact vs percentile_approx boundaries: the exact aggregate's
-    // state grows with distinct quality values; the sketch should hold ~1×
-    if (mode == "all" || mode == "x25") {
-      val (x1, x10) = (docs(s"$root/x1", 1), docs(s"$root/x10", 10))
-      for (shape <- Seq("exact", "approx")) {
-        spark.conf.set(TextAnalytics.ApproxBoundariesKey,
-          (shape == "approx").toString)
-        slope(spark, s"x25-$shape", Seq("x25_shard_manifest"), x1, x10)
-      }
-      spark.conf.unset(TextAnalytics.ApproxBoundariesKey)
-    }
-    // generation-only: the high-cardinality x25 fixture dirs
-    if (mode == "x25hc") {
-      genDocumentsHighCard(spark, s"$root/hc10", 10)
-      genDocumentsHighCard(spark, s"$root/hc100", 100)
-      println("x25hc fixtures written: hc10 (50k docs), hc100 (500k docs)")
-    }
+    // x25's exact boundary aggregate keeps state ∝ distinct quality values
+    if (mode == "all" || mode == "x25")
+      slope(spark, "x25", Seq("x25_shard_manifest"),
+        docs(s"$root/x1", 1), docs(s"$root/x10", 10))
     // second decade: the steepest first-decade slopes at 10× vs 100×
     if (mode == "decade2")
       slope(spark, "decade2", decade2Queries,

@@ -94,53 +94,18 @@ class OperatorsSpec extends SparkSpec {
     // chain 1-2-3, clique 4-5-6, edge 7-? none, 8 isolated
     val edges = Seq((1L, 2L), (2L, 3L), (4L, 5L), (5L, 6L), (4L, 6L))
       .toDF("src", "dst")
-    val comp = graft.operators.ConnectedComponents.run(nodes, edges)
+    val comp = graft.operators.ConnectedComponents.runStar(nodes, edges)
       .as[(Long, Long)].collect().toMap
     assert(comp == Map(1L -> 1L, 2L -> 1L, 3L -> 1L,
       4L -> 4L, 5L -> 4L, 6L -> 4L, 7L -> 7L, 8L -> 8L))
-  }
-
-  test("runStar == run on random graphs, chains and cliques (property)") {
-    import graft.operators.ConnectedComponents
-    import spark.implicits._
-    // Deterministic seeded graphs: both algorithms must produce identical
-    // (id, component) maps. The 40-node path is the high-diameter case
-    // runStar exists for (label-prop needs 39 rounds; star is O(log)).
-    val rnd = new scala.util.Random(42)
-    val cases = Seq(
-      (1L to 40L).map(i => (i, i + 1)).dropRight(1),            // path
-      (1L to 6L).flatMap(i => (i + 1 to 6L).map((i, _))),       // clique
-      Seq.empty[(Long, Long)],                                  // isolated
-      Seq.fill(60)((rnd.nextInt(30) + 1L, rnd.nextInt(30) + 1L)) // random
-        .filter { case (a, b) => a != b })
-    cases.foreach { es =>
-      val n = (es.flatMap(e => Seq(e._1, e._2)) :+ 1L).max
-      val nodes = (1L to n).toDF("id")
-      val edges = es.toDF("src", "dst")
-      val viaProp = ConnectedComponents.run(nodes, edges)
-        .as[(Long, Long)].collect().toMap
-      val viaStar = ConnectedComponents.runStar(nodes, edges)
-        .as[(Long, Long)].collect().toMap
-      assert(viaStar == viaProp, s"star disagrees with label-prop on $es")
-    }
-    // maxIter contract matches run(): throws instead of wrong labels.
-    // Force the distributed path (round 20): the driver-local finish
-    // closes this 39-edge graph EXACTLY at round 0, so under the default
-    // cap there is nothing for maxIter to interrupt.
-    val nodes = (1L to 40L).toDF("id")
-    val path = (1L to 39L).map(i => (i, i + 1)).toDF("src", "dst")
-    spark.conf.set("spark.graft.cc.localEdgeMax", "0")
-    try intercept[IllegalStateException](
-      ConnectedComponents.runStar(nodes, path, maxIter = 1))
-    finally spark.conf.unset("spark.graft.cc.localEdgeMax")
   }
 
   test("connectedComponents == plain JVM union-find on random graphs " +
       "(independent ground truth, property)") {
     import graft.operators.ConnectedComponents
     import spark.implicits._
-    // both Spark variants are iterative label-propagation shapes that
-    // COULD share a bug; union-find is a structurally different oracle
+    // union-find is a structurally different oracle from the star
+    // rewiring
     def unionFind(n: Long, es: Seq[(Long, Long)]): Map[Long, Long] = {
       val parent = scala.collection.mutable.Map((1L to n).map(i => i -> i): _*)
       def find(x: Long): Long = {
@@ -157,34 +122,49 @@ class OperatorsSpec extends SparkSpec {
       // min-id labeling: root chosen as min via the union rule above
       (1L to n).map(i => i -> find(i)).toMap
     }
-    for (seed <- Seq(7, 21, 99)) {
+    val seeded = Seq(7, 21, 99).map { seed =>
       val rnd = new scala.util.Random(seed)
       val n = 25L + rnd.nextInt(25)
-      val es = Seq.fill(40 + rnd.nextInt(40))(
+      n -> Seq.fill(40 + rnd.nextInt(40))(
         (rnd.nextLong(n) + 1, rnd.nextLong(n) + 1))
         .filter { case (a, b) => a != b }
+    }
+    // the 40-node path is the high-diameter case the star rewiring
+    // exists for (label propagation needs 39 rounds; star is O(log))
+    val rnd = new scala.util.Random(42)
+    val shaped = Seq(
+      (1L to 40L).map(i => (i, i + 1)).dropRight(1),            // path
+      (1L to 6L).flatMap(i => (i + 1 to 6L).map((i, _))),       // clique
+      Seq.empty[(Long, Long)],                                  // isolated
+      Seq.fill(60)((rnd.nextInt(30) + 1L, rnd.nextInt(30) + 1L)) // random
+        .filter { case (a, b) => a != b })
+      .map(es => (es.flatMap(e => Seq(e._1, e._2)) :+ 1L).max -> es)
+    for ((n, es) <- seeded ++ shaped) {
       val want = unionFind(n, es)
       val got = ConnectedComponents.runStar(
         (1L to n).toDF("id"), es.toDF("src", "dst"))
         .as[(Long, Long)].collect().toMap
-      assert(got == want, s"seed=$seed: star disagrees with union-find")
+      assert(got == want, s"star disagrees with union-find on $es")
     }
+    // maxIter throws instead of returning wrong labels. localEdgeMax = 0
+    // forces the distributed path: the driver-local finish closes this
+    // 39-edge graph EXACTLY at round 0, leaving nothing to interrupt.
+    val path = (1L to 39L).map(i => (i, i + 1)).toDF("src", "dst")
+    intercept[IllegalStateException](ConnectedComponents.runStar(
+      (1L to 40L).toDF("id"), path, maxIter = 1, localEdgeMax = 0))
   }
 
   test("runStar driver-local finish == forced-distributed fixpoint, " +
       "incl. a mid-run threshold crossing (round 20 differential)") {
     import graft.operators.ConnectedComponents
     import spark.implicits._
-    // the local finish (spark.graft.cc.localEdgeMax) collects the live
-    // edge frame and closes with an exact union-find; labels must be
+    // the local finish (runStar's localEdgeMax) collects the live edge
+    // frame and closes with an exact union-find; labels must be
     // bit-identical to running the star rewiring to its fixpoint
     def labels(nodes: org.apache.spark.sql.DataFrame,
-        edges: org.apache.spark.sql.DataFrame, cap: String) = {
-      spark.conf.set("spark.graft.cc.localEdgeMax", cap)
-      try ConnectedComponents.runStar(nodes, edges)
+        edges: org.apache.spark.sql.DataFrame, cap: Long) =
+      ConnectedComponents.runStar(nodes, edges, localEdgeMax = cap)
         .as[(Long, Long)].collect().toMap
-      finally spark.conf.unset("spark.graft.cc.localEdgeMax")
-    }
     val rnd = new scala.util.Random(1234)
     val cases = Seq(
       (1L to 40L).map(i => (i, i + 1)).dropRight(1),             // path
@@ -196,13 +176,12 @@ class OperatorsSpec extends SparkSpec {
       val n = (es.flatMap(e => Seq(e._1, e._2)) :+ 1L).max
       val nodes = (1L to n).toDF("id")
       val edges = es.toDF("src", "dst")
-      val distributed = labels(nodes, edges, "0")     // never collects
-      val localRound0 = labels(nodes, edges, "200000") // collects round 0
+      val distributed = labels(nodes, edges, 0L)     // never collects
+      val localRound0 = labels(nodes, edges, 200000L) // collects round 0
       // cap below the initial edge count but above the rewired frame:
       // the run does distributed rounds FIRST, then crosses the
       // threshold and finishes locally mid-run
-      val crossing = labels(nodes, edges,
-        math.max(1, es.size / 2).toString)
+      val crossing = labels(nodes, edges, math.max(1L, es.size / 2L))
       assert(localRound0 == distributed, s"round-0 local finish on $es")
       assert(crossing == distributed, s"mid-run local finish on $es")
     }

@@ -88,13 +88,11 @@ class PinRecoverySpec extends SparkSpec {
     (digestPins.values ++ Seq(dirPin, otherDirPin)).foreach(_.count())
     digestPins.foreach { case (name, df) => assert(pinned(df), s"$name pin") }
     // value pins: pinned, so a changed input is not seen until eviction
-    val tag = "pin-recovery-" + java.util.UUID.randomUUID()
-    val hot = Seq(1, 1, 1, 2).toDF("k")
-    val flat = Seq(1, 2, 3, 4).toDF("k")
-    assert(TextAnalytics.hotKeyShare(spark, tag, hot) == 0.75)
-    assert(TextAnalytics.hotKeyShare(spark, tag, flat) == 0.75)
-    assert(TextAnalytics.headRows(docs, 2L, spark.range(3).toDF()) == 3L)
-    assert(TextAnalytics.headRows(docs, 2L, spark.range(5).toDF()) == 3L)
+    val valueKey = "pin-recovery-" + java.util.UUID.randomUUID()
+    def valuePin(input: org.apache.spark.sql.DataFrame): Long =
+      Pins.get("pin_recovery_value", spark, None, valueKey)(input.count())
+    assert(valuePin(spark.range(3).toDF()) == 3L)
+    assert(valuePin(spark.range(5).toDF()) == 3L)
 
     Pins.evict(spark, Some(dir))
     assert(!pinned(dirPin), "the dir's own pin must be released")
@@ -104,10 +102,8 @@ class PinRecoverySpec extends SparkSpec {
     assert(pinned(otherDirPin), "another dir's pin must stay")
     assert(Dedup.sharedSimhashGroupPairs(spark, otherDir) eq otherDirPin)
     assert(pinned(otherSessionPin), "another session's pin must stay")
-    assert(TextAnalytics.hotKeyShare(spark, tag, flat) == 0.25,
-      "the skew probe must recompute after eviction")
-    assert(TextAnalytics.headRows(docs, 2L, spark.range(5).toDF()) == 5L,
-      "the x16 head count must recompute after eviction")
+    assert(valuePin(spark.range(5).toDF()) == 5L,
+      "a dir-less value pin must recompute after eviction")
 
     Pins.evict(spark)
     assert(!pinned(otherDirPin), "evict(s) must release every dir's pins")
@@ -199,11 +195,8 @@ class PinRecoverySpec extends SparkSpec {
       // force the DISTRIBUTED fixpoint (round 20): under the default
       // cap the driver-local finish closes this 63-edge chain at round
       // 0 and releases every round file — asserted separately below
-      spark.conf.set("spark.graft.cc.localEdgeMax", "0")
-      val labels =
-        try graft.operators.ConnectedComponents
-          .runStar(nodes, edges, edgesDistinct = true)
-        finally spark.conf.unset("spark.graft.cc.localEdgeMax")
+      val labels = graft.operators.ConnectedComponents
+        .runStar(nodes, edges, edgesDistinct = true, localEdgeMax = 0)
       assert(labels.agg(max($"component")).head().getLong(0) == 0L,
         "one chain component labeled by its min id")
       assert(roundDirs().size == 1,

@@ -6,13 +6,15 @@ import java.util.concurrent.atomic.AtomicInteger
 import graft.core.Pins
 import org.apache.spark.sql.DataFrame
 
-/** The pin registry's concurrency contract: a build runs once per key,
-  * outside the map's locks, and a build that throws is not cached.
+/** The pin registry's contract: a build runs once per key, outside the
+  * map's locks, a build that throws is not cached, and a query family's
+  * consumers share the one pinned frame.
   *
-  * Each test picks its second key so that it lands in the SAME map bin
-  * as the first one. A registry that built inside `computeIfAbsent`
-  * would then hold that bin's lock for the whole build: a nested pin
-  * would throw `Recursive update` and an unrelated caller would block.
+  * The concurrency tests pick their second key so that it lands in the
+  * SAME map bin as the first one. A registry that built inside
+  * `computeIfAbsent` would then hold that bin's lock for the whole
+  * build: a nested pin would throw `Recursive update` and an unrelated
+  * caller would block.
   */
 class PinsSpec extends SparkSpec {
 
@@ -117,5 +119,18 @@ class PinsSpec extends SparkSpec {
     assert(Pins.get("pins_spec_fail", spark, None, key) { builds.incrementAndGet(); 8 } == 7)
     assert(builds.get == 2)
     Pins.evict(spark)
+  }
+
+  test("j11/j12 share ONE pinned bm25 rank frame per (session, dir)") {
+    val dir = "/root/testdata/sf0.001"
+    def sortedRows(df: DataFrame): Seq[String] =
+      df.select(df.columns.sorted.toSeq.map(df.col): _*).collect()
+        .map(_.mkString("|")).toSeq.sorted
+    val a = SparkEntry.queries("j11_bm25")(spark, dir)
+    val b = SparkEntry.queries("j11_bm25")(spark, dir)
+    assert(a eq b, "second j11 build must return the pinned frame")
+    // and the pinned frame's values equal a fresh unpinned evaluation
+    assert(sortedRows(a) ==
+      sortedRows(graft.queries.TextAnalytics.bm25Plan(spark, dir)))
   }
 }

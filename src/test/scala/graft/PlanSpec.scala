@@ -239,37 +239,6 @@ class PlanSpec extends SparkSpec {
     }
   }
 
-  test("x14/x16/d12 salted fallback: no window count, corpus join keyed on (term, salt)") {
-    // Round-11 (r10 verdict item 1): the skew fallback behind
-    // spark.graft.saltedSkew plans ZERO Window operators (a hot
-    // term's window partition cannot be split by any runtime feature),
-    // no bare-term clustering repartition, and its corpus-sized stats
-    // join must key on (term…, salt) — the explicit salt that bounds a
-    // Zipf-hot term's partition share by construction. The physical
-    // strategy stays size-selected (broadcast at toy SF, shuffle on the
-    // salted keys past that), so the pin is on the JOIN KEYS.
-    try {
-      spark.conf.set(graft.queries.TextAnalytics.SaltedSkewKey, "true")
-      for ((q, saltedKeys) <- Seq(
-          "x14_unigram_logprob" ->
-            """Join \[w#\d+, __salt#""",
-          "x16_bigram_logprob" ->
-            """Join \[w1#\d+, w2#\d+, __salt#""",
-          "d12_ngram_novelty" ->
-            """Join \[shingle#\d+L?, __salt#""")) {
-        val df = SparkEntry.queries(q)(spark, dir)
-        df.collect() // finalize AQE
-        val p = graft.core.PlanWalk.outer(df)
-        assert(!p.contains("Window"),
-          s"$q salted: no window count may survive:\n$p")
-        assert(!p.contains("REPARTITION_BY_COL"),
-          s"$q salted: no bare-term clustering repartition:\n$p")
-        assert(saltedKeys.r.findFirstIn(p).isDefined,
-          s"$q salted: the stats join must key on (term…, salt):\n$p")
-      }
-    } finally spark.conf.unset(graft.queries.TextAnalytics.SaltedSkewKey)
-  }
-
   test("x17/t6: per-group stats ride clustered windows — no derived-frame join") {
     // Round-10: x17's norm and t6's sketch cells were aggregates joined
     // back onto their own input frame (double-computed under divergent
@@ -678,24 +647,6 @@ class PlanSpec extends SparkSpec {
       s"no per-eval window count over the instance stream:\n$p")
     assert(!p.contains("REPARTITION_BY_COL"),
       s"no explicit clustering repartition:\n$p")
-    // the salted variant's join-key pin rides the test below
-  }
-
-  test("x29_interp_lm salted: no window count, joins keyed on (term…, salt)") {
-    try {
-      spark.conf.set(graft.queries.TextAnalytics.SaltedSkewKey, "true")
-      val df = SparkEntry.queries("x29_interp_lm")(spark, dir)
-      df.collect() // finalize AQE
-      val p = graft.core.PlanWalk.outer(df)
-      assert(!p.contains("Window"),
-        s"salted: no window count may survive:\n$p")
-      assert(!p.contains("REPARTITION_BY_COL"),
-        s"salted: no bare-term clustering repartition:\n$p")
-      assert("""Join \[w1#\d+, w2#\d+, __salt#""".r.findFirstIn(p).isDefined,
-        s"salted: bigram stats join must key on (w1, w2, salt):\n$p")
-      assert("""Join \[w2#\d+, __salt#""".r.findFirstIn(p).isDefined,
-        s"salted: unigram stats join must key on (w2, salt):\n$p")
-    } finally spark.conf.unset(graft.queries.TextAnalytics.SaltedSkewKey)
   }
 
   test("d31_host_filter: rowwise host + broadcast anti-join + one tiny agg") {
