@@ -1,6 +1,10 @@
 package graft.core
 
+import com.sun.management.HotSpotDiagnosticMXBean
 import org.apache.spark.sql.SparkSession
+
+import java.lang.management.ManagementFactory
+import scala.util.Try
 
 /** Session factory for the graft engine.
   *
@@ -33,24 +37,39 @@ object GraftSession {
     */
   val CodegenCacheEntries: Int = 4096
 
-  /** `rocksDbState = true` switches streaming state to the RocksDB
-    * provider — the production choice once per-key state exceeds heap
-    * (bounded memory, incremental checkpoints). Semantics identical;
-    * `StreamOpsSpec` exercises both providers. `master` overrides the
-    * default `local[cores]` (a cluster submit); `cores` still sizes the
-    * shuffle partitions.
+  /** Size of Spark's on-heap memory pages (`spark.buffer.pageSize`) and
+    * broadcast blocks (`spark.broadcast.blockSize`): a quarter of a G1
+    * heap region, the largest power of two G1 still allocates as an
+    * ordinary object. Spark's own sizes (pages of up to 64 MB, blocks of
+    * 4 MB) are at least half a region, so G1 makes each one a humongous
+    * object: whole regions of its own, reclaimed only by a young GC. Every
+    * broadcast (each stage's task binary is one) serializes into a fresh
+    * 4 MB buffer that is garbage at once, and pooled pages die at each GC
+    * and are allocated anew. How many such dead regions lie in the heap
+    * when a GC falls depends on its timing, so the heap's high-water mark,
+    * and with it the resident memory of the process, moved by up to
+    * ~750 MB between identical runs (registry-mix, 3 GB heap, 2 MB
+    * regions). At G1's default region size a quarter region still lets a
+    * task's page table (8,192 pages) span the whole heap. None when the
+    * JVM does not run G1: Spark's sizes stay.
+    */
+  val HeapBufferBytes: Option[Long] =
+    Try(ManagementFactory.getPlatformMXBean(classOf[HotSpotDiagnosticMXBean])
+      .getVMOption("G1HeapRegionSize").getValue.toLong).toOption
+      .filter(_ > 0).map(_ / 4)
+
+  /** `master` overrides the default `local[cores]` (a cluster submit);
+    * `cores` still sizes the shuffle partitions. Streaming state uses
+    * Spark's default provider; a session that needs the RocksDB provider
+    * sets `spark.sql.streaming.stateStore.providerClass` itself, as
+    * `StreamOpsSpec`'s RocksDB tests do.
     */
   def local(cores: Int = 32, appName: String = "graft",
-            rocksDbState: Boolean = false,
             master: Option[String] = None): SparkSession = {
     val builder = SparkSession
       .builder()
       .master(master.getOrElse(s"local[$cores]"))
       .appName(appName)
-    if (rocksDbState) builder.config(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val spark = builder
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
@@ -59,7 +78,10 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
       .config("spark.sql.codegen.useIdInClassName", "false")
-      .getOrCreate()
+    for (b <- HeapBufferBytes) builder
+      .config("spark.buffer.pageSize", s"${b}b")
+      .config("spark.broadcast.blockSize", s"${b}b")
+    val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // spark.graft.checkpointDir (opt-in): wires the context checkpoint
     // dir so iterative operators (ConnectedComponents) truncate lineage

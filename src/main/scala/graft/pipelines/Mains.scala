@@ -421,10 +421,6 @@ object GameStatsMain {
   }
 }
 
-/** StatefulTeamScore (`StatefulTeamScore.scala:55-113`): per-team
-  * cumulative score with an emission each time the total crosses a
-  * multiple of the threshold (W15 ValueState), crossings appended as CSV.
-  */
 /** End-to-end training-data curation (beyond the reference surface —
   * the capstone composition of the engine's pipeline operators):
   * documents → quality gate → normalized exact dedup → optional
@@ -531,13 +527,6 @@ object CuratePipelineMain {
   }
 }
 
-/** Corpus-health report — the per-ingest-batch diagnostic bundle a
-  * training-data pipeline runs alongside curation: every battery member
-  * is an existing oracle-checked query with a BOUNDED output (source-,
-  * vocab-, or constant-sized — never per-doc), so the whole report is
-  * driver-safe at any corpus size. One JSON file per diagnostic under
-  * `--output`, plus a one-line summary with the headline numbers.
-  */
 /** The vector-side sibling of CuratePipeline: build the serving IVF
   * index layout from an embeddings table and bundle the maintenance
   * reports the v19/v20 loop runs on it. Outputs under `--output`:
@@ -603,6 +592,13 @@ object IndexPipelineMain {
   }
 }
 
+/** Corpus-health report — the per-ingest-batch diagnostic bundle a
+  * training-data pipeline runs alongside curation: every battery member
+  * is an existing oracle-checked query with a BOUNDED output (source-,
+  * vocab-, or constant-sized — never per-doc), so the whole report is
+  * driver-safe at any corpus size. One JSON file per diagnostic under
+  * `--output`, plus a one-line summary with the headline numbers.
+  */
 object CorpusReportMain {
   /** name → bounded-output query, with the headline scalar to surface. */
   private val battery = Seq(
@@ -638,6 +634,10 @@ object CorpusReportMain {
   }
 }
 
+/** StatefulTeamScore (`StatefulTeamScore.scala:55-113`): per-team
+  * cumulative score with an emission each time the total crosses a
+  * multiple of the threshold (W15 ValueState), crossings appended as CSV.
+  */
 object StatefulTeamScoreMain {
   def main(args: Array[String]): Unit = {
     val o = Opts.parse("StatefulTeamScoreMain", args,

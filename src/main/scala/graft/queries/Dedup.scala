@@ -48,59 +48,6 @@ object Dedup extends QueryModule {
     graft.functions.MinHashBandsExpr.minhashBands(
       text, 3, NumPerm, BandSize, P)
 
-  /** Near-dup candidate pairs with exact Jaccard, `jaccard >= threshold`.
-    *
-    * Scale shape: each doc's distinct-shingle count is computed ROWWISE
-    * before the explode (`size(arr)`), so it rides every shingle row for
-    * free — no window shuffle, no one-row-per-document sizes table joined
-    * or broadcast anywhere (the round-2 verdict's named scale-killer).
-    * The shingle-blocked self-join then carries n_i/n_j straight through
-    * the pair aggregation, and every shuffle/sort/compare runs on longs,
-    * not shingle strings.
-    */
-  /** @param maxShingleDf BOILERPLATE SKEW GUARD for web-scale corpora: a
-    *   template sentence shared by millions of docs makes one shingle key
-    *   carry deg² candidate pairs — the classic dedup hot key. With
-    *   `Some(cap)`, shingles whose document frequency exceeds the cap are
-    *   removed from the shingle UNIVERSE (both candidate generation and
-    *   the per-doc set sizes), i.e. Jaccard over discriminative shingles
-    *   only — the standard stop-shingle rule. Costs one extra groupBy +
-    *   two shuffled size joins keyed on doc id (NO broadcast — sizes is
-    *   O(n_docs)); `None` keeps the exact rowwise-n_sh pipeline.
-    *   `DedupDifferentialSpec` proves cap=∞ ≡ None and that a planted
-    *   boilerplate shingle stops pairing under the cap.
-    */
-  private[graft] def jaccardPairs(s: SparkSession, dir: String,
-                                  threshold: Double,
-                                  maxShingleDf: Option[Long] = None): DataFrame = {
-    import s.implicits._
-    // Pair generation reads the shingle frame ONCE (group-emit in
-    // pairAgg) — no corpus-sized cache, no second scan; at 100 TB the
-    // only corpus-wide exchange is the shingle-keyed one.
-    maxShingleDf match {
-      case None =>
-        pairStats(s, dir)
-          .select($"doc_i", $"doc_j", $"jaccard")
-          .filter($"jaccard" >= threshold)
-      case Some(cap) =>
-        val sh = shingleArr(s, dir)
-          .select($"doc_id", explode($"arr").as("shingle"))
-        val keep = sh.groupBy($"shingle")
-          .agg(count(lit(1)).as("df")).filter($"df" <= cap)
-          .select($"shingle")
-        val shF = sh.join(keep, Seq("shingle"))
-        val sizes = shF.groupBy($"doc_id").agg(count(lit(1)).as("n_sh"))
-        pairAgg(shF)
-          .agg(count(lit(1)).as("n_common"))
-          .join(sizes.select($"doc_id".as("doc_i"), $"n_sh".as("n_i")), "doc_i")
-          .join(sizes.select($"doc_id".as("doc_j"), $"n_sh".as("n_j")), "doc_j")
-          .select($"doc_i", $"doc_j",
-            ($"n_common".cast("double") / ($"n_i" + $"n_j" - $"n_common"))
-              .as("jaccard"))
-          .filter($"jaccard" >= threshold)
-    }
-  }
-
   /** Shared candidate-pair generation, grouped by (doc_i < doc_j):
     * ONE exchange keyed on the shingle collects each block's
     * (doc_id[, n_sh]) list, then a codegen'd double-`explode` emits every
@@ -110,9 +57,8 @@ object Dedup extends QueryModule {
     * sort-merge sorts for the identical pair stream. Emission volume is
     * unchanged (Σ_block df·(df−1)/2 — the exact-Jaccard candidate
     * volume both engines must aggregate); block width is the shingle's
-    * document frequency, bounded by the stop-shingle cap when the caller
-    * enables it (`jaccardPairs(maxShingleDf)`) — the same df² hot-key
-    * exposure the self-join had, now visible as a per-block list.
+    * document frequency — the same df² hot-key exposure the self-join
+    * had, now visible as a per-block list.
     *
     * `sh` must carry (doc_id, shingle) and optionally n_sh; any extra
     * per-doc columns riding the rows are carried into the `a.`/`b.`
@@ -185,16 +131,44 @@ object Dedup extends QueryModule {
     groups.filter(size(col("arr")) > 0 && size(col("ids")) >= 2)
       .select(col("ids"), size(col("arr")).cast("long").as("n_sh"))
 
-  /** Within-group ordered pairs (doc_i < doc_j via the sorted ids) —
-    * row-streamed two-step explode, never one flattened quadratic array
-    * per group row (a mega-group of verbatim copies would otherwise
-    * build its whole clique in a single row's memory).
+  /** Within-group ordered pairs (doc_i < doc_j via the sorted ids) of
+    * any `ids` frame, its `carry` columns riding along — row-streamed
+    * two-step explode, never one flattened quadratic array per group row
+    * (a mega-group of verbatim copies would otherwise build its whole
+    * clique in a single row's memory).
     */
-  private def intraPairsOf(multi: DataFrame): DataFrame =
-    multi.select(col("n_sh"), col("ids"), posexplode(col("ids")))
-      .select(col("n_sh"), col("col").as("doc_i"),
+  private def intraPairsOf(groups: DataFrame, carry: String*): DataFrame = {
+    val c = carry.map(col)
+    groups.select(c ++ Seq(col("ids"), posexplode(col("ids"))): _*)
+      .select(c ++ Seq(col("col").as("doc_i"),
         explode(slice(col("ids"), col("pos") + lit(2), size(col("ids"))))
-          .as("doc_j"))
+          .as("doc_j")): _*)
+  }
+
+  /** Membership expansion of a rep-pair frame to doc pairs — the one
+    * path every doc-level pair frame here takes. Each (ids_i, ids_j, …)
+    * row cross-explodes into (doc_i, doc_j) = (least, greatest) of its
+    * members x ∈ ids_i, y ∈ ids_j, followed by `cols(x, y)`: by default
+    * the `carry` columns as they are, while a column tied to the member
+    * order can swap on x < y. The within-group rows `intra` (same
+    * columns) follow. Carried columns keep `rep`'s order, so neither
+    * explode needs a reordering projection. Consumer filters on carried
+    * columns push below the explodes onto the rep frame, so only
+    * surviving rep pairs expand.
+    */
+  private def expandPairs(rep: DataFrame, intra: DataFrame,
+      carry: Seq[String] = Nil)(
+      cols: (Column, Column) => Seq[Column] = (_, _) => carry.map(col))
+      : DataFrame = {
+    def inRepOrder(names: Seq[String]) =
+      rep.columns.toSeq.filter(names.contains).map(col)
+    val (x, y) = (col("x"), col("y"))
+    rep.select(inRepOrder(carry :+ "ids_j") :+ explode(col("ids_i")).as("x"): _*)
+      .select(inRepOrder(carry) ++ Seq(x, explode(col("ids_j")).as("y")): _*)
+      .select(Seq(least(x, y).as("doc_i"), greatest(x, y).as("doc_j")) ++
+        cols(x, y): _*)
+      .unionAll(intra)
+  }
 
   /** Rep-level UNFILTERED per-pair set statistics + both set-overlap
     * measures — the single pair aggregation every exact dedup measure
@@ -245,41 +219,24 @@ object Dedup extends QueryModule {
       .drop("mids_i", "mids_j")
 
   /** Membership expansion back to DOC-level stats rows — value-identical
-    * to the former doc-level pair-gen (differential spec + every d-family
+    * to a doc-level pair-gen (differential spec + every d-family
     * oracle): cross-group pairs expand ids_i × ids_j (n_i/n_j swap with
     * the doc order; jaccard/containment are content functions, so they
     * carry over bit-identically), within-group pairs are set-identical
     * docs (jaccard = containment = 1, n_common = n_i = n_j = n_sh).
-    * Consumer threshold filters push below these explodes onto the rep
-    * frame, so only surviving rep pairs ever expand.
     */
   private def expandStats(rep: DataFrame, multi: DataFrame): DataFrame = {
-    val inter = rep
-      .select(col("n_common"), col("n_i"), col("n_j"), col("jaccard"),
-        col("containment"), col("ids_j"), explode(col("ids_i")).as("x"))
-      .select(col("n_common"), col("n_i"), col("n_j"), col("jaccard"),
-        col("containment"), col("x"), explode(col("ids_j")).as("y"))
-      .select(least(col("x"), col("y")).as("doc_i"),
-        greatest(col("x"), col("y")).as("doc_j"),
-        col("n_common"),
-        when(col("x") < col("y"), col("n_i")).otherwise(col("n_j")).as("n_i"),
-        when(col("x") < col("y"), col("n_j")).otherwise(col("n_i")).as("n_j"),
-        col("jaccard"), col("containment"))
-    val intra = intraPairsOf(multi)
+    val intra = intraPairsOf(multi, "n_sh")
       .select(col("doc_i"), col("doc_j"), col("n_sh").as("n_common"),
         col("n_sh").as("n_i"), col("n_sh").as("n_j"),
         lit(1.0).as("jaccard"), lit(1.0).as("containment"))
-    inter.unionAll(intra)
-  }
-
-  /** Doc-level UNFILTERED pair statistics — the pre-collapse pipeline's
-    * contract, now derived as rep-level stats + membership expansion.
-    */
-  private def pairStats(s: SparkSession, dir: String): DataFrame = {
-    // read the PINNED multi-group frame (round-16 review) instead of
-    // deriving an unpinned duplicate of the content agg for this view
-    val multi = sharedMultiGroups(s, dir)
-    expandStats(withMemberIds(repPairStats(s, dir), multi), multi)
+    expandPairs(rep, intra,
+      Seq("n_common", "n_i", "n_j", "jaccard", "containment")) { (x, y) =>
+      Seq(col("n_common"),
+        when(x < y, col("n_i")).otherwise(col("n_j")).as("n_i"),
+        when(x < y, col("n_j")).otherwise(col("n_i")).as("n_j"),
+        col("jaccard"), col("containment"))
+    }
   }
 
   /** Shared Jaccard pair frame: d2's pair listing, d6's keep rule,
@@ -293,8 +250,7 @@ object Dedup extends QueryModule {
     * so the filtered frame is value-identical to a direct pair-gen at t
     * (spec-asserted differentially). The pinned frame is O(n_pairs at
     * base) — near-dup pairs, not docs — so pinning it is cheap at any
-    * scale, unlike the corpus caches this engine deliberately avoids
-    * (see `jaccardPairs`).
+    * scale, unlike the corpus caches this engine deliberately avoids.
     */
   private[graft] val BasePairThreshold = 0.3
 
@@ -317,7 +273,7 @@ object Dedup extends QueryModule {
     * near-dup pairs) — on a copy-heavy corpus far below the doc-level
     * pair count the pre-collapse pin used to hold.
     */
-  private def sharedRepStats(s: SparkSession, dir: String): DataFrame =
+  private[graft] def sharedRepStats(s: SparkSession, dir: String): DataFrame =
     Pins.frame("rep_pair_stats", s, Some(dir)) {
       repPairStats(s, dir)
         .filter(col("jaccard") >= BasePairThreshold ||
@@ -347,8 +303,8 @@ object Dedup extends QueryModule {
                                         threshold: Double): DataFrame = {
     require(threshold >= BasePairThreshold,
       s"shared pair frame is computed at base $BasePairThreshold; " +
-        s"threshold $threshold would need a fresh pair-gen — call " +
-        "jaccardPairs directly or lower BasePairThreshold")
+        s"threshold $threshold would need a fresh pair-gen — lower " +
+        "BasePairThreshold")
     val base = Pins.get("jaccard_pairs", s, Some(dir)) {
       sharedPairStats(s, dir)
         .filter(col("jaccard") >= BasePairThreshold)
@@ -426,6 +382,38 @@ object Dedup extends QueryModule {
       .select($"id", coalesce($"rep", $"id").as("rep"))
       .join(repLabels.select($"id".as("rep"), $"component"), Seq("rep"))
       .select($"id", $"component")
+  }
+
+  /** The quality-keeper election d10, d27 and d35 share: x3's quality
+    * score joins onto the (id, component, …) members, and ONE hash agg
+    * per component elects the highest-quality doc, min doc_id on ties
+    * (max-of-struct argmax, no window sort). `sizeAgg` rides the same
+    * agg. Out: (component, sizeAgg, keeper, keeper_quality).
+    */
+  private def electKeepers(s: SparkSession, dir: String, members: DataFrame,
+      sizeAgg: Column): DataFrame = {
+    val quality = Tables.documents(s, dir).select(col("doc_id"),
+      TextAnalytics.qualityCol(col("text")).as("quality"))
+    val elected = members.join(quality, members("id") === quality("doc_id"))
+      .groupBy(col("component"))
+      .agg(sizeAgg, max(struct(col("quality"),
+        (-col("doc_id")).as("negid"))).as("m"))
+    elected.select(elected.columns.toSeq.filter(_ != "m").map(col) ++ Seq(
+      (-col("m.negid")).as("keeper"), col("m.quality").as("keeper_quality")): _*)
+  }
+
+  /** d10/d27: the multi-doc clusters of a component assignment with
+    * their elected keeper and size. Filtering to multi-doc clusters
+    * BEFORE touching the corpus keeps the members side tiny (dup-cluster
+    * docs only), so the quality join broadcasts it and the corpus is
+    * scanned once, never shuffled.
+    */
+  private def clusterKeepers(s: SparkSession, dir: String,
+      comp: DataFrame): DataFrame = {
+    val multi = comp.groupBy(col("component"))
+      .agg(count(lit(1)).as("n_docs")).filter(col("n_docs") > 1)
+    electKeepers(s, dir, comp.join(multi, "component"),
+      min(col("n_docs")).as("n_docs"))
   }
 
   /** d24's normalize→digest keep rule over an arbitrary docs frame:
@@ -523,16 +511,9 @@ object Dedup extends QueryModule {
     * d3's oracle); the expensive half (signatures + band exchange) runs
     * once per session via the pin, and each use pays only the expansion.
     */
-  private[graft] def lshCandDocPairs(s: SparkSession, dir: String): DataFrame = {
-    val rep = lshRepCandPairs(s, dir)
-    val inter = rep.select(col("ids_j"), explode(col("ids_i")).as("x"))
-      .select(col("x"), explode(col("ids_j")).as("y"))
-      .select(least(col("x"), col("y")).as("doc_i"),
-        greatest(col("x"), col("y")).as("doc_j"))
-    val intra = intraPairsOf(sharedMultiGroups(s, dir))
-      .select(col("doc_i"), col("doc_j"))
-    inter.unionAll(intra)
-  }
+  private[graft] def lshCandDocPairs(s: SparkSession, dir: String): DataFrame =
+    expandPairs(lshRepCandPairs(s, dir),
+      intraPairsOf(sharedMultiGroups(s, dir)))()
 
   /** REP-level verified band pairs, pinned: banding, the signature
     * computation, AND the exact-Jaccard verify all run once per
@@ -566,16 +547,10 @@ object Dedup extends QueryModule {
     * not commute with it): membership expansion of the pinned rep
     * frame, value-identical to the pre-collapse doc-level verify.
     */
-  private[graft] def lshVerifiedPairs(s: SparkSession, dir: String): DataFrame = {
-    val rep = lshVerifiedRepPairs(s, dir)
-    val inter = rep.select(col("ids_j"), explode(col("ids_i")).as("x"))
-      .select(col("x"), explode(col("ids_j")).as("y"))
-      .select(least(col("x"), col("y")).as("src"),
-        greatest(col("x"), col("y")).as("dst"))
-    val intra = intraPairsOf(sharedMultiGroups(s, dir))
-      .select(col("doc_i").as("src"), col("doc_j").as("dst"))
-    inter.unionAll(intra)
-  }
+  private[graft] def lshVerifiedPairs(s: SparkSession, dir: String): DataFrame =
+    expandPairs(lshVerifiedRepPairs(s, dir),
+      intraPairsOf(sharedMultiGroups(s, dir)))()
+      .toDF("src", "dst")
 
   /** The LSH-candidate-restricted component assignment (d26/d27 share
     * it — the dupComponents pattern for the banded pair graph): LSH
@@ -988,22 +963,13 @@ object Dedup extends QueryModule {
           "Dedup.simhashGroupPairs (ids_i, ids_j, hamming; one row per " +
           "colliding distinct-simhash pair) — or raise the cap " +
           "deliberately.")
-      // intra rows (simhash_i = simhash_j): within-ids pairs via the
-      // row-streamed two-step explode (doc_i < doc_j from the sorted
-      // ids) — never one flattened quadratic array per group row
-      val intra = gp.filter($"simhash_i" === $"simhash_j")
-        .select($"ids_i".as("ids"), posexplode($"ids_i"))
-        .select($"col".as("doc_i"),
-          explode(slice($"ids", $"pos" + lit(2), size($"ids"))).as("doc_j"),
-          lit(0L).as("hamming"))
-        .select($"doc_i", $"doc_j", $"hamming")
-      // inter rows: cross-expand the two membership lists
-      val inter = gp.filter($"simhash_i" =!= $"simhash_j")
-        .select(explode($"ids_i").as("x"), $"ids_j", $"hamming")
-        .select($"x", explode($"ids_j").as("y"), $"hamming")
-        .select(least($"x", $"y").as("doc_i"),
-          greatest($"x", $"y").as("doc_j"), $"hamming")
-      intra.unionAll(inter)
+      // identical-hash rows (simhash_i = simhash_j) give their ids'
+      // within-group pairs; the rest cross-expand both membership lists
+      val intra = intraPairsOf(gp.filter($"simhash_i" === $"simhash_j")
+          .select($"ids_i".as("ids")))
+        .select($"doc_i", $"doc_j", lit(0L).as("hamming"))
+      expandPairs(gp.filter($"simhash_i" =!= $"simhash_j"), intra,
+        Seq("hamming"))()
     },
 
     // D4c: the GROUP-FORM SimHash output as a driver-checkable frame —
@@ -1029,24 +995,7 @@ object Dedup extends QueryModule {
     // argmax (ONE hash agg per cluster, no window sort). Emits the
     // multi-doc clusters with their elected keeper.
     "d10_best_keeper" -> { (s, dir) =>
-      import s.implicits._
-      val comp = dupComponents(s, dir)
-      // Filter to multi-doc clusters BEFORE touching the corpus: members
-      // is tiny (dup-cluster docs only), so the quality join broadcasts
-      // it and the corpus side is scanned once, never shuffled — the
-      // previous corpus×corpus shuffle join carried every singleton doc
-      // through the join + agg just to drop it in the final filter.
-      val multi = comp.groupBy($"component")
-        .agg(count(lit(1)).as("n_docs")).filter($"n_docs" > 1)
-      val members = comp.join(multi, "component")
-      val quality = Tables.documents(s, dir)
-        .select($"doc_id", TextAnalytics.qualityCol($"text").as("quality"))
-      members.join(quality, members("id") === quality("doc_id"))
-        .groupBy($"component")
-        .agg(min($"n_docs").as("n_docs"),
-          max(struct($"quality", (-$"doc_id").as("negid"))).as("m"))
-        .select($"component", $"n_docs", (-$"m.negid").as("keeper"),
-          $"m.quality".as("keeper_quality"))
+      clusterKeepers(s, dir, dupComponents(s, dir))
     },
 
     // D11: the full production MinHash flow d2/d3 stop short of
@@ -1085,17 +1034,10 @@ object Dedup extends QueryModule {
               - size(array_intersect($"arr_i", $"arr_j"))))
             .as("jaccard"))
       // both measures are symmetric — expansion needs no column swap
-      val inter = scored
-        .select($"ids_j", $"jaccard_est", $"jaccard",
-          explode($"ids_i").as("x"))
-        .select($"x", $"jaccard_est", $"jaccard",
-          explode($"ids_j").as("y"))
-        .select(least($"x", $"y").as("doc_i"),
-          greatest($"x", $"y").as("doc_j"), $"jaccard_est", $"jaccard")
       val intra = intraPairsOf(sharedMultiGroups(s, dir))
         .select($"doc_i", $"doc_j",
           lit(1.0).as("jaccard_est"), lit(1.0).as("jaccard"))
-      inter.unionAll(intra)
+      expandPairs(scored, intra, Seq("jaccard_est", "jaccard"))()
     },
 
     // D26: the LSH-SCALED dedup cluster pipeline end-to-end — the
@@ -1129,19 +1071,7 @@ object Dedup extends QueryModule {
     // max-of-struct argmax as d10: one hash agg per cluster, no window
     // sort, corpus joined once against the tiny multi-doc member set.
     "d27_lsh_keeper" -> { (s, dir) =>
-      import s.implicits._
-      val comp = lshDupComponents(s, dir)
-      val multi = comp.groupBy($"component")
-        .agg(count(lit(1)).as("n_docs")).filter($"n_docs" > 1)
-      val members = comp.join(multi, "component")
-      val quality = Tables.documents(s, dir)
-        .select($"doc_id", TextAnalytics.qualityCol($"text").as("quality"))
-      members.join(quality, members("id") === quality("doc_id"))
-        .groupBy($"component")
-        .agg(min($"n_docs").as("n_docs"),
-          max(struct($"quality", (-$"doc_id").as("negid"))).as("m"))
-        .select($"component", $"n_docs", (-$"m.negid").as("keeper"),
-          $"m.quality".as("keeper_quality"))
+      clusterKeepers(s, dir, lshDupComponents(s, dir))
     },
 
     // D35: DEDUP AUDIT — the per-doc explainability frame a curation
@@ -1151,37 +1081,28 @@ object Dedup extends QueryModule {
     // a unique doc keeps itself), and the kept verdict. One frame
     // answers takedown/audit queries without re-running the dedup.
     // Rides the session's pinned component assignment + ONE quality
-    // scan; sizes/keepers are component-keyed aggs (bounded by the
-    // cluster cap), the audit join-back is linear. Flags integer,
+    // scan; size and keeper come from ONE component-keyed agg (bounded
+    // by the cluster cap), the audit join-back is linear. Flags integer,
     // election ties (quality desc, doc_id asc) — deterministic both
     // engines.
     "d35_dedup_audit" -> { (s, dir) =>
       import s.implicits._
       val comp = lshDupComponents(s, dir)
-      val quality = Tables.documents(s, dir)
-        .select($"doc_id", TextAnalytics.qualityCol($"text").as("quality"))
-      val scored = comp.join(quality, comp("id") === quality("doc_id"))
-      val sz = scored.groupBy($"component")
-        .agg(count(lit(1)).as("n_copies"))
-      val keeper = scored.groupBy($"component")
-        .agg(max(struct($"quality", (-$"doc_id").as("negid"))).as("m"))
-        .select($"component", (-$"m.negid").as("keeper"))
+      val keepers = electKeepers(s, dir, comp, count(lit(1)).as("n_copies"))
       comp.select($"id".as("doc_id"), $"component")
-        .join(sz, Seq("component"))
-        .join(keeper, Seq("component"))
+        .join(keepers, Seq("component"))
         .select($"doc_id", $"component", $"n_copies", $"keeper",
           when($"doc_id" === $"keeper", 1L).otherwise(0L).as("kept"))
     },
 
     // X34: SKEW REPORT — the pre-flight diagnostic an operator runs
     // BEFORE launching a 100 TB job: for each shuffle-key family the
-    // engine's heavy plans cluster on (8-gram shingles — the d2/d25
-    // blocking keys; bigram left-contexts — the x16/x29 w1 keys), the
-    // top-3 hottest keys and each one's share of all instances. A key
-    // holding ≥ a few percent means a plan clustered on that key will
-    // straggle — d12's shingle-keyed window count is the one that
-    // cannot be split at runtime. The report is also the d2
-    // stop-shingle cap's sizing input. Plan: one
+    // engine's heavy plans cluster on (hashed 8-gram shingles — d12's
+    // window key and d9/d23's join and group key; bigram left-contexts
+    // — the x16/x29 w1 keys), the top-3 hottest keys and each one's
+    // share of all instances. A key holding ≥ a few percent means a
+    // plan clustered on that key will straggle — d12's shingle-keyed
+    // window count is the one that cannot be split at runtime. Plan: one
     // corpus pass + one vocab-sized hash agg per family, top-3 via
     // distributed TakeOrderedAndProject, totals fold from the SAME
     // grouped frame (no second corpus pass); output 6 rows. Shares are
@@ -1632,22 +1553,6 @@ object Dedup extends QueryModule {
           (lit(1.0) / $"n_copies").as("weight"))
     },
 
-    // D33: DEDUP-AWARE TOKEN BUDGET — the per-source report a mixture
-    // builder actually budgets on: raw token counts overstate a
-    // source's contribution by its duplication factor, so the
-    // effective mass is Σ weight·n_tok under d32's soft weights
-    // (weight = 1/|LSH component|). A 40×-duplicated page contributes
-    // one document's tokens to its source's budget; x12/x21-style
-    // mixing should consume THESE totals, not the raw ones. Plan:
-    // rides the session's ONE banded pair-gen + CC fixpoint (the
-    // d26/d27/d32 pin) for the weights; token counts are one rowwise
-    // corpus map; the weight attachment is a doc_id equi-join of two
-    // corpus frames (linear, AQE-splittable — never keyed on a Zipf
-    // term), and the output is one ≤n_sources-row hash agg. Parity:
-    // counts integer-exact; each weight·n_tok product rounds at 9 and
-    // accumulates in DECIMAL (order-free), final round-6 — the x9/x13
-    // convention; dedup_ratio divides the decimal-summed mass by the
-    // exact raw total.
     // D34: INCREMENTAL COMPONENT MAINTENANCE — merge an ingest batch
     // into an EXISTING dedup-component assignment without a full-graph
     // rebuild: the production shape once the d26 graph is maintained
@@ -1672,7 +1577,22 @@ object Dedup extends QueryModule {
         .select($"id".as("doc_id"), $"component")
     },
 
-
+    // D33: DEDUP-AWARE TOKEN BUDGET — the per-source report a mixture
+    // builder actually budgets on: raw token counts overstate a
+    // source's contribution by its duplication factor, so the
+    // effective mass is Σ weight·n_tok under d32's soft weights
+    // (weight = 1/|LSH component|). A 40×-duplicated page contributes
+    // one document's tokens to its source's budget; x12/x21-style
+    // mixing should consume THESE totals, not the raw ones. Plan:
+    // rides the session's ONE banded pair-gen + CC fixpoint (the
+    // d26/d27/d32 pin) for the weights; token counts are one rowwise
+    // corpus map; the weight attachment is a doc_id equi-join of two
+    // corpus frames (linear, AQE-splittable — never keyed on a Zipf
+    // term), and the output is one ≤n_sources-row hash agg. Parity:
+    // counts integer-exact; each weight·n_tok product rounds at 9 and
+    // accumulates in DECIMAL (order-free), final round-6 — the x9/x13
+    // convention; dedup_ratio divides the decimal-summed mass by the
+    // exact raw total.
     "d33_effective_tokens" -> { (s, dir) =>
       import s.implicits._
       // weights via the same agg+join shape as d32 (round 13 — was the
@@ -1768,13 +1688,6 @@ object Dedup extends QueryModule {
           .cast("long").as("checksum"))
   }
 
-  /** Per-doc shared-shingle fraction (see the d12 query note). A doc's
-    * shingles are already DISTINCT (fused expr pass 3), so the shingle's
-    * row count IS its document frequency, and a shingle with df >= 2 is
-    * "shared". Docs with fewer than n tokens have no shingles and no
-    * row. Package-visible so the planted-duplicate spec exercises the
-    * production pipeline.
-    */
   /** d23's >64-source fallback: the collect_set form of the same
     * fused pairs+markers shape (see the d23 query scaladoc) — one
     * corpus chain behind a pinned ≤S²+S-row pair frame, with the
@@ -1828,12 +1741,16 @@ object Dedup extends QueryModule {
       .toDF("src_i", "src_j", "n_common", "jaccard")
   }
 
-  /** d12 core: df as a window count over ONE shingle-clustered exchange
-    * (the round-10 j11/d25 pattern): one shingle-gen pass, one
-    * repartition(shingle), then the per-doc agg (its own doc-keyed
-    * exchange, map-side partial). The trade: a boilerplate-hot shingle
-    * lands whole in one window partition, which no runtime feature can
-    * split; `x34_skew_report` reports that case before a run.
+  /** d12 core: per-doc shared-shingle fraction. A doc's shingles are
+    * already DISTINCT (fused expr pass 3), so a shingle's row count IS
+    * its document frequency, and a shingle with df >= 2 is "shared";
+    * docs with fewer than n tokens have no shingles and no row. df is a
+    * window count over ONE shingle-clustered exchange (the round-10
+    * j11/d25 pattern): one shingle-gen pass, one repartition(shingle),
+    * then the per-doc agg (its own doc-keyed exchange, map-side
+    * partial). The trade: a boilerplate-hot shingle lands whole in one
+    * window partition, which no runtime feature can split;
+    * `x34_skew_report` reports that case before a run.
     */
   private[graft] def ngramNovelty(docs: DataFrame, n: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -1847,6 +1764,21 @@ object Dedup extends QueryModule {
       .select(col("doc_id"), col("n_shingles"), col("n_shared"),
         (col("n_shared").cast("double") / col("n_shingles")).as("shared_frac"))
   }
+
+  /** Pinned group-pair frame shared by d4_simhash_pairs' guard +
+    * expansion and d4_group_stats (round 18, r17 ADVICE): ONE
+    * persist(MEMORY_AND_DISK) per (session, dir) — NOT a fresh
+    * localCheckpoint per invocation, which (a) accumulated
+    * GC-reclaimed-only checkpoint blocks across repeated runs and
+    * plan-only consumers, and (b) broke the pin doctrine: a lost
+    * executor's non-replicated checkpoint blocks fail the query, while
+    * a persisted frame keeps lineage and recomputes (PinRecoverySpec).
+    * Row count is collision-bounded (distinct-hash pairs), so the pin
+    * is small; released via `Pins.evict`.
+    */
+  private[graft] def sharedSimhashGroupPairs(s: SparkSession,
+                                             dir: String): DataFrame =
+    Pins.frame("simhash_group_pairs", s, Some(dir))(simhashGroupPairs(s, dir))
 
   /** GROUP-FORM SimHash near-dup frame — the documented 100 TB output
     * contract for the d4 family (round-16 verdict item 1): one row per
@@ -1866,21 +1798,6 @@ object Dedup extends QueryModule {
     * take this frame instead: cluster membership, keeper election, and
     * pair counts all read off (ids_i, ids_j, hamming) directly.
     */
-  /** Pinned group-pair frame shared by d4_simhash_pairs' guard +
-    * expansion and d4_group_stats (round 18, r17 ADVICE): ONE
-    * persist(MEMORY_AND_DISK) per (session, dir) — NOT a fresh
-    * localCheckpoint per invocation, which (a) accumulated
-    * GC-reclaimed-only checkpoint blocks across repeated runs and
-    * plan-only consumers, and (b) broke the pin doctrine: a lost
-    * executor's non-replicated checkpoint blocks fail the query, while
-    * a persisted frame keeps lineage and recomputes (PinRecoverySpec).
-    * Row count is collision-bounded (distinct-hash pairs), so the pin
-    * is small; released via `Pins.evict`.
-    */
-  private[graft] def sharedSimhashGroupPairs(s: SparkSession,
-                                             dir: String): DataFrame =
-    Pins.frame("simhash_group_pairs", s, Some(dir))(simhashGroupPairs(s, dir))
-
   private[graft] def simhashGroupPairs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val groups = Tables.documents(s, dir)
@@ -1934,46 +1851,18 @@ object Dedup extends QueryModule {
     * signatures share every band, so they pair with no special case.
     * Any columns besides doc_id and sig must be functions of doc_id;
     * they come out as `<c>_i`/`<c>_j` (the pin carries `ids` this way).
-    *
-    * @param maxBandDf HOT-BAND GUARD (the d2 `maxShingleDf` analog for
-    *   the banded path): a boilerplate band key shared by many DISTINCT
-    *   contents (every page carrying the same banner shingles into one
-    *   band) makes that band block deg² candidate pairs. With
-    *   `Some(cap)`, bands shared by more than `cap` distinct signatures
-    *   are dropped from candidate generation — the standard hot-bucket
-    *   skip in production LSH dedup. The frequency is counted in
-    *   DISTINCT-SIGNATURE space, so verbatim-copy mass can never trip
-    *   the cap; only cross-content boilerplate does, which is exactly
-    *   the block the cap exists to bound. Pairs with identical
-    *   signatures are never dropped: they come from one more exchange
-    *   keyed on the signature. `None` keeps the exact candidate set
-    *   (DedupDifferentialSpec proves cap=∞ ≡ None and that a planted
-    *   hot band stops pairing under the cap).
     */
-  private[graft] def lshBandPairs(sigs: DataFrame,
-                                  maxBandDf: Option[Long] = None): DataFrame = {
+  private[graft] def lshBandPairs(sigs: DataFrame): DataFrame = {
     val carry = sigs.columns.toSeq.filterNot(Set("doc_id", "sig"))
-    val item = struct(("doc_id" +: carry).map(col): _*)
-    val bands = sigs.select(col("sig"), item.as("doc"),
+    val bands = sigs.select(col("sig"),
+      struct(("doc_id" +: carry).map(col): _*).as("doc"),
       explode(array((0 until NumPerm / BandSize).map { b =>
         struct(lit(b).as("band_idx") +: (0 until BandSize).map(k =>
           col("sig").getItem(b * BandSize + k).as(s"m$k")): _*)
       }: _*)).as("band"))
-    def pairs(blocks: DataFrame): DataFrame =
-      blockPairs(blocks, carry).count().drop("count")
-    maxBandDf match {
-      case None =>
-        pairs(bands.groupBy(col("band"))
-          .agg(collect_list(col("doc")).as("docs")))
-      case Some(cap) =>
-        val cold = bands.groupBy(col("band"))
-          .agg(collect_list(col("doc")).as("docs"),
-            collect_set(col("sig")).as("sigs"))
-          .filter(size(col("sigs")) <= cap)
-        val same = sigs.groupBy(col("sig"))
-          .agg(collect_list(item).as("docs"))
-        pairs(cold).union(pairs(same)).distinct()
-    }
+    blockPairs(bands.groupBy(col("band"))
+        .agg(collect_list(col("doc")).as("docs")), carry)
+      .count().drop("count")
   }
 
   /** 32-bit SimHash of whitespace tokens (with multiplicity): bit b of
@@ -2042,15 +1931,10 @@ object Dedup extends QueryModule {
     * the LSH-candidate-restricted pair graph (d26, d27) — the banded
     * candidate set, exact-Jaccard verified, closed transitively.
     */
-  private def lshComponentsCteSql: String = {
-    val bandRows = (0 until NumPerm / BandSize).map { b =>
-      val cols = (b * BandSize until (b + 1) * BandSize)
-        .map(j => s"m$j::VARCHAR").mkString(", ")
-      s"SELECT doc_id, $b AS band_idx, concat_ws(',', $cols) AS band_key FROM sigs"
-    }.mkString("\n  UNION ALL ")
+  private def lshComponentsCteSql: String =
     s"""WITH RECURSIVE sigs AS ($minhashSql),
        |bands AS (
-       |  $bandRows),
+       |  ${bandRowsSql("doc_id", "sigs")}),
        |cand AS (
        |  SELECT DISTINCT a.doc_id AS doc_i, b.doc_id AS doc_j
        |  FROM bands a JOIN bands b
@@ -2075,18 +1959,31 @@ object Dedup extends QueryModule {
        |  FROM reach r JOIN edges e ON r.id = e.src),
        |comp AS (
        |  SELECT id, min(label) AS component FROM reach GROUP BY id)""".stripMargin
-  }
 
-  private def minhashSql: String = {
-    val perms = (0 until NumPerm).map { j =>
-      s"""list_min(list_transform(sgl,
+  /** The NumPerm MinHash minima `m0…m15` of shingle-list column `set`
+    * (replays `MinHashSigExpr`: (h·(2j+1) + 12345j + 1) mod P).
+    */
+  private def minhashPermsSql(set: String): String =
+    (0 until NumPerm).map { j =>
+      s"""list_min(list_transform($set,
          |  h -> (h * ${2L * j + 1} + ${12345L * j + 1}) % $P)) AS m$j""".stripMargin
     }.mkString(",\n  ")
-    s"""SELECT doc_id, $perms
+
+  /** One `(id, band_idx, band_key)` row per LSH band of every `src` row's
+    * `m0…m15` minima: a UNION ALL of one select per band.
+    */
+  private def bandRowsSql(id: String, src: String): String =
+    (0 until NumPerm / BandSize).map { b =>
+      val cols = (b * BandSize until (b + 1) * BandSize)
+        .map(j => s"m$j::VARCHAR").mkString(", ")
+      s"SELECT $id, $b AS band_idx, concat_ws(',', $cols) AS band_key FROM $src"
+    }.mkString("\n  UNION ALL ")
+
+  private def minhashSql: String =
+    s"""SELECT doc_id, ${minhashPermsSql("sgl")}
        |FROM (SELECT doc_id, ${shingleListSql("hs")} AS sgl
        |      FROM ($tokenHashDocsSql))
        |WHERE len(sgl) > 0""".stripMargin // docs w/o shingles never enter the Spark agg
-  }
 
   private def simhashSql: String = {
     val bits = (0 until 32).map { b =>
@@ -2101,25 +1998,6 @@ object Dedup extends QueryModule {
        |      FROM documents)""".stripMargin
   }
 
-  /** DuckDB replay SQL for the CC family's verified PAIR frames at
-    * scales where the doc-level oracle is unaffordable (round 19, r18
-    * verdict item 2 — the engine-independent 100× attestation of the
-    * pair/CC family). The trick that makes the replay affordable is the
-    * same contraction the engine runs, RE-DERIVED independently: rep
-    * collapse keyed on the SORTED DISTINCT shingle set. Jaccard and
-    * every minhash permutation are functions of the set alone, so the
-    * collapse is lossless for the doc-level pair frame — within-group
-    * pairs have jaccard 1 (always over threshold), cross-group pairs
-    * compute once per set pair and expand through membership — and the
-    * DuckDB cost scales with DISTINCT contents, not the 100× verbatim
-    * copy mass. (The engine groups on its arr column — first-occurrence
-    * order — so set-identical docs may sit in different engine groups;
-    * their cross pairs then arrive via a jaccard-1 rep pair instead of
-    * the intra branch. The doc-level pair SET is identical either way.)
-    * `tools/cc_check.py` runs these against the engine's pair dumps
-    * (CCAttestation) — both EXCEPT directions must be zero — then
-    * reproduces the component labels with a pure-Python union-find.
-    */
   /** Shared contraction CTEs for every rep-level DuckDB replay: text →
     * sorted distinct shingle set → groups (rep = min doc_id, ids),
     * membership, and within-group ordered pairs.
@@ -2160,27 +2038,17 @@ object Dedup extends QueryModule {
   /** Rep-level minhash sigs + banding + distinct candidate rep pairs,
     * ending in `cand(ri, rj)`.
     */
-  private def repBandingCtes: String = {
-    val perms = (0 until NumPerm).map { j =>
-      s"""list_min(list_transform(skey,
-         |  h -> (h * ${2L * j + 1} + ${12345L * j + 1}) % $P)) AS m$j""".stripMargin
-    }.mkString(",\n  ")
-    val bandRows = (0 until NumPerm / BandSize).map { b =>
-      val cols = (b * BandSize until (b + 1) * BandSize)
-        .map(j => s"m$j::VARCHAR").mkString(", ")
-      s"SELECT rep, $b AS band_idx, concat_ws(',', $cols) AS band_key FROM rsig"
-    }.mkString("\n  UNION ALL ")
+  private def repBandingCtes: String =
     s"""rsig AS (
-       |  SELECT rep, $perms
+       |  SELECT rep, ${minhashPermsSql("skey")}
        |  FROM g WHERE len(skey) > 0),
        |bands AS (
-       |  $bandRows),
+       |  ${bandRowsSql("rep", "rsig")}),
        |cand AS (
        |  SELECT DISTINCT a.rep AS ri, b.rep AS rj
        |  FROM bands a JOIN bands b
        |    ON a.band_idx = b.band_idx AND a.band_key = b.band_key
        |    AND a.rep < b.rep)""".stripMargin
-  }
 
   /** Exact set Jaccard of two joined `g` rows aliased ga/gb. */
   private def repJaccardExpr: String =
@@ -2237,14 +2105,6 @@ object Dedup extends QueryModule {
   private def contractedLshComponentsCteSql: String =
     contractedCompCte(repLshVerifiedCtes)
 
-  /** The nine component-consuming registry oracles with their recursive
-    * doc-level `comp` prologue swapped for the contracted rep-level one
-    * — the downstream SQL (quality election, weights, splits, audits)
-    * is reused VERBATIM, so the replay differs from the certified
-    * oracle only in the closure's contraction, which the union-find
-    * check attests independently. Throws if an oracle's text stops
-    * embedding the prologue (the swap must never silently no-op).
-    */
   /** The (certified doc-level, contracted rep-level) prologue pairs —
     * exposed so CcReplaySpec can assert the swap ROUND-TRIPS: undoing
     * it on a contracted replay reproduces the certified oracle text
@@ -2254,6 +2114,14 @@ object Dedup extends QueryModule {
     componentsCteSql -> contractedComponentsCteSql,
     lshComponentsCteSql -> contractedLshComponentsCteSql)
 
+  /** The nine component-consuming registry oracles with their recursive
+    * doc-level `comp` prologue swapped for the contracted rep-level one
+    * — the downstream SQL (quality election, weights, splits, audits)
+    * is reused VERBATIM, so the replay differs from the certified
+    * oracle only in the closure's contraction, which the union-find
+    * check attests independently. Throws if an oracle's text stops
+    * embedding the prologue (the swap must never silently no-op).
+    */
   private[graft] def contractedOracleSql: Map[String, String] = {
     val swaps = contractionSwaps
     Seq("d7_dup_components", "d10_best_keeper", "d21_leakage_split",
@@ -2269,6 +2137,25 @@ object Dedup extends QueryModule {
     }.toMap
   }
 
+  /** DuckDB replay SQL for the CC family's verified PAIR frames at
+    * scales where the doc-level oracle is unaffordable (round 19, r18
+    * verdict item 2 — the engine-independent 100× attestation of the
+    * pair/CC family). The trick that makes the replay affordable is the
+    * same contraction the engine runs, RE-DERIVED independently: rep
+    * collapse keyed on the SORTED DISTINCT shingle set. Jaccard and
+    * every minhash permutation are functions of the set alone, so the
+    * collapse is lossless for the doc-level pair frame — within-group
+    * pairs have jaccard 1 (always over threshold), cross-group pairs
+    * compute once per set pair and expand through membership — and the
+    * DuckDB cost scales with DISTINCT contents, not the 100× verbatim
+    * copy mass. (The engine groups on its arr column — first-occurrence
+    * order — so set-identical docs may sit in different engine groups;
+    * their cross pairs then arrive via a jaccard-1 rep pair instead of
+    * the intra branch. The doc-level pair SET is identical either way.)
+    * `tools/cc_check.py` runs these against the engine's pair dumps
+    * (CCAttestation) — both EXCEPT directions must be zero — then
+    * reproduces the component labels with a pure-Python union-find.
+    */
   private[graft] def ccReplaySql: Map[String, String] = {
     val prologue = s"WITH ${repContractionCtes}"
     val repStats = repStatsCtes
@@ -2865,27 +2752,16 @@ object Dedup extends QueryModule {
          |FROM ($minhashSql)""".stripMargin
     },
 
-    "d3_lsh_pairs" -> {
-      val bandRows = (0 until NumPerm / BandSize).map { b =>
-        val cols = (b * BandSize until (b + 1) * BandSize)
-          .map(j => s"m$j::VARCHAR").mkString(", ")
-        s"SELECT doc_id, $b AS band_idx, concat_ws(',', $cols) AS band_key FROM sigs"
-      }.mkString("\n  UNION ALL ")
+    "d3_lsh_pairs" ->
       s"""WITH sigs AS ($minhashSql),
          |bands AS (
-         |  $bandRows)
+         |  ${bandRowsSql("doc_id", "sigs")})
          |SELECT DISTINCT a.doc_id AS doc_i, b.doc_id AS doc_j
          |FROM bands a JOIN bands b
          |  ON a.band_idx = b.band_idx AND a.band_key = b.band_key
-         |  AND a.doc_id < b.doc_id""".stripMargin
-    },
+         |  AND a.doc_id < b.doc_id""".stripMargin,
 
     "d20_dup_pagerank" -> {
-      val bandRows = (0 until NumPerm / BandSize).map { b =>
-        val cols = (b * BandSize until (b + 1) * BandSize)
-          .map(j => s"m$j::VARCHAR").mkString(", ")
-        s"SELECT doc_id, $b AS band_idx, concat_ws(',', $cols) AS band_key FROM sigs"
-      }.mkString("\n  UNION ALL ")
       def contrib(pr: String): String =
         s"""SELECT dst AS doc_id,
            |    CAST(sum(CAST(round(p.pr / deg.deg, 9) AS DECIMAL(28,12)))
@@ -2900,7 +2776,7 @@ object Dedup extends QueryModule {
            |  LEFT JOIN $c ON d.doc_id = $c.doc_id, n""".stripMargin
       s"""WITH sigs AS ($minhashSql),
          |bands AS (
-         |  $bandRows),
+         |  ${bandRowsSql("doc_id", "sigs")}),
          |pairs AS (
          |  SELECT DISTINCT a.doc_id AS doc_i, b.doc_id AS doc_j
          |  FROM bands a JOIN bands b
@@ -3061,17 +2937,12 @@ object Dedup extends QueryModule {
          |FROM g WHERE n > 1""".stripMargin,
 
     "d11_lsh_verify" -> {
-      val bandRows = (0 until NumPerm / BandSize).map { b =>
-        val cols = (b * BandSize until (b + 1) * BandSize)
-          .map(j => s"m$j::VARCHAR").mkString(", ")
-        s"SELECT doc_id, $b AS band_idx, concat_ws(',', $cols) AS band_key FROM sigs"
-      }.mkString("\n  UNION ALL ")
       val est = (0 until NumPerm)
         .map(j => s"(CASE WHEN x.m$j = y.m$j THEN 1 ELSE 0 END)")
         .mkString(" + ")
       s"""WITH sigs AS ($minhashSql),
          |bands AS (
-         |  $bandRows),
+         |  ${bandRowsSql("doc_id", "sigs")}),
          |cand AS (
          |  SELECT DISTINCT a.doc_id AS doc_i, b.doc_id AS doc_j
          |  FROM bands a JOIN bands b
@@ -3125,11 +2996,6 @@ object Dedup extends QueryModule {
          |GROUP BY 1""".stripMargin,
 
     "d14_lsh_recall" -> {
-      val bandRows = (0 until NumPerm / BandSize).map { b =>
-        val cols = (b * BandSize until (b + 1) * BandSize)
-          .map(j => s"m$j::VARCHAR").mkString(", ")
-        s"SELECT doc_id, $b AS band_idx, concat_ws(',', $cols) AS band_key FROM sigs"
-      }.mkString("\n  UNION ALL ")
       s"""WITH sh AS (
          |  $shSql),
          |sz AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
@@ -3143,7 +3009,7 @@ object Dedup extends QueryModule {
          |  WHERE n_common::DOUBLE / (x.n_sh + y.n_sh - n_common) >= 0.5),
          |sigs AS ($minhashSql),
          |bands AS (
-         |  $bandRows),
+         |  ${bandRowsSql("doc_id", "sigs")}),
          |cand AS (
          |  SELECT DISTINCT a.doc_id AS doc_i, b.doc_id AS doc_j
          |  FROM bands a JOIN bands b

@@ -33,10 +33,6 @@ object OracleFragments {
   def knuthU32(expr: String): String =
     s"((((($expr) % 4294967296 + 4294967296) % 4294967296)::HUGEINT * 2654435761) % 4294967296)"
 
-  /** pmod(javaHash(expr), m) — non-negative, matches Spark's pmod. */
-  def javaHashPmod(expr: String, m: Long): String =
-    s"(((${javaHash(expr)}) % $m + $m) % $m)"
-
   /** Lowercase letter-run tokens, empties dropped — replays
     * `TextFunctions.tokenize`.
     */

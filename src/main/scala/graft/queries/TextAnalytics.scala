@@ -379,7 +379,7 @@ object TextAnalytics extends QueryModule {
     db.join(stats, Seq("w1", "w2"))
       .select($"doc_id", $"n_dw",
         round($"n_dw".cast("double") *
-            (log((coalesce($"c12", lit(0L)) + 1).cast("double")) -
+            (log(($"c12" + 1).cast("double")) -
              log(($"c1" + lit(v)).cast("double"))), 9)
           .cast("decimal(28,12)").as("term"))
       .groupBy($"doc_id")

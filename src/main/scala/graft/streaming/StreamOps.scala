@@ -724,19 +724,6 @@ object StreamOps {
         min(when($"hit" === 1, $"owner")).as("dup_of"))
   }
 
-  /** STREAM-STREAM attribution join — j10's streaming sibling and the
-    * one Structured Streaming join kind the rest of the engine doesn't
-    * exercise: purchases matched to SAME-USER views that happened at
-    * most `horizon` before them, both sides unbounded. The equi-key
-    * (user_id) plus the event-time RANGE predicate is what makes this
-    * tractable at scale: Spark buffers each side in the state store
-    * keyed on user, and the watermark + range bound let it GC a
-    * buffered view once no future purchase can reach back to it
-    * (state ∝ per-user events inside one horizon, not the stream).
-    * Inner join: a purchase with no in-horizon view emits nothing —
-    * attribution, not enrichment. Both inputs must carry event-time
-    * columns named `ts` (view side) / `p_ts` (purchase side).
-    */
   /** Streaming AutoComplete, step 1 — the reference pipeline's streaming
     * mode (`AutoComplete.scala:73-86`: `isStreaming` swaps GlobalWindows
     * for SlidingWindows over the same graph): sliding-window word counts
@@ -775,6 +762,19 @@ object StreamOps {
       Seq(col("n").desc, col("word").desc), k)
   }
 
+  /** STREAM-STREAM attribution join — j10's streaming sibling and the
+    * one Structured Streaming join kind the rest of the engine doesn't
+    * exercise: purchases matched to SAME-USER views that happened at
+    * most `horizon` before them, both sides unbounded. The equi-key
+    * (user_id) plus the event-time RANGE predicate is what makes this
+    * tractable at scale: Spark buffers each side in the state store
+    * keyed on user, and the watermark + range bound let it GC a
+    * buffered view once no future purchase can reach back to it
+    * (state ∝ per-user events inside one horizon, not the stream).
+    * Inner join: a purchase with no in-horizon view emits nothing —
+    * attribution, not enrichment. Both inputs must carry event-time
+    * columns named `ts` (view side) / `p_ts` (purchase side).
+    */
   def attributionJoin(views: DataFrame, purchases: DataFrame,
                       horizon: String): DataFrame = {
     val v = views

@@ -74,7 +74,7 @@ class DedupDifferentialSpec extends SparkSpec {
       jac = inter.toDouble / (si.size + sj.size - inter)
       if jac >= threshold
     } yield (i, j, jac)).toSet
-    // engine: same shape as Dedup.jaccardPairs, over a test frame
+    // engine: the shingle-blocked self-join shape, over a test frame
     val sh = docs.toDF("doc_id", "text")
       .select($"doc_id", HashedShinglesExpr.hashedShingles($"text", 3).as("arr"))
       .select($"doc_id", size($"arr").cast("long").as("n_sh"),
@@ -93,35 +93,6 @@ class DedupDifferentialSpec extends SparkSpec {
     assert(got == expected,
       s"missing=${expected -- got}\nspurious=${got -- expected}")
     assert(expected.nonEmpty, "degenerate corpus: no qualifying pairs")
-  }
-
-  test("stop-shingle df cap kills boilerplate pairs, cap=∞ ≡ uncapped") {
-    import spark.implicits._
-    // 6 docs: 5 unique words each + the SAME 7-word boilerplate tail.
-    // Shingles per doc: 3 content (unique) + 2 content|boilerplate
-    // bridge (unique) + 5 boilerplate (df = 6). Any two distinct docs
-    // share exactly the 5 boilerplate shingles → jaccard 5/15 ≈ 0.33:
-    // every pair qualifies at 0.3 spuriously. Docs 4 and 5 are true
-    // exact dups (jaccard 1.0).
-    val boiler = "subscribe to our newsletter for daily updates"
-    val uniq = Seq("aa bb cc dd ee", "ff gg hh ii jj", "kk ll mm nn oo",
-      "pp qq rr ss tt", "uu vv ww xx yy", "uu vv ww xx yy")
-    val docs = uniq.zipWithIndex.map { case (u, i) =>
-      (i.toLong, s"$u $boiler", "en", "src", 1L)
-    }
-    val dir = java.nio.file.Files.createTempDirectory("graft_stopsh").toString
-    docs.toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.parquet(s"$dir/documents.parquet")
-    def pairs(cap: Option[Long]): Set[(Long, Long)] =
-      graft.queries.Dedup.jaccardPairs(spark, dir, 0.3, cap)
-        .select($"doc_i", $"doc_j").as[(Long, Long)].collect().toSet
-    val uncapped = pairs(None)
-    assert(uncapped == (for (i <- 0L to 5L; j <- i + 1 to 5L) yield (i, j)).toSet,
-      "every doc pair must qualify via shared boilerplate")
-    // cap below the boilerplate df (6): only the true dup pair remains
-    assert(pairs(Some(5L)) == Set((4L, 5L)))
-    // a non-binding cap reproduces the uncapped result exactly
-    assert(pairs(Some(Long.MaxValue)) == uncapped)
   }
 
   test("simhash 8-bit banding finds every pair within Hamming 3 (pigeonhole)") {
@@ -352,50 +323,38 @@ class DedupDifferentialSpec extends SparkSpec {
     graft.queries.Dedup.evictCaches(spark, Some(dir))
   }
 
-  test("LSH hot-band cap: cap=∞ ≡ None; a planted hot band stops pairing; intra immune") {
+  /** Every doc pair of `dir`'s documents that shares a shingle, with
+    * its exact Jaccard, by brute force on the driver.
+    */
+  private def bruteForceJaccard(dir: String): Set[(Long, Long, Double)] = {
     import spark.implicits._
-    import graft.queries.Dedup.{BandSize, NumPerm}
-    val nBands = NumPerm / BandSize
-    // synthetic signatures, full control over band keys:
-    // - docs 1..20: DISTINCT sigs sharing band 0 (the planted boilerplate
-    //   band) and nothing else -> 190 candidate pairs, all via band 0
-    // - docs 100, 101: share band 1 only (a cold band, df 2)
-    // - docs 200, 201: IDENTICAL sig whose band 0 is the hot key -> the
-    //   collapse emits them as an intra pair, cap-immune
-    def sigOf(band0: Seq[Long], rest: Long): Seq[Long] =
-      band0 ++ (BandSize until NumPerm).map(j => rest * 1000 + j)
-    val hot = Seq.fill(BandSize)(1L)
-    val rows =
-      (1L to 20L).map(i => i -> sigOf(hot, i)) ++
-      Seq(100L -> (Seq.fill(BandSize)(7L) ++
-            (BandSize until NumPerm).map(j => 100L * 1000 + j)),
-          101L -> (Seq.fill(BandSize)(7L) ++
-            (BandSize until NumPerm).map(j => 101L * 1000 + j))) ++
-      Seq(200L -> sigOf(hot, 999L), 201L -> sigOf(hot, 999L))
-    // make 100/101 collide on band 1, not band 0: swap their layout
-    // (band 0 differs per doc, band 1 shared)
-    val rows2 = rows.map {
-      case (id, s) if id == 100L || id == 101L =>
-        id -> ((0 until BandSize).map(j => id * 1000 + j) ++
-          Seq.fill(BandSize)(7L) ++
-          (2 * BandSize until NumPerm).map(j => id * 1000 + j))
-      case kv => kv
-    }
-    assert(nBands >= 2, "fixture needs >= 2 bands")
-    val sigDf = rows2.toDF("doc_id", "sig")
-    def pairs(cap: Option[Long]): Set[(Long, Long)] =
-      graft.queries.Dedup.lshBandPairs(sigDf, cap)
-        .as[(Long, Long)].collect().toSet
-    val uncapped = pairs(None)
-    assert(pairs(Some(Long.MaxValue)) == uncapped, "cap=∞ must equal None")
-    assert(uncapped.contains((100L, 101L)) && uncapped.contains((200L, 201L)))
-    assert(uncapped.size >= 190 + 2, s"hot band must pair uncapped: $uncapped")
-    val capped = pairs(Some(10L))
-    // band 0 holds 21 distinct sigs (20 + the 200/201 group) > cap ->
-    // its cross-content pairs vanish; the cold band-1 pair and the
-    // identical-sig intra pair survive
-    assert(capped == Set((100L, 101L), (200L, 201L)),
-      s"capped candidate set wrong: $capped")
+    val sets = spark.read.parquet(s"$dir/documents.parquet")
+      .select($"doc_id", $"text").as[(Long, String)].collect()
+      .map { case (i, t) => i -> shingleSet(t) }.sortBy(_._1)
+    (for {
+      a <- sets.indices; b <- a + 1 until sets.length
+      (i, si) = sets(a); (j, sj) = sets(b)
+      inter = (si & sj).size if inter > 0
+    } yield (i, j, inter.toDouble / (si.size + sj.size - inter))).toSet
+  }
+
+  test("d11_lsh_verify: exactly d3's candidate pairs, each with its " +
+      "brute-force Jaccard") {
+    import spark.implicits._
+    val dir = "/root/testdata/sf0.001"
+    graft.queries.Dedup.evictCaches(spark, Some(dir))
+    val d11 = SparkEntry.queries("d11_lsh_verify")(spark, dir)
+      .select($"doc_i", $"doc_j", $"jaccard")
+      .as[(Long, Long, Double)].collect()
+    val d3 = SparkEntry.queries("d3_lsh_pairs")(spark, dir)
+      .select($"doc_i", $"doc_j").as[(Long, Long)].collect().toSet
+    assert(d11.map(r => (r._1, r._2)).toSet == d3 && d11.length == d3.size,
+      "d11 must verify each d3 candidate pair exactly once")
+    val exact = bruteForceJaccard(dir).map(r => (r._1, r._2) -> r._3).toMap
+    val wrong = d11.filter(r => exact.getOrElse((r._1, r._2), 0.0) != r._3)
+    assert(wrong.isEmpty, s"jaccard differs from brute force: ${wrong.take(10).toSeq}")
+    assert(d3.nonEmpty, "degenerate fixture: no candidates")
+    graft.queries.Dedup.evictCaches(spark, Some(dir))
   }
 
   test("shared pair frame: ONE pair-gen per (session, dir); thresholds are filters") {
@@ -408,15 +367,17 @@ class DedupDifferentialSpec extends SparkSpec {
       spark, dir, graft.queries.Dedup.BasePairThreshold)
     assert(base eq again, "base requests must return the SAME pinned frame")
     // a t >= base request is a filter of the pinned frame, and must be
-    // value-identical to a fresh pair-gen at t (threshold monotonicity)
+    // value-identical to an all-pairs Jaccard at t (threshold
+    // monotonicity), computed on the driver independently of the pins
     val filtered = graft.queries.Dedup.sharedJaccardPairs(spark, dir, 0.5)
       .select($"doc_i", $"doc_j", $"jaccard")
-      .as[(Long, Long, Double)].collect().toSet
-    val direct = graft.queries.Dedup.jaccardPairs(spark, dir, 0.5)
-      .select($"doc_i", $"doc_j", $"jaccard")
-      .as[(Long, Long, Double)].collect().toSet
-    assert(filtered == direct, "filtered shared frame != direct pair-gen")
-    assert(filtered.nonEmpty, "degenerate fixture: no pairs at 0.5")
+      .as[(Long, Long, Double)].collect()
+    val direct = bruteForceJaccard(dir).filter(_._3 >= 0.5)
+    assert(filtered.toSet == direct,
+      s"missing=${(direct -- filtered).take(10)}\n" +
+        s"spurious=${(filtered.toSet -- direct).take(10)}")
+    assert(filtered.length == direct.size, "duplicate pair rows")
+    assert(direct.nonEmpty, "degenerate fixture: no pairs at 0.5")
     // below-base requests would silently need a new pair-gen: refuse
     intercept[IllegalArgumentException] {
       graft.queries.Dedup.sharedJaccardPairs(spark, dir, 0.1)

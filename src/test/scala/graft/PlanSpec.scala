@@ -58,9 +58,9 @@ class PlanSpec extends SparkSpec {
     // ResolvedHints and the physical plan zero Window nodes. (Catalyst/
     // AQE may still pick a broadcast from ACTUAL runtime sizes at small
     // SF — that is the desired size-based behavior.)
-    // d2 is now served from the shared pinned pair frame (a checkpoint
-    // scan), so assert on the UNDERLYING pair-gen plan directly
-    val pairgen = graft.queries.Dedup.jaccardPairs(spark, dir, 0.3)
+    // d2 is served from the shared pinned pair frame, so assert on the
+    // plan that builds the rep_pair_stats pin every pair query reads
+    val pairgen = graft.queries.Dedup.sharedRepStats(spark, dir)
       .queryExecution
     assert(!pairgen.analyzed.toString.contains("ResolvedHint"),
       "pair-gen must not carry a join-strategy hint")
@@ -362,8 +362,8 @@ class PlanSpec extends SparkSpec {
     // higher-order functions (transform/array_join/slice/array_distinct).
     // execute so AQE finalizes and codegen spans materialize in the plan
     // (the d2 QUERY serves the pinned shared frame — a cached scan —
-    // so inspect the underlying pair-gen plan)
-    val d2df = graft.queries.Dedup.jaccardPairs(spark, dir, 0.3)
+    // so inspect the rep_pair_stats pin's build plan)
+    val d2df = graft.queries.Dedup.sharedRepStats(spark, dir)
     d2df.collect()
     val d2 = d2df.queryExecution.executedPlan.toString
     assert("""\*\(\d+\)[\s\S]*?hashed_shingles""".r.findFirstIn(d2).isDefined,
