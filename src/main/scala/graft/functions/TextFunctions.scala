@@ -44,7 +44,9 @@ object TextFunctions {
   def regexTokenCount(text: Column): Column =
     regexp_count(text, lit("[A-Za-z0-9]+|[^A-Za-z0-9\\s]"))
 
-  private val StopWords = Seq(
+  /** The English stopword list of every stopword signal (x3 quality,
+    * the Gopher rule gate). */
+  val StopWords: Seq[String] = Seq(
     "the", "a", "an", "and", "or", "of", "to", "in", "is", "it",
     "that", "for", "on", "as", "with", "at", "by", "from")
 

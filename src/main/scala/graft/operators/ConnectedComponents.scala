@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Distributed connected components — the transitive-closure step real
   * dedup needs (near-dup pairs form cliques/chains; one-pass keep rules
@@ -82,15 +83,7 @@ object ConnectedComponents {
       * this AFTER the superseding round's last read of `df`.
       */
     def release(df: DataFrame): Unit =
-      Option(pathOf.remove(df)).foreach { p =>
-        try {
-          val path = new org.apache.hadoop.fs.Path(p)
-          path.getFileSystem(spark.sessionState.newHadoopConf())
-            .delete(path, true)
-        } catch { case e: Throwable =>
-          log.warn(s"ConnectedComponents: could not delete round file $p: $e")
-        }
-      }
+      Option(pathOf.remove(df)).foreach(delete(_, "round file"))
 
     /** Remove the run's `graft-cc-<uuid>` base dir once NO round file is
       * pinned (round-21, r20 ADVICE): the driver-local finish releases
@@ -101,15 +94,7 @@ object ConnectedComponents {
       * distributed fixpoint's final round stays, and so does its dir).
       */
     def releaseBaseIfEmpty(): Unit =
-      if (pathOf.isEmpty) base.foreach { b =>
-        try {
-          val path = new org.apache.hadoop.fs.Path(b)
-          path.getFileSystem(spark.sessionState.newHadoopConf())
-            .delete(path, true)
-        } catch { case e: Throwable =>
-          log.warn(s"ConnectedComponents: could not delete run dir $b: $e")
-        }
-      }
+      if (pathOf.isEmpty) base.foreach(delete(_, "run dir"))
 
     /** Error-path cleanup (round-15 ADVICE): the maxIter throw would
       * otherwise orphan every still-pinned round file — nothing consumes
@@ -118,14 +103,20 @@ object ConnectedComponents {
       */
     def releaseAll(): Unit = base.foreach { b =>
       pathOf.clear()
+      delete(b, "run dir")
+    }
+
+    /** Recursive delete of `p`; a failure is logged with its cause, never
+      * thrown (cleanup must not fail the run it cleans up after).
+      */
+    private def delete(p: String, what: String): Unit =
       try {
-        val path = new org.apache.hadoop.fs.Path(b)
+        val path = new org.apache.hadoop.fs.Path(p)
         path.getFileSystem(spark.sessionState.newHadoopConf())
           .delete(path, true)
-      } catch { case e: Throwable =>
-        log.warn(s"ConnectedComponents: could not delete run dir $b: $e")
+      } catch { case NonFatal(e) =>
+        log.warn(s"ConnectedComponents: could not delete $what $p", e)
       }
-    }
   }
 
     /** Large-star: process every edge from its smaller endpoint u; connect

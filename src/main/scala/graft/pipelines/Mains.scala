@@ -453,9 +453,9 @@ object CuratePipelineMain {
     // the dedup keeper joins back the per-digest min doc_id (computed
     // over quality survivors, matching the staged pipeline exactly);
     // near-dup losers come from the shared d6 pair frame
-    val withDigest = docs
-      .withColumn("q_ok",
-        TextAnalytics.qualityCol($"text") >= o("minQuality").toDouble)
+    val withDigest = TextAnalytics.withToks(docs)
+      .withColumn("q_ok", TextAnalytics.qualityCol($"toks", $"text") >=
+        o("minQuality").toDouble)
       .withColumn("digest",
         md5(array_join(graft.functions.TextFunctions.tokenize($"text"), " ")
           .cast("binary")))

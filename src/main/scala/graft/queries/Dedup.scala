@@ -392,8 +392,9 @@ object Dedup extends QueryModule {
     */
   private def electKeepers(s: SparkSession, dir: String, members: DataFrame,
       sizeAgg: Column): DataFrame = {
-    val quality = Tables.documents(s, dir).select(col("doc_id"),
-      TextAnalytics.qualityCol(col("text")).as("quality"))
+    val quality = TextAnalytics.withToks(Tables.documents(s, dir))
+      .select(col("doc_id"),
+        TextAnalytics.qualityCol(col("toks"), col("text")).as("quality"))
     val elected = members.join(quality, members("id") === quality("doc_id"))
       .groupBy(col("component"))
       .agg(sizeAgg, max(struct(col("quality"),
@@ -1347,10 +1348,14 @@ object Dedup extends QueryModule {
       // of doc_id, so each group's sorted ids partition rowwise into
       // ref/fresh member arrays via a filter HOF (sort order survives a
       // filter, so ids[0] stays each side's min = its rep).
+      // explode(array(...)) is a Generate barrier (x8's pattern): the
+      // size filters below cannot inline each split back into themselves
       val g = sharedContentGroups(s, dir)
-        .select($"arr",
+        .select($"arr", explode(array(struct(
           filter($"ids", i => HashFunctions.hashSample(i, 0.5)).as("rids"),
-          filter($"ids", i => !HashFunctions.hashSample(i, 0.5)).as("fids"))
+          filter($"ids", i => !HashFunctions.hashSample(i, 0.5)).as("fids"))))
+          .as("g"))
+        .select($"arr", $"g.rids".as("rids"), $"g.fids".as("fids"))
       val freshG = g.filter(size($"fids") > 0)
         .select($"arr", $"fids".as("ids"))
       val refG = g.filter(size($"rids") > 0)
@@ -1688,11 +1693,11 @@ object Dedup extends QueryModule {
           .cast("long").as("checksum"))
   }
 
-  /** d23's >64-source fallback: the collect_set form of the same
-    * fused pairs+markers shape (see the d23 query scaladoc) — one
-    * corpus chain behind a pinned ≤S²+S-row pair frame, with the
-    * per-shingle set built by ObjectHashAggregate instead of the
-    * codegen bit_or path.
+  /** d23's one plan (see the d23 query scaladoc): each shingle's sorted
+    * source set (collect_set after a (shingle, source) pre-dedup), one
+    * explode of its source pairs plus per-source size markers into a
+    * ≤S²+S-row aggregate, collected, and the Jaccard finish on the
+    * driver — one corpus chain, no pin.
     */
   private[graft] def sourceOverlapBySet(docs: DataFrame): DataFrame = {
     val sess = docs.sparkSession

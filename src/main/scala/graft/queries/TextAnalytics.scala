@@ -19,9 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object TextAnalytics extends QueryModule {
 
-  /** Per-language stopword profiles for the n-gram/token language-ID
-    * heuristic (tiny, broadcast as literals into codegen).
-    */
   /** x20's designated target domain (the DSIR "high-quality" side). */
   private val DsirTarget = "src0"
 
@@ -29,22 +26,40 @@ object TextAnalytics extends QueryModule {
   private val charProfiles: Seq[(String, Seq[String])] =
     CharTrigramScoresExpr.Profiles
 
+  /** Per-language stopword profiles for the n-gram/token language-ID
+    * heuristic (tiny, broadcast as literals into codegen).
+    */
   private val langProfiles: Seq[(String, Seq[String])] = Seq(
     "en" -> Seq("the", "a", "and", "of", "to", "in", "is", "it"),
     "de" -> Seq("der", "die", "das", "und", "ist", "nicht", "mit", "ein"),
     "fr" -> Seq("le", "la", "les", "et", "est", "un", "une", "des"),
     "es" -> Seq("el", "los", "las", "y", "es", "este", "una", "de"))
 
-  /** x3's composite [0,1] quality score of a text column — the ONE
-    * definition, shared by x3, d8, and Dedup's quality-keeper
-    * materialization (d10).
+  /** `docs` plus `toks`, the doc's whitespace tokens, split ONCE per row:
+    * every per-doc text signal (token counts, [[qualityCol]],
+    * [[withLangHits]], [[gopherDocFrame]]'s rules) reads this attribute.
+    * explode(array(...)) is a Generate barrier (x8's pattern): a lower
+    * Project alone stops CollapseProject, but a filter on a signal would
+    * still be pushed below it with the split inlined once per use.
     */
-  private[graft] def qualityCol(text: Column): Column = {
-    val toks = TextFunctions.wsTokens(text)
-    TextFunctions.stopwordRatio(toks) * lit(0.4) +
-      least(size(toks).cast("double") / lit(80.0), lit(1.0)) * lit(0.3) +
-      (lit(1.0) - TextFunctions.punctRatio(text)) * lit(0.3)
-  }
+  private[graft] def withToks(docs: DataFrame): DataFrame =
+    docs.select(col("*"),
+      explode(array(TextFunctions.wsTokens(col("text")))).as("toks"))
+
+  /** x3's composite [0,1] quality score — the ONE definition, a pure
+    * function of three per-doc signals (x3, d8, x15, x25, x30, Dedup's
+    * keeper election, the curation main).
+    */
+  private[graft] def qualityOf(stopRatio: Column, nToks: Column,
+      punctRatio: Column): Column =
+    stopRatio * lit(0.4) +
+      least(nToks.cast("double") / lit(80.0), lit(1.0)) * lit(0.3) +
+      (lit(1.0) - punctRatio) * lit(0.3)
+
+  /** [[qualityOf]] over the signals of a [[withToks]] row. */
+  private[graft] def qualityCol(toks: Column, text: Column): Column =
+    qualityOf(TextFunctions.stopwordRatio(toks), size(toks),
+      TextFunctions.punctRatio(text))
 
   /** Per-doc Gopher-gate frame shared by x26 and x30: ONE fused
     * repetition-stats scan (the x8 Generate-barrier pattern) producing
@@ -56,25 +71,19 @@ object TextAnalytics extends QueryModule {
   private[graft] def gopherDocFrame(docs: DataFrame): DataFrame = {
     val sess = docs.sparkSession
     import sess.implicits._
-    val stops = Seq("the", "a", "an", "and", "or", "of", "to", "in",
-      "is", "it", "that", "for", "on", "as", "with", "at", "by", "from")
-    val toks = TextFunctions.wsTokens($"text")
-    docs
-      .select($"doc_id", $"source", $"lang", $"text",
+    withToks(docs)
+      .select($"doc_id", $"source", $"lang", $"text", $"toks",
         explode(array(RepetitionStatsExpr.repetitionStats($"text")))
           .as("r")) // Generate barrier: ONE stats scan (x8 pattern)
       .select($"doc_id", $"source", $"lang",
-        qualityCol($"text").as("quality"),
+        qualityCol($"toks", $"text").as("quality"),
         $"r.n_tokens".cast("long").as("n"),
         $"r.n_distinct".cast("long").as("nd"),
-        aggregate(toks, lit(0L), (a, w) => a + length(w)).as("sumlen"),
-        size(filter(toks, w => w.rlike("[A-Za-z]"))).cast("long")
+        aggregate($"toks", lit(0L), (a, w) => a + length(w)).as("sumlen"),
+        size(filter($"toks", w => w.rlike("[A-Za-z]"))).cast("long")
           .as("alpha_n"),
-        // array_intersect, NOT filter(stops, st => contains(toks, st)):
-        // a lambda capturing `toks` re-evaluates the tokenize per stop
-        // word (18 splits/row — the x31 O(len²) bug class); intersect
-        // evaluates both inputs once, same distinct-stopword count
-        size(array_intersect(array(stops.map(lit): _*), toks))
+        // the distinct-stopword count: array_intersect runs no lambda
+        size(array_intersect(TextFunctions.stopWordsArray, $"toks"))
           .cast("long").as("stop_n"),
         length($"text").cast("long").as("n_chars"),
         (length($"text") -
@@ -118,10 +127,10 @@ object TextAnalytics extends QueryModule {
     * pipeline's export path).
     */
   private[graft] def curriculumFrameOf(docs: DataFrame): DataFrame = {
-    val scored = docs
+    val scored = withToks(docs)
       .select(col("doc_id"), col("lang"), col("source"), col("text"),
-        size(TextFunctions.wsTokens(col("text"))).cast("long").as("n_toks"),
-        qualityCol(col("text")).as("quality"))
+        size(col("toks")).cast("long").as("n_toks"),
+        qualityCol(col("toks"), col("text")).as("quality"))
     val bounds = scored.agg(percentile(col("quality"),
       array((1 to 7).map(i => lit(i / 8.0)): _*)).as("bs"))
     scored.crossJoin(broadcast(bounds)) // 1-row boundary frame
@@ -418,27 +427,32 @@ object TextAnalytics extends QueryModule {
         round(max(col("quality")), 6).as("q_max"),
         sum(HashFunctions.knuthHash(col("doc_id"))).as("id_checksum"))
 
-  /** Per-language stopword-profile hit counts over whitespace tokens
-    * (profile order).
+  /** A [[withToks]] frame plus `h`, the struct of per-language
+    * stopword-profile hit counts of its `toks` (profile order), in its
+    * own Project: CollapseProject does not inline a non-cheap value its
+    * consumer reads more than once, so each profile filter runs once per
+    * row, not once per read in [[predLang]]'s CASE.
     */
-  private def langHits(toks: Column): Seq[Column] =
-    langProfiles.map { case (_, words) =>
-      size(filter(toks, w => array_contains(array(words.map(lit): _*), w)))
-    }
+  private def withLangHits(frame: DataFrame): DataFrame =
+    frame.select(col("*"), struct(langProfiles.map { case (lang, words) =>
+      size(filter(col("toks"),
+        w => array_contains(array(words.map(lit): _*), w))).as(lang)
+    }: _*).as("h"))
+
+  /** [[withLangHits]]' hit counts, profile order. */
+  private val langHitCols: Seq[Column] =
+    langProfiles.map { case (lang, _) => col(s"h.$lang") }
 
   /** Profile-hit argmax with deterministic profile-order tiebreak — the
     * ONE language prediction rule, shared by x2 and d8.
     */
-  private def predLangOf(hits: Seq[Column]): Column = {
-    val Seq(en, de, fr, es) = hits
+  private def predLang: Column = {
+    val Seq(en, de, fr, es) = langHitCols
     when(en >= de && en >= fr && en >= es, "en")
       .when(de >= fr && de >= es, "de")
       .when(fr >= es, "fr")
       .otherwise("es")
   }
-
-  private def predLangCol(text: Column): Column =
-    predLangOf(langHits(TextFunctions.wsTokens(text)))
 
   /** x11's shard count — the packing op's parallelism. Derived once per
     * JVM from the session's parallelism (d5's derived-constant pattern)
@@ -467,10 +481,9 @@ object TextAnalytics extends QueryModule {
     // first()/any_value() in the keep rule.
     "d8_corpus_curation" -> { (s, dir) =>
       import s.implicits._
-      Tables.documents(s, dir)
-        .select($"doc_id", $"lang", $"text",
-          predLangCol($"text").as("pred_lang"),
-          qualityCol($"text").as("quality"))
+      withLangHits(withToks(Tables.documents(s, dir)))
+        .select($"doc_id", $"lang", $"text", predLang.as("pred_lang"),
+          qualityCol($"toks", $"text").as("quality"))
         .filter($"quality" >= 0.3)
         .groupBy(md5($"text".cast("binary")).as("digest"))
         .agg(min($"doc_id").as("keeper"), min($"lang").as("lang"),
@@ -658,8 +671,11 @@ object TextAnalytics extends QueryModule {
     // 6 dp for cross-engine libm parity (j3 precedent).
     "x7_pmi_bigrams" -> { (s, dir) =>
       import s.implicits._
+      // explode(array(...)) is a Generate barrier (x8's pattern): the
+      // non-empty filter each explode below infers cannot inline the split
       val toks = Tables.documents(s, dir)
-        .select($"doc_id", TextFunctions.tokenize($"text").as("ts"))
+        .select($"doc_id", explode(array(TextFunctions.tokenize($"text")))
+          .as("ts"))
       val bigrams = toks
         .select(explode(when(size($"ts") >= 2,
           transform(sequence(lit(1), size($"ts") - 1),
@@ -725,33 +741,23 @@ object TextAnalytics extends QueryModule {
     // token length — the cheap tokenizer-cost proxies for corpus filtering.
     "x1_token_stats" -> { (s, dir) =>
       import s.implicits._
-      val toks = TextFunctions.wsTokens($"text")
-      Tables.documents(s, dir)
+      withToks(Tables.documents(s, dir))
         .select($"doc_id",
-          size(toks).cast("bigint").as("n_tokens"),
+          size($"toks").cast("bigint").as("n_tokens"),
           TextFunctions.regexTokenCount($"text").cast("bigint").as("n_regex_tokens"),
-          (aggregate(toks, lit(0L), (acc, w) => acc + length(w)).cast("double")
-            / size(toks)).as("mean_token_len"))
+          (aggregate($"toks", lit(0L), (acc, w) => acc + length(w)).cast("double")
+            / size($"toks")).as("mean_token_len"))
     },
 
     // Language-ID: stopword-profile hit counts per language, argmax with
     // deterministic tiebreak (profile order).
     "x2_langid" -> { (s, dir) =>
       import s.implicits._
-      // the tokens, then the four hit counts as one struct, each in its
-      // own lower Project: CollapseProject does not inline a non-cheap
-      // value its consumer reads more than once, so the token split and
-      // each profile filter run once per row (x5's pattern)
-      val scored = Tables.documents(s, dir)
-        .select($"doc_id", TextFunctions.wsTokens($"text").as("toks"))
-        .select($"doc_id", struct(langProfiles.zip(langHits($"toks"))
-          .map { case ((lang, _), h) => h.as(lang) }: _*).as("h"))
-      val hits = langProfiles.map { case (lang, _) => $"h.$lang" }
-      val Seq(en, de, fr, es) = hits
-      scored
+      val Seq(en, de, fr, es) = langHitCols
+      withLangHits(withToks(Tables.documents(s, dir)))
         .select($"doc_id", en.cast("bigint").as("en_hits"), de.cast("bigint").as("de_hits"),
           fr.cast("bigint").as("fr_hits"), es.cast("bigint").as("es_hits"),
-          predLangOf(hits).as("pred_lang"))
+          predLang.as("pred_lang"))
     },
 
     // Language-ID, character-n-gram variant: score = how many of the
@@ -779,15 +785,13 @@ object TextAnalytics extends QueryModule {
     // [0,1] score + keep flag — the standard pretraining-corpus filter.
     "x3_quality" -> { (s, dir) =>
       import s.implicits._
-      val toks = TextFunctions.wsTokens($"text")
-      val stop = TextFunctions.stopwordRatio(toks)
-      val punct = TextFunctions.punctRatio($"text")
-      val score = qualityCol($"text")
-      Tables.documents(s, dir)
-        .select($"doc_id", size(toks).cast("bigint").as("n_tokens"),
-          stop.as("stop_ratio"), punct.as("punct_ratio"),
-          score.as("quality"),
-          (score >= 0.3).as("keep"))
+      withToks(Tables.documents(s, dir))
+        .select($"doc_id", size($"toks").cast("bigint").as("n_tokens"),
+          TextFunctions.stopwordRatio($"toks").as("stop_ratio"),
+          TextFunctions.punctRatio($"text").as("punct_ratio"))
+        .withColumn("quality",
+          qualityOf($"stop_ratio", $"n_tokens", $"punct_ratio"))
+        .withColumn("keep", $"quality" >= 0.3)
     },
 
     // Gopher-style repetition quality signals: duplicate-token fraction
@@ -1147,17 +1151,16 @@ object TextAnalytics extends QueryModule {
     // is not needed because no libm call is involved).
     "x27_quality_classifier" -> { (s, dir) =>
       import s.implicits._
-      val toks = TextFunctions.wsTokens($"text")
-      val scoreSum = aggregate(toks, lit(0.0),
+      val scoreSum = aggregate($"toks", lit(0.0),
         (acc, w) => acc +
           (HashFunctions.knuthHash(
               pmod(HashFunctions.javaStringHashCode(w).cast("long"),
                 lit(256L))).cast("double") / lit(4294967296.0) - lit(0.5)))
-      Tables.documents(s, dir)
-        .filter(size(toks) > 0)
-        .select($"doc_id",
-          round(scoreSum / size(toks), 6).as("score"),
-          when(scoreSum > 0, 1L).otherwise(0L).as("kept"))
+      withToks(Tables.documents(s, dir))
+        .filter(size($"toks") > 0)
+        .select($"doc_id", scoreSum.as("ssum"), size($"toks").as("n"))
+        .select($"doc_id", round($"ssum" / $"n", 6).as("score"),
+          when($"ssum" > 0, 1L).otherwise(0L).as("kept"))
     },
 
     // X26: GOPHER-STYLE RULE GATE — the published rule-set filter class
@@ -1225,8 +1228,8 @@ object TextAnalytics extends QueryModule {
     // the oracle needs the exact form.
     "x15_quality_deciles" -> { (s, dir) =>
       import s.implicits._
-      val scored = Tables.documents(s, dir)
-        .select($"doc_id", qualityCol($"text").as("quality"))
+      val scored = withToks(Tables.documents(s, dir))
+        .select($"doc_id", qualityCol($"toks", $"text").as("quality"))
       val bounds = scored.agg(percentile($"quality",
         array((1 to 9).map(i => lit(i / 10.0)): _*)).as("bs"))
       scored.crossJoin(broadcast(bounds)) // 1-row boundary frame
@@ -1904,16 +1907,16 @@ object TextAnalytics extends QueryModule {
   private def tok(e: String) = OracleFragments.tokenize(e)
   private def ws(e: String) = OracleFragments.wsTokens(e)
 
-  /** (doc_id, n_tokens, stop_ratio, punct_ratio) — the x3 feature body. */
+  /** `TextFunctions.StopWords` as a DuckDB list literal. */
+  private def stopListSql(sep: String): String =
+    TextFunctions.StopWords.map(w => s"'$w'").mkString("[", sep, "]")
+
   /** Gopher rule-flag CTE chain (t → g → f) shared by the x26 and x30
     * oracles — the SQL twin of [[gopherDocFrame]], one definition.
     * `carry` = identity columns threaded through to `f` alongside the
     * token count `n` and the six rule booleans.
     */
   private def gopherFlagSqlCte(carry: String): String = {
-    val stopList = Seq("the", "a", "an", "and", "or", "of", "to", "in",
-      "is", "it", "that", "for", "on", "as", "with", "at", "by", "from")
-      .map(w => s"'$w'").mkString("[", ",", "]")
     s"""t AS (
        |  SELECT $carry, text, ${ws("text")} AS toks FROM documents),
        |g AS (
@@ -1925,7 +1928,7 @@ object TextAnalytics extends QueryModule {
        |      AS sumlen,
        |    len(list_filter(toks, w -> regexp_matches(w, '[A-Za-z]')))::BIGINT
        |      AS alpha_n,
-       |    len(list_filter($stopList, s -> list_contains(toks, s)))::BIGINT
+       |    len(list_filter(${stopListSql(",")}, s -> list_contains(toks, s)))::BIGINT
        |      AS stop_n,
        |    len(text)::BIGINT AS n_chars,
        |    (len(text) - len(regexp_replace(text, '[#…]', '', 'g')))::BIGINT
@@ -1942,13 +1945,11 @@ object TextAnalytics extends QueryModule {
        |  FROM g)""".stripMargin
   }
 
+  /** (doc_id, n_tokens, stop_ratio, punct_ratio) — the x3 feature body. */
   private def qualityGSql: String = {
-    val stopList = Seq("the", "a", "an", "and", "or", "of", "to", "in",
-      "is", "it", "that", "for", "on", "as", "with", "at", "by", "from")
-      .map(w => s"'$w'").mkString("[", ", ", "]")
     s"""SELECT doc_id, len(toks) AS n_tokens,
        |    CASE WHEN len(toks) > 0 THEN
-       |      len(list_filter(toks, w -> list_contains($stopList, w)))::DOUBLE
+       |      len(list_filter(toks, w -> list_contains(${stopListSql(", ")}, w)))::DOUBLE
        |        / len(toks)::DOUBLE ELSE 0.0 END AS stop_ratio,
        |    CASE WHEN len(text) > 0 THEN
        |      (len(text) - len(regexp_replace(text,
@@ -2009,16 +2010,13 @@ object TextAnalytics extends QueryModule {
         val lst = words.map(w => s"'$w'").mkString("[", ", ", "]")
         s"len(list_filter(toks, w -> list_contains($lst, w))) AS ${lang}_hits"
       }.mkString(",\n    ")
-      val stopList = Seq("the", "a", "an", "and", "or", "of", "to", "in",
-        "is", "it", "that", "for", "on", "as", "with", "at", "by", "from")
-        .map(w => s"'$w'").mkString("[", ", ", "]")
       s"""WITH f AS (
          |  SELECT doc_id, lang, text, ${ws("text")} AS toks FROM documents),
          |g AS (
          |  SELECT doc_id, lang, text, len(toks) AS n_tokens,
          |    $hits,
          |    CASE WHEN len(toks) > 0 THEN
-         |      len(list_filter(toks, w -> list_contains($stopList, w)))::DOUBLE
+         |      len(list_filter(toks, w -> list_contains(${stopListSql(", ")}, w)))::DOUBLE
          |        / len(toks)::DOUBLE ELSE 0.0 END AS stop_ratio,
          |    CASE WHEN len(text) > 0 THEN
          |      (len(text) - len(regexp_replace(text, '[^A-Za-z0-9\\s]', '', 'g')))::DOUBLE

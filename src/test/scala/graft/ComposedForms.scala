@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.TextFunctions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -24,6 +25,17 @@ object ComposedForms {
       .agg(perms.head, perms.tail: _*)
       .select(col("doc_id"),
         array((0 until NumPerm).map(j => col(s"m$j")): _*).as("sig"))
+  }
+
+  /** x3's quality score as one column over the raw text, the form that
+    * re-split the text once per use (four splits per row) before the
+    * signals read one token array (`TextAnalytics.withToks`).
+    */
+  def qualityCol(text: Column): Column = {
+    val toks = TextFunctions.wsTokens(text)
+    TextFunctions.stopwordRatio(toks) * lit(0.4) +
+      least(size(toks).cast("double") / lit(80.0), lit(1.0)) * lit(0.3) +
+      (lit(1.0) - TextFunctions.punctRatio(text)) * lit(0.3)
   }
 
   /** x5's per-language trigram scores as the interpreted lambdas that

@@ -465,6 +465,29 @@ class FunctionsSpec extends SparkSpec {
     assert(r.getDouble(1) == 0.3) // 3 of 10 chars
   }
 
+  test("quality over one token array == the composed qualityCol(text), " +
+      "row for row on edge-case texts and the corpus (both eval paths)") {
+    import spark.implicits._
+    import graft.queries.TextAnalytics
+    // empty, whitespace-only, punctuation-only, NUL-bearing, multi-space
+    val edge = Seq[String]("", " ", " \t\n\r ", "!!!", "?!.,;#", "\u0000",
+      "the\u0000cat is", "the  cat   sat\t\ton", "  a  b  ", null)
+      .toDF("text")
+    val texts = edge
+      .union(graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
+        .select($"text"))
+      .repartition(4)
+    bothEvalPaths {
+      val rows = TextAnalytics.withToks(texts)
+        .select($"text", TextAnalytics.qualityCol($"toks", $"text").as("q"),
+          ComposedForms.qualityCol($"text").as("c"))
+        .collect()
+      assert(rows.length == texts.count(), "one token array per document")
+      val diff = rows.filterNot(r => r.get(1) == r.get(2))
+      assert(diff.isEmpty, diff.take(5).mkString("\n"))
+    }
+  }
+
   test("char_trigram_scores: edge cases keep the composed x5 form's values") {
     import spark.implicits._
     import graft.functions.CharTrigramScoresExpr

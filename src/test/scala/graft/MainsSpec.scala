@@ -328,7 +328,7 @@ class MainsSpec extends SparkSpec {
     // near-dup stage applies exactly the d6 keep rule on the survivors
     val sf = "/root/testdata/sf0.001"
     val qualityIds = graft.core.Tables.documents(spark, sf)
-      .filter(graft.queries.TextAnalytics.qualityCol($"text") >= 0.35)
+      .filter(ComposedForms.qualityCol($"text") >= 0.35)
     val uniqueIds = graft.queries.Dedup.normalizedKeepers(qualityIds)
       .select($"doc_id").as[Long].collect().toSet
     val losers = graft.queries.Dedup.sharedJaccardPairs(spark, sf, 0.5)
@@ -358,7 +358,7 @@ class MainsSpec extends SparkSpec {
     // exported texts must be byte-identical to the replayed transform
     val sf = "/root/testdata/sf0.001"
     val qualityIds = graft.core.Tables.documents(spark, sf)
-      .filter(graft.queries.TextAnalytics.qualityCol($"text") >= 0.35)
+      .filter(ComposedForms.qualityCol($"text") >= 0.35)
     val uniqueIds = graft.queries.Dedup.normalizedKeepers(qualityIds)
       .select($"doc_id").as[Long].collect().toSet
     val losers = graft.queries.Dedup.sharedJaccardPairs(spark, sf, 0.5)

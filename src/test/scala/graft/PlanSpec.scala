@@ -701,21 +701,13 @@ class PlanSpec extends SparkSpec {
   }
 
   test("HOF lint: no plan node repeats a semantically equal higher-order " +
-      "subtree (shrink-only allowlist)") {
+      "subtree") {
     // A higher-order function (transform/filter/aggregate/…) runs its
     // lambda interpreted, once per element per row; a node holding two
     // semantically equal copies pays that twice — x5 rebuilt its trigram
-    // array nine times per row. Fix an offender with a fused codegen'd
-    // Expression or by computing the value once below a lower Project or
-    // Generate, then delete it here: an allowlisted query that no longer
-    // repeats fails the sweep, so the list only shrinks.
+    // array nine times per row. Compute the value once with a fused
+    // codegen'd Expression or below a lower Project or Generate.
     import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
-    val allowed = Set("d8_corpus_curation", "d10_best_keeper",
-      "d18_incremental_dedup", "d27_lsh_keeper", "d35_dedup_audit",
-      "x1_token_stats", "x3_quality", "x7_pmi_bigrams",
-      "x15_quality_deciles", "x25_shard_manifest", "x26_gopher_rules",
-      "x27_quality_classifier", "x30_dataset_card")
-    assert(!allowed.contains("x5_langid_ngram"))
     // canonicalized also renumbers lambda variables, so two copies built
     // by separate lambdas compare equal
     val repeating = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
@@ -732,12 +724,8 @@ class PlanSpec extends SparkSpec {
           Some(s"$name fails analysis: ${e.getMessage.linesIterator.next()}")
       }
     }
-    val fresh = repeating.filterNot(allowed)
-    assert(fresh.isEmpty, "nodes repeat a higher-order subtree:\n" +
-      fresh.mkString("\n"))
-    val cured = allowed -- repeating
-    assert(cured.isEmpty,
-      s"no longer repeating — remove from the allowlist: $cured")
+    assert(repeating.isEmpty, "nodes repeat a higher-order subtree:\n" +
+      repeating.mkString("\n"))
   }
 
   test("x5_langid_ngram: ONE fused trigram pass per row, no lambdas") {
